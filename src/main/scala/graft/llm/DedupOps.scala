@@ -253,30 +253,11 @@ object DedupOps extends graft.QueryModule {
     val postings = docs
       .select($"doc_id", $"lang", $"lb", explode($"sh").as("s"))
       .select($"doc_id", $"lang", $"lb", xxhash64($"s").as("shingle"))
-    // df-prune: partial-agg'd groupBy count + a SHUFFLE-HASH join-back
-    // with the one-row-per-distinct-shingle count side as the build side.
-    // This keeps BOTH scale properties at once: the count is map-side
-    // combined (a boilerplate shingle in 10M docs contributes one partial
-    // row per mapper, never 10M rows on one task — the skew blind spot a
-    // window count would reintroduce), and nothing is broadcast (the
-    // sub-cutoff set is nearly ALL distinct shingles at corpus scale; the
-    // earlier broadcast-join shape shipped it to every executor). The
-    // postings side STREAMS through the join probe, so hot shingles never
-    // buffer, and both sides already share (lang, lb, shingle)
-    // partitioning with the candidate self-join below.
-    val rare = postings.groupBy($"lang", $"lb", $"shingle")
-      .agg(count(lit(1)).as("df")).filter($"df" <= maxDf)
-      .select($"lang", $"lb", $"shingle")
-    val rp = postings.join(rare.hint("shuffle_hash"),
-      Seq("lang", "lb", "shingle"))
-    // per-bucket map-side pair emission off the join output (still keyed
-    // by (lang, lb, shingle) — the collect aggregate adds no exchange);
-    // bucket member lists are bounded by maxDf. Replaces the posting
-    // self-join, whose both legs re-shuffled rp.
-    val cand = rp.groupBy($"lang", $"lb", $"shingle")
-      .agg(collect_list($"doc_id").as("ids"))
-      .select(explode(bucketIdPairsUdf($"ids")).as("p"))
-      .select($"p._1".as("a_id"), $"p._2".as("b_id")).distinct()
+    // df-prune: a bucket is one (lang, lb, shingle) posting list of at
+    // most maxDf docs
+    val cand = BucketPairs.underCap(
+        postings, Seq("lang", "lb", "shingle"), $"doc_id", maxDf)
+      .select($"a".as("a_id"), $"b".as("b_id")).distinct()
     // exact verify: the PAIR side is the build side (shuffle-hash) —
     // without the hint Spark broadcasts the whole shingled corpus (full
     // arrays) twice, a ~2 s build at sf0.1 and an OOM at corpus scale
@@ -309,40 +290,6 @@ object DedupOps extends graft.QueryModule {
   // candidates and a 32 s verify stage at sf0.1).
   private val K = 63
   private val BANDS = 21
-
-  /** Bucket-collect routing cap (r18): a candidate bucket with more
-    * members than this must use the codegen'd self-join, never
-    * collect_list + [[bucketIdPairsUdf]] — the collect buffers the full
-    * member list in ONE non-spillable aggregation buffer and the UDF
-    * materializes the full C(m,2) pair array on ONE task's heap (the
-    * measured simhash failure mode, 1.5→18-21 s at sf0.1). 128 members
-    * ⇒ ≤ 8 128 pairs ≈ 130 KB per emitted array — far under task
-    * memory, and small enough that the interpreted UDF stays cheaper
-    * than the join's shuffle. */
-  private val BucketCollectCap = 128
-
-  /** All (a < b) doc-id pairs of one posting bucket's member list,
-    * emitted MAP-side from the bucket aggregate — replaces the posting
-    * self-join in the candidate generators for BOUNDED buckets only.
-    * CONTRACT: every call site must bound the bucket's membership
-    * (df-prune ≤ maxDf, or the [[BucketCollectCap]] routing split) —
-    * the returned pair array is materialized whole on the task heap,
-    * so an uncapped hot bucket is a single-task O(m²) allocation (and
-    * sizeHint overflows Int at m ≥ 65 536). Uncapped candidate streams
-    * keep the self-join (see the simhash/minhash rule below). */
-  private val bucketIdPairsUdf = udf((ids: Seq[Long]) => {
-    val s = ids.sorted
-    val n = s.length
-    val out = Array.newBuilder[(Long, Long)]
-    out.sizeHint(n * (n - 1) / 2)
-    var i = 0
-    while (i < n) {
-      var j = i + 1
-      while (j < n) { out += ((s(i), s(j))); j += 1 }
-      i += 1
-    }
-    out.result()
-  })
 
   @inline private def mix64(x0: Long): Long = {
     var x = x0
@@ -519,7 +466,7 @@ object DedupOps extends graft.QueryModule {
     // the other direction: its r17 bucket-collect variant REGRESSED
     // (1.27 → 1.68-1.76 s, Exchange 20→22) and was reverted to this
     // same self-join shape. prefixFilterJaccard splits on df at
-    // BucketCollectCap and routes flooded buckets to the join.
+    // BucketPairs.MaxMembers and routes flooded buckets to the join.
     val l = banded.select($"band", $"bandkey", $"doc_id".as("a_id"), $"sim".as("a_sim"))
     val r = banded.select($"band", $"bandkey", $"doc_id".as("b_id"), $"sim".as("b_sim"))
     l.join(r, Seq("band", "bandkey"))
@@ -1017,23 +964,11 @@ object DedupOps extends graft.QueryModule {
     // documented at ngramJaccardWithCutoff).
     val post = docs.select($"doc_id", explode($"sh").as("s"))
       .select($"doc_id", xxhash64($"s").as("shingle"))
-    // df-prune BEFORE the self-join: map-side-combined count, sub-cutoff
-    // set joined back shuffle-hash (build side = one row per distinct
-    // shingle; nothing broadcast, postings stream through the probe).
-    // This is what bounds the Σdf² candidate fan-out on a hot shingle
-    // (a boilerplate header at corpus df 10⁶ would otherwise emit
-    // ~5·10¹¹ pairs from this one key).
-    val rare = post.groupBy($"shingle")
-      .agg(count(lit(1)).as("df")).filter($"df" <= maxDf)
-      .select($"shingle")
-    val rp = post.join(rare.hint("shuffle_hash"), Seq("shingle"))
-    // per-bucket map-side pair emission (the ngramJaccardWithCutoff
-    // candidate shape): member lists bounded by maxDf, shared-shingle
-    // count = the pair's bucket multiplicity
-    val cand = rp.groupBy($"shingle")
-      .agg(collect_list($"doc_id").as("ids"))
-      .select(explode(bucketIdPairsUdf($"ids")).as("p"))
-      .groupBy($"p._1".as("a_id"), $"p._2".as("b_id"))
+    // df-prune bounds the Σdf² candidate fan-out of a hot shingle (a
+    // boilerplate header at corpus df 10⁶ would emit ~5·10¹¹ pairs);
+    // shared-shingle count = the pair's bucket multiplicity
+    val cand = BucketPairs.underCap(post, Seq("shingle"), $"doc_id", maxDf)
+      .groupBy($"a".as("a_id"), $"b".as("b_id"))
       .agg(count(lit(1)).as("shared_rare"))
       .filter($"shared_rare" >= 3)
       .select($"a_id", $"b_id")
@@ -1232,21 +1167,14 @@ object DedupOps extends graft.QueryModule {
       // feeds the small-bucket collect AND both hot-bucket join legs —
       // pin it so the rank window isn't recomputed per consumer
       .localCheckpoint()
-    // per-bucket map-side pair emission for df-BOUNDED buckets only
-    // (guide §2.3 skew guard, r18): a bucket hotter than
-    // BucketCollectCap falls back to the streamed codegen'd self-join,
-    // so no aggregation buffer ever holds an unbounded member list and
-    // no single task ever emits an unbounded m² pair array (the
-    // measured simhash failure mode). df — the shingle's FULL posting
-    // count, an upper bound on its prefix-bucket membership — is
-    // already joined in, so routing costs no extra pass; a bucket goes
-    // entirely to one branch, so the union introduces no new dups and
-    // the candidate SET is exactly what one unsplit pass emits.
-    val small = pref.filter($"df" <= BucketCollectCap)
-      .groupBy($"s").agg(collect_list($"doc_id").as("ids"))
-      .select(explode(bucketIdPairsUdf($"ids")).as("p"))
-      .select($"p._1".as("a_id"), $"p._2".as("b_id"))
-    val hotPref = pref.filter($"df" > BucketCollectCap)
+    // route by df — the shingle's FULL posting count, an upper bound on
+    // its prefix-bucket membership: buckets within BucketPairs.MaxMembers
+    // emit their pairs map-side, hotter ones take the streamed self-join.
+    // A bucket goes entirely to one branch, so the union adds no dups.
+    val small = BucketPairs.of(
+        pref.filter($"df" <= BucketPairs.MaxMembers), Seq("s"), $"doc_id")
+      .select($"a".as("a_id"), $"b".as("b_id"))
+    val hotPref = pref.filter($"df" > BucketPairs.MaxMembers)
     val hot = hotPref.select($"s", $"doc_id".as("a_id"))
       .join(hotPref.select($"s", $"doc_id".as("b_id")), Seq("s"))
       .filter($"a_id" < $"b_id")
@@ -1453,20 +1381,11 @@ object DedupOps extends graft.QueryModule {
     import spark.implicits._
     val docs = spark.read.parquet(buildShingleIndex(spark, sfDir))
     val postings = docs.select($"doc_id", $"lang", explode($"sh").as("s"))
-    val rare = postings.groupBy($"lang", $"s")
-      .agg(count(lit(1)).as("df")).filter($"df" <= 100)
-      .select($"lang", $"s")
-    // per-bucket map-side pair emission off the df-pruned postings (the
-    // ngramJaccardWithCutoff candidate shape; the collect aggregate
-    // reuses the join's (lang, s) keying, and counting shared RAW
-    // shingles instead of shared xxhash64 posting-pair rows can only
-    // DROP collision-inflated candidates the exact verify below would
-    // have discarded anyway — final edges identical). The previous
-    // shape localCheckpointed the pruned postings and self-joined them.
-    val cand = postings.join(rare.hint("shuffle_hash"), Seq("lang", "s"))
-      .groupBy($"lang", $"s").agg(collect_list($"doc_id").as("ids"))
-      .select(explode(bucketIdPairsUdf($"ids")).as("p"))
-      .groupBy($"p._1".as("a_id"), $"p._2".as("b_id"))
+    // counting shared RAW shingles instead of shared xxhash64 ones can
+    // only DROP collision-inflated candidates the exact verify below
+    // would discard anyway — final edges identical
+    val cand = BucketPairs.underCap(postings, Seq("lang", "s"), $"doc_id", 100)
+      .groupBy($"a".as("a_id"), $"b".as("b_id"))
       .agg(count(lit(1)).as("nh"))
       .filter($"nh" >= 2)
       .select($"a_id", $"b_id")

@@ -92,10 +92,11 @@ object GraphOps extends graft.QueryModule {
     * ~15 here — never all-pairs over items, and no join reshuffle of
     * the big frame), and the support filter runs BEFORE the
     * per-item-frequency joins so the frequency lookups see the ~3k
-    * surviving pairs, not the 1.2M raw ones. At 100 TB the hot-basket
-    * cap (drop degenerate mega-baskets before pair-gen) bounds the
-    * quadratic term exactly like the shingle df-cutoff. Lift is an
-    * integer-ratio double rounded at 6dp — engine-portable. (A
+    * surviving pairs, not the 1.2M raw ones. A basket's item set is
+    * bounded by [[BucketPairs.MaxMembers]], checked at run time (the
+    * fixtures' largest order has 17 lines at sf0.1), so a degenerate
+    * mega-basket fails the query instead of allocating its pairs.
+    * Lift is an integer-ratio double rounded at 6dp — engine-portable. (A
     * common-neighbors link-prediction variant over the NEAR-DUP graph
     * was measured structurally vacuous on the fixture: planted dup
     * groups are cliques, every wedge closes — so the declared
@@ -116,8 +117,8 @@ object GraphOps extends graft.QueryModule {
     val freq = baskets.select(explode($"items").as("item"))
       .groupBy($"item").agg(count(lit(1)).as("n_item"))
     val pairs = baskets
-      .select(explode(basketPairsUdf($"items")).as("p"))
-      .groupBy($"p._1".as("a_id"), $"p._2".as("b_id"))
+      .select(explode(BucketPairs.ids($"items")).as("p"))
+      .groupBy($"p.a".as("a_id"), $"p.b".as("b_id"))
       .agg(count(lit(1)).as("support"))
       .filter($"support" >= 2)
     pairs
@@ -145,30 +146,12 @@ object GraphOps extends graft.QueryModule {
       .groupBy($"l_orderkey".as("basket"))
       .agg(sort_array(collect_set($"l_partkey")).as("items"))
     baskets
-      .select(explode(basketPairsUdf($"items")).as("p"))
-      .groupBy($"p._1".as("a_id"), $"p._2".as("b_id"))
+      .select(explode(BucketPairs.ids($"items")).as("p"))
+      .groupBy($"p.a".as("a_id"), $"p.b".as("b_id"))
       .agg(count(lit(1)).as("support"))
       .filter($"support" >= 2)
       .select($"a_id", $"b_id")
   }
-
-  /** all (a < b) pairs of an already-sorted, already-distinct item set;
-    * a tight JVM loop (the higher-order-function spelling is a
-    * CodegenFallback and re-inlines the array per element — the
-    * documented O(n²)-tree trap) */
-  private val basketPairsUdf =
-    udf((items: Seq[Long]) => {
-      val n = items.length
-      val out = Array.newBuilder[(Long, Long)]
-      out.sizeHint(n * (n - 1) / 2)
-      var i = 0
-      while (i < n) {
-        var j = i + 1
-        while (j < n) { out += ((items(i), items(j))); j += 1 }
-        i += 1
-      }
-      out.result()
-    })
 
   /** q_graph_adamic_adar — link prediction over the BASKET co-purchase
     * graph (edges = part pairs with support ≥ 2, [[marketBasket]]'s

@@ -378,85 +378,38 @@ object MultimodalOps extends graft.QueryModule {
       }.toDF("doc_id", "s0", "s1", "s2", "s3")
   }
 
-  /** All (a < b) doc-id pairs of one uncapped bucket's member list,
-    * emitted MAP-side from the bucket aggregate (the basketPairsUdf
-    * discipline) — a tight JVM loop over ≤[[BAND_CAP]] members. */
-  private val bucketIdPairsUdf =
-    udf((ids: Seq[Long]) => {
-      val s = ids.sorted
-      val n = s.length
-      val out = Array.newBuilder[(Long, Long)]
-      out.sizeHint(n * (n - 1) / 2)
-      var i = 0
-      while (i < n) {
-        var j = i + 1
-        while (j < n) { out += ((s(i), s(j))); j += 1 }
-        i += 1
-      }
-      out.result()
-    })
-
-  /** All (a < b) member pairs of one uncapped bucket WITH the full
-    * Hamming distance computed in place: each member is
-    * [doc_id, s0, s1, s2, s3], so the pair's score never needs a
-    * join back to the hash table. */
-  private val bucketHamPairsUdf =
-    udf((ms: Seq[Seq[Long]]) => {
-      val s = ms.sortBy(_.head)
-      val n = s.length
-      val out = Array.newBuilder[(Long, Long, Long)]
-      out.sizeHint(n * (n - 1) / 2)
-      var i = 0
-      while (i < n) {
-        var j = i + 1
-        while (j < n) {
-          val a = s(i); val b = s(j)
-          var h = 0L
-          var k = 1
-          while (k <= 4) {
-            h += java.lang.Long.bitCount(a(k) ^ b(k))
-            k += 1
-          }
-          out += ((a.head, b.head, h))
-          j += 1
-        }
-        i += 1
-      }
-      out.result()
-    })
+  /** Full Hamming distance of two [doc_id, s0, s1, s2, s3] members —
+    * the score of [[phashPairsFromHashed]]'s [[BucketPairs.scored]]. */
+  private val hamming = (a: Seq[Long], b: Seq[Long]) => {
+    var h = 0L
+    var k = 1
+    while (k <= 4) {
+      h += java.lang.Long.bitCount(a(k) ^ b(k))
+      k += 1
+    }
+    h
+  }
 
   /** Band → cap → per-bucket pair emission with in-place Hamming
     * scoring over a hashed frame — NO threshold, so every consumer
     * (dedup cutoff, threshold curve, keep-list, consensus) reads the
-    * same candidate set. The hot-bucket cap is the map-side-combined
-    * census + shuffle-hash join-back (the ngramJaccardWithCutoff
-    * df-prune discipline: a flooded bucket contributes one partial row
-    * per mapper and its members STREAM through the join probe and
-    * drop — a window count would sort the whole flood on one task);
-    * the surviving ≤[[BAND_CAP]]-member buckets collect their members
-    * (partition-preserving — the join left them keyed by (band, v))
-    * and emit their pairs MAP-side with the full Hamming distance
-    * computed from the carried 4×16-bit hash, so nothing ever joins
-    * back to the hash table. The previous shape spent a bucket
-    * self-join + two hash-lookup joins + a distinct on the same work.
-    * A pair colliding in several bands carries the same Hamming
-    * everywhere; min() is that value. */
+    * same candidate set. Buckets over [[BAND_CAP]] drop; the rest emit
+    * their pairs MAP-side with the full Hamming distance computed from
+    * the carried 4×16-bit hash ([[BucketPairs.underCap]], scored mode),
+    * so nothing ever joins back to the hash table. A pair colliding in
+    * several bands carries the same Hamming everywhere; min() is that
+    * value. */
   private[llm] def phashPairsFromHashed(hashed: DataFrame): DataFrame = {
     import hashed.sparkSession.implicits._
     val bands = hashed
       .select($"doc_id", $"s0", $"s1", $"s2", $"s3",
         posexplode(array($"s0", $"s1", $"s2", $"s3")))
       .toDF("doc_id", "s0", "s1", "s2", "s3", "band", "v")
-    val uncapped = bands.groupBy($"band", $"v")
-      .agg(count(lit(1)).as("n")).filter($"n" <= BAND_CAP)
-      .select($"band", $"v")
-    bands.join(uncapped.hint("shuffle_hash"), Seq("band", "v"))
-      .groupBy($"band", $"v")
-      .agg(collect_list(array($"doc_id", $"s0", $"s1", $"s2", $"s3"))
-        .as("ms"))
-      .select(explode(bucketHamPairsUdf($"ms")).as("p"))
-      .groupBy($"p._1".as("doc_a"), $"p._2".as("doc_b"))
-      .agg(min($"p._3").as("hamming"))
+    BucketPairs.underCap(bands, Seq("band", "v"),
+        array($"doc_id", $"s0", $"s1", $"s2", $"s3"), BAND_CAP,
+        BucketPairs.scored(hamming))
+      .groupBy($"a".as("doc_a"), $"b".as("doc_b"))
+      .agg(min($"score").as("hamming"))
   }
 
   /** The image artifact: hashed corpus + unthresholded scored pairs,
@@ -692,17 +645,8 @@ object MultimodalOps extends graft.QueryModule {
       .select($"doc_id", posexplode(
         array($"e0", $"e1", $"e2", $"e3", $"e4", $"e5", $"e6", $"e7")))
       .toDF("doc_id", "band", "energy")
-    // census cap (map-side combined; flooded buckets stream through the
-    // join probe and drop) + map-side per-bucket pair emission — see
-    // [[phashPairsFromHashed]] for the full argument.
-    val uncapped = bands.groupBy($"band", $"energy")
-      .agg(count(lit(1)).as("n")).filter($"n" <= BAND_CAP)
-      .select($"band", $"energy")
-    bands.join(uncapped.hint("shuffle_hash"), Seq("band", "energy"))
-      .groupBy($"band", $"energy")
-      .agg(collect_list($"doc_id").as("ids"))
-      .select(explode(bucketIdPairsUdf($"ids")).as("p"))
-      .groupBy($"p._1".as("doc_a"), $"p._2".as("doc_b"))
+    BucketPairs.underCap(bands, Seq("band", "energy"), $"doc_id", BAND_CAP)
+      .groupBy($"a".as("doc_a"), $"b".as("doc_b"))
       .agg(count(lit(1)).as("n_equal_bands"))
   }
 
@@ -906,18 +850,9 @@ object MultimodalOps extends graft.QueryModule {
     * frame-files ingest twin. */
   private def videoPairsFromHashed(hashed: DataFrame): DataFrame = {
     import hashed.sparkSession.implicits._
-    val key = Seq("pos", "s0", "s1", "s2", "s3")
-    // census cap (map-side combined; flooded buckets stream through the
-    // join probe and drop) + map-side per-bucket pair emission — see
-    // [[phashPairsFromHashed]] for the full argument.
-    val uncapped = hashed.groupBy(key.map(col): _*)
-      .agg(count(lit(1)).as("n")).filter($"n" <= BAND_CAP)
-      .select(key.map(col): _*)
-    hashed.join(uncapped.hint("shuffle_hash"), key)
-      .groupBy(key.map(col): _*)
-      .agg(collect_list($"doc_id").as("ids"))
-      .select(explode(bucketIdPairsUdf($"ids")).as("p"))
-      .groupBy($"p._1".as("doc_a"), $"p._2".as("doc_b"))
+    BucketPairs.underCap(
+        hashed, Seq("pos", "s0", "s1", "s2", "s3"), $"doc_id", BAND_CAP)
+      .groupBy($"a".as("doc_a"), $"b".as("doc_b"))
       .agg(count(lit(1)).as("n_frames_equal"))
   }
 
