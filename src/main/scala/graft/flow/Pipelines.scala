@@ -169,7 +169,7 @@ object Pipelines {
 
 /** Pipeline launch CLI (O9; reference run_pipeline.sh):
   *   graft.flow.Main train --base DIR --source DIR [--version N] [--limit N] [--workers N] [--history FILE]
-  *   graft.flow.Main classify --base DIR --source DIR --stop MM-dd-yyyy --days-back N [--workers N] [--history FILE]
+  *   graft.flow.Main classify --base DIR --source DIR --stop MM-dd-yyyy --days-back N [--history FILE]
   * --history FILE appends one JSON line per task lifecycle event
   * (Runner.historySink — Luigi's task-history surface).
   */
@@ -180,20 +180,15 @@ object Main {
       .collect { case Array(k, v) => k.stripPrefix("--") -> v }.toMap
     val cfg = FlowConfig(opts("base"), opts("source"),
       opts.getOrElse("version", "1").toInt, opts.getOrElse("limit", "500").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     spark.sparkContext.setLogLevel("WARN")
     val log = (s: String) => println(s"[graft.flow] $s")
     val events: Runner.EventHandler =
       opts.get("history").map(Runner.historySink).getOrElse(_ => ())
-    // Luigi's --workers N: >1 selects the parallel wave scheduler
+    // Luigi's --workers N: how many tasks the scheduler runs at once
     val workers = opts.getOrElse("workers", "1").toInt
     def exec(root: Task): Seq[String] =
-      if (workers > 1) Runner.runParallel(root, spark, workers, log, events = events)
-      else Runner.run(root, spark, log, events = events)
+      Runner.runParallel(root, spark, workers, log, events = events)
     cmd match {
       case "train" => exec(Pipelines.TrainModel(cfg))
       case "classify" =>

@@ -1,14 +1,19 @@
 package graft.flow
 
 import java.time.LocalDate
+import java.util.concurrent.{Callable, Executors}
+import java.util.concurrent.atomic.AtomicReference
 import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
-/** Deterministic single-process scheduler (the `--local-scheduler` mode the
-  * reference always uses, run_pipeline.sh:3-4): resolve the `requires` DAG
-  * depth-first, skip complete tasks (O3), run the rest in topological
-  * order. Returns the names of tasks actually executed, in order — the
-  * tests assert idempotency with it.
+/** Single-process scheduler (the `--local-scheduler` mode the reference
+  * always uses, run_pipeline.sh:3-4). One loop, [[Runner.runParallel]],
+  * collects the `requires` DAG, fails early on a missing external
+  * sensor, skips complete tasks (O3) and runs the rest wave by wave on
+  * N workers; [[Runner.run]] is its one-worker case. Both return the
+  * names of tasks actually executed, in order — the tests assert
+  * idempotency with it.
   */
 object Runner {
 
@@ -186,46 +191,31 @@ object Runner {
       }
     }
 
+  /** Luigi's `--workers 1`: [[runParallel]] on one worker, so tasks run
+    * one at a time in its wave order and the first failure stops the
+    * run. */
   def run(root: Task, spark: SparkSession,
           log: String => Unit = _ => (),
           retries: Int = 0,
           events: EventHandler = noEvents,
-          owner: String = Lease.workerId): Seq[String] = {
-    val executed = mutable.ArrayBuffer.empty[String]
-    val done = mutable.Set.empty[Task]
-    val inStack = mutable.Set.empty[Task]
+          owner: String = Lease.workerId): Seq[String] =
+    runParallel(root, spark, 1, log, retries, events, owner = owner)
 
-    def visit(t: Task): Unit = {
-      if (done.contains(t)) return
-      if (inStack.contains(t)) throw CycleException(t.name)
-      inStack += t
-      t.requires.foreach(visit)
-      if (!t.complete) {
-        // dynamic deps (Luigi yield): resolved only once statics are
-        // complete, so they may read upstream outputs; recursion covers
-        // their own static+dynamic closure. inStack still guards cycles.
-        t.dynamicRequires(spark).foreach(visit)
-      }
-      inStack -= t
-      if (!t.complete) {
-        log(s"RUN  ${t.name} -> ${t.output.uri}")
-        withLease(t, owner) { attempt(t, spark, log, retries, events) }
-        if (!t.complete) throw new IllegalStateException(
-          s"task ${t.name} ran but target ${t.output.uri} still missing")
-        executed += t.name
-      } else { log(s"SKIP ${t.name} (complete)"); events(TaskEvent.Skipped(t.name)) }
-      done += t
-    }
-    visit(root)
-    executed.toSeq
-  }
-
-  /** Multi-worker scheduler (Luigi's `--workers N`): independent ready
-    * tasks run concurrently, wave by wave — a wave is every task whose
-    * dependencies are all done, sorted by name so the reported execution
-    * order stays deterministic even though the wave itself is parallel.
-    * Spark's scheduler is thread-safe, so concurrent tasks become
-    * concurrent Spark jobs sharing the session (FAIR-pool-ready).
+  /** The scheduler (Luigi's `--workers N`): ready tasks run wave by wave
+    * on `workers` threads. A wave is every pending task whose static and
+    * dynamic dependencies are all done, admitted in (priority desc, name)
+    * order, so the reported execution order is deterministic even when
+    * the wave runs in parallel. Spark's scheduler is thread-safe, so
+    * concurrent tasks become concurrent Spark jobs sharing the session.
+    *
+    * Sensors first: an incomplete [[ExternalTask]] is attempted as soon
+    * as collecting the DAG reaches it, so a missing sensor in the static
+    * closure fails the run before any task starts.
+    *
+    * Stop, drain, rethrow: once a task fails, no task that has not
+    * started is started; the scheduler waits for every running task of
+    * the wave, then rethrows the first failure's original Throwable
+    * (fatal errors included) on the caller's thread.
     *
     * `resourceCaps` is Luigi's `[resources]` section: each named unit
     * has a capacity (default 1); a ready task joins a wave only if all
@@ -239,18 +229,33 @@ object Runner {
                   events: EventHandler = noEvents,
                   resourceCaps: Map[String, Int] = Map.empty,
                   owner: String = Lease.workerId): Seq[String] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
+    // one task: skip it if complete, else run its attempt loop under its
+    // lease; the name comes back iff it ran
+    def execute(t: Task): Option[String] =
+      if (t.complete) {
+        log(s"SKIP ${t.name} (complete)")
+        events(TaskEvent.Skipped(t.name))
+        None
+      } else {
+        log(s"RUN  ${t.name} -> ${t.output.uri}")
+        withLease(t, owner) { attempt(t, spark, log, retries, events) }
+        if (!t.complete) throw new IllegalStateException(
+          s"task ${t.name} ran but target ${t.output.uri} still missing")
+        Some(t.name)
+      }
     val all = mutable.LinkedHashSet.empty[Task]
     def collect(t: Task, stack: Set[Task]): Unit = {
       if (stack(t)) throw CycleException(t.name)
       if (!all.contains(t)) {
-        t.requires.foreach(collect(_, stack + t)); all += t
+        t.requires.foreach(collect(_, stack + t))
+        t match {
+          case s: ExternalTask if !s.complete => execute(s)
+          case _ => ()
+        }
+        all += t
       }
     }
     collect(root, Set.empty)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.max(1, workers))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     val executed = mutable.ArrayBuffer.empty[String]
     val done = mutable.Set.empty[Task]
     val pending = mutable.LinkedHashSet.empty[Task]
@@ -267,6 +272,8 @@ object Runner {
       }
       dyn
     })
+    val pool = Executors.newFixedThreadPool(math.max(1, workers))
+    val failure = new AtomicReference[Throwable]()
     try {
       while (pending.nonEmpty) {
         // snapshot: dynOf may grow `pending` mid-scan; rescan while an
@@ -299,22 +306,17 @@ object Runner {
               s"(demands ${ready.head.resources}) — running alone")
             Seq(ready.head)
           }
-        val results = wave.map { t =>
-          Future {
-            if (!t.complete) {
-              log(s"RUN  ${t.name} -> ${t.output.uri}")
-              withLease(t, owner) { attempt(t, spark, log, retries, events) }
-              if (!t.complete) throw new IllegalStateException(
-                s"task ${t.name} ran but target ${t.output.uri} still missing")
-              Some(t.name)
-            } else {
-              log(s"SKIP ${t.name} (complete)")
-              events(TaskEvent.Skipped(t.name))
-              None
-            }
+        // each body catches everything into `failure`, so invokeAll
+        // returns only when the whole wave has drained
+        val bodies = wave.map[Callable[Option[String]]] { t => () =>
+          if (failure.get != null) None
+          else try execute(t) catch {
+            case e: Throwable => failure.compareAndSet(null, e); None
           }
         }
-        executed ++= Await.result(Future.sequence(results), Duration.Inf).flatten
+        val ran = pool.invokeAll(bodies.asJava).asScala.flatMap(_.get)
+        Option(failure.get).foreach(throw _)
+        executed ++= ran
         pending --= wave
         done ++= wave
       }

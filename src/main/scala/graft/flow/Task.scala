@@ -21,15 +21,17 @@ trait Task {
   def name: String = getClass.getSimpleName.stripSuffix("$")
   def requires: Seq[Task] = Seq.empty
   /** Luigi `resources`: named units this task holds for its whole run.
-    * The parallel scheduler admits a task only when every resource has
-    * that many units free (capacities from its `resourceCaps` argument,
-    * default 1 per name) — how Luigi rate-limits e.g. concurrent
-    * writers against one database. Empty = unconstrained. */
+    * The scheduler admits a task to a wave only when every resource has
+    * that many units free (capacities from `runParallel`'s
+    * `resourceCaps` argument, default 1 per name) — how Luigi
+    * rate-limits e.g. concurrent writers against one database. Empty =
+    * unconstrained. */
   def resources: Map[String, Int] = Map.empty
   /** Luigi `priority`: among READY tasks, higher runs first (name
-    * tiebreak keeps the schedule deterministic). Priority orders a
-    * wave's admission — it never overrides dependencies or resource
-    * capacities, exactly Luigi's contract. Default 0. */
+    * tiebreak keeps the schedule deterministic), under `run` and
+    * `runParallel` alike. Priority orders a wave's admission — it never
+    * overrides dependencies or resource capacities, exactly Luigi's
+    * contract. Default 0. */
   def priority: Int = 0
   /** Luigi DYNAMIC dependencies (`yield` inside `run`): requirements
     * that cannot be declared statically because they are a function of

@@ -43,17 +43,24 @@ object StreamOps extends graft.QueryModule {
     * this stream's own foreachBatch batch jobs — intended) plans with
     * the stream budget. The bench/verify harness runs queries strictly
     * sequentially, so nothing unrelated can land in the span; the
-    * depth counter below makes nested/overlapping spans restore the
-    * OUTERMOST caller's value instead of an inner pinned one. */
-  private val streamConfDepth = new java.util.concurrent.atomic.AtomicInteger(0)
+    * per-session depth count below makes nested/overlapping spans on one
+    * session restore the OUTERMOST caller's value instead of an inner
+    * pinned one, while a span on another session pins its own conf. */
+  private val streamConfDepth = scala.collection.mutable.Map.empty[SparkSession, Int]
   private[graft] def withStreamPartitions[A](spark: SparkSession)(body: => A): A = {
     val key = "spark.sql.shuffle.partitions"
-    val outermost = streamConfDepth.getAndIncrement() == 0
+    // an entry lives only while its session has a span open
+    def step(delta: Int): Int = streamConfDepth.synchronized {
+      val depth = streamConfDepth.getOrElse(spark, 0) + delta
+      if (depth == 0) streamConfDepth -= spark else streamConfDepth(spark) = depth
+      depth
+    }
+    val outermost = step(1) == 1
     val prev = spark.conf.get(key)
     if (outermost) spark.conf.set(key, streamShufflePartitions)
     try body finally {
       if (outermost) spark.conf.set(key, prev)
-      streamConfDepth.decrementAndGet()
+      step(-1)
     }
   }
 

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the formatted physical plan + wall time of one declared
   * query. Usage: Explain <queryName> [sfDir] [explain|time|both] */
 object Explain {
@@ -10,12 +8,7 @@ object Explain {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     val mode = if (args.length > 2) args(2) else "both"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     if (mode != "time")
       graft.SparkEntry.queries(name)(spark, sfDir).explain("formatted")

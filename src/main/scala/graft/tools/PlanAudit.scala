@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Systematic plan QA over EVERY declared query: flags the plan shapes
   * that are scale bugs when unintentional — cartesian products,
   * single-partition exchanges (global sorts/windows), and
@@ -331,11 +329,7 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local("4")
     spark.sparkContext.setLogLevel("ERROR")
     var bad = 0
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach {

@@ -175,14 +175,7 @@ object SkewBench {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val hotTenths = args.lift(1).map(_.toInt).getOrElse(5)
     val amplify = args.lift(2).map(_.toInt).getOrElse(64)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-skewbench")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "8g")
-      .getOrCreate()
+    val spark = graft.Session.local("32")
     spark.sparkContext.setLogLevel("WARN")
     val stats = run(spark, sfDir, hotTenths, amplify)
     stats.foreach(s => println(s.line))

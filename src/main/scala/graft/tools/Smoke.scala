@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Pre-commit gate: replicates the driver's t1 smoke (entry() on a bare
   * session must return rows > 0), then EXECUTES every declared query at
   * sf0.001 and exits nonzero on any throw. Round 6 shipped a query that
@@ -16,11 +14,7 @@ import org.apache.spark.sql.SparkSession
 object Smoke {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local("4")
     spark.sparkContext.setLogLevel("ERROR")
     val n = graft.SparkEntry.entry(spark).count()
     println(s"entry rows: $n (smoke ${if (n > 0) "PASS" else "FAIL"})")

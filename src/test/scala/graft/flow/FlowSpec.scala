@@ -394,29 +394,99 @@ class FlowSpec extends SparkTestBase {
   }
 
   test("priority: higher-priority ready tasks admitted first; deps still win") {
-    val base = Files.createTempDirectory("graft_prio").toString
-    val order = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    case class PT(n: String, prio: Int, deps: Seq[Task]) extends Task {
+    def build(): Task = {
+      val base = Files.createTempDirectory("graft_prio").toString
+      case class PT(n: String, prio: Int, deps: Seq[Task]) extends Task {
+        override def name: String = n
+        override def priority: Int = prio
+        override def requires: Seq[Task] = deps
+        val output: Target = FileTarget(s"$base/$n")
+        def run(spark: SparkSession): Unit =
+          Files.write(Paths.get(s"$base/$n"), "x".getBytes)
+      }
+      // one worker => a wave's admission order IS its execution order:
+      // "a_low" sorts first by name but "z_high" must lead the first
+      // wave on priority. "b_child" outranks everything at 99 yet
+      // depends on z_high — priority must NOT let it jump its
+      // dependency, so it lands in wave 2.
+      val zHigh = PT("z_high", 10, Seq.empty)
+      val aLow = PT("a_low", 0, Seq.empty)
+      val bChild = PT("b_child", 99, Seq(zHigh))
+      PT("sink", 0, Seq(aLow, bChild))
+    }
+    val runners = Seq[(String, Task => Seq[String])](
+      "runParallel" -> (Runner.runParallel(_, spark, workers = 1)),
+      "run" -> (Runner.run(_, spark)))
+    for ((label, runner) <- runners) {
+      val executed = runner(build())
+      assert(executed == Seq("z_high", "a_low", "b_child", "sink"),
+        s"$label: unexpected schedule: $executed")
+    }
+  }
+
+  /** Runs a scheduler call on its own daemon thread and joins it with a
+    * timeout, so a hung scheduler fails the spec instead of the suite. */
+  private def joined[A](body: => A): Either[Throwable, A] = {
+    val out = new java.util.concurrent.atomic.AtomicReference[Either[Throwable, A]]()
+    val th = new Thread(() =>
+      out.set(try Right(body) catch { case e: Throwable => Left(e) }),
+      "flowspec-scheduler")
+    th.setDaemon(true)
+    th.start()
+    th.join(20000)
+    assert(!th.isAlive, "scheduler still running after 20 s")
+    out.get
+  }
+
+  test("fatal error in a task: run and runParallel rethrow it, never hang") {
+    val base = Files.createTempDirectory("graft_fatal").toString
+    val runners = Seq[(String, Task => Seq[String])](
+      "run" -> (Runner.run(_, spark)),
+      "runParallel" -> (Runner.runParallel(_, spark, workers = 2)))
+    for ((label, runner) <- runners) {
+      val err = new StackOverflowError("synthetic")
+      val deep: Task = new Task {
+        override def name = s"Deep($label)"
+        val output: Target = FileTarget(s"$base/$label")
+        def run(spark: SparkSession): Unit = throw err
+      }
+      joined(runner(deep)) match {
+        case Left(e) => assert(e eq err, s"$label rethrew $e")
+        case Right(r) => fail(s"$label returned $r")
+      }
+    }
+  }
+
+  test("failed wave: running peers drain before the rethrow; nothing new starts") {
+    val base = Files.createTempDirectory("graft_drain").toString
+    case class WT(n: String, deps: Seq[Task], body: () => Unit) extends Task {
       override def name: String = n
-      override def priority: Int = prio
       override def requires: Seq[Task] = deps
       val output: Target = FileTarget(s"$base/$n")
       def run(spark: SparkSession): Unit = {
-        order.add(n); Files.write(Paths.get(s"$base/$n"), "x".getBytes)
+        body(); Files.write(Paths.get(s"$base/$n"), "x".getBytes)
       }
     }
-    // one worker => a wave's admission order IS its execution order:
-    // "a_low" sorts first by name but "z_high" must lead the first
-    // wave on priority. "b_child" outranks everything at 99 yet
-    // depends on z_high — priority must NOT let it jump its
-    // dependency, so it lands in wave 2.
-    val zHigh = PT("z_high", 10, Seq.empty)
-    val aLow = PT("a_low", 0, Seq.empty)
-    val bChild = PT("b_child", 99, Seq(zHigh))
-    val sink = PT("sink", 0, Seq(aLow, bChild))
-    val executed = Runner.runParallel(sink, spark, workers = 1)
-    assert(executed == Seq("z_high", "a_low", "b_child", "sink"),
-      s"unexpected schedule: $executed")
+    val boom = new RuntimeException("boom")
+    // a_boom fails as soon as b_slow is running, so the pair is one
+    // wave with a live peer at the failure
+    val bStarted = new java.util.concurrent.CountDownLatch(1)
+    val aBoom = WT("a_boom", Seq.empty, () => {
+      bStarted.await(20, java.util.concurrent.TimeUnit.SECONDS); throw boom
+    })
+    val bSlow = WT("b_slow", Seq.empty, () => {
+      bStarted.countDown(); Thread.sleep(300)
+    })
+    val cAfter = WT("c_after", Seq(bSlow), () => ())
+    val sink = WT("d_sink", Seq(aBoom, cAfter), () => ())
+    joined(Runner.runParallel(sink, spark, workers = 2)) match {
+      case Left(e) =>
+        assert(e eq boom, s"rethrew $e")
+        assert(bSlow.complete, "scheduler threw while b_slow was still running")
+      case Right(r) => fail(s"returned $r")
+    }
+    assert(!cAfter.complete, "a dependent of the drained wave started")
+    assert(!sink.complete)
   }
 
   test("resources: capacity-1 unit serializes tasks; roomy capacity overlaps") {

@@ -341,4 +341,29 @@ class StreamingSpec extends SparkTestBase {
           s"(input order ${perm.map(_._2)}):\n twin=$twin\n expected=$expected")
     }
   }
+
+  test("stream partition spans are counted per session") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    val key = "spark.sql.shuffle.partitions"
+    val other = spark.newSession()
+    val (prevA, prevB) = (spark.conf.get(key), other.conf.get(key))
+    assume(prevB != StreamOps.streamShufflePartitions,
+      "the stream budget equals the session default; the spec would be vacuous")
+    val aOpen = new CountDownLatch(1)
+    val bDone = new CountDownLatch(1)
+    // session A holds its span open until session B's span has run
+    val holder = new Thread(() => StreamOps.withStreamPartitions(spark) {
+      aOpen.countDown(); bDone.await(20, TimeUnit.SECONDS)
+    })
+    holder.start()
+    assert(aOpen.await(20, TimeUnit.SECONDS))
+    @volatile var seenB = ""
+    val inner = new Thread(() =>
+      try StreamOps.withStreamPartitions(other) { seenB = other.conf.get(key) }
+      finally bDone.countDown())
+    inner.start(); inner.join(20000); holder.join(20000)
+    assert(seenB == StreamOps.streamShufflePartitions,
+      "session B's span ran on its default partitions")
+    assert(spark.conf.get(key) == prevA && other.conf.get(key) == prevB)
+  }
 }
