@@ -7,31 +7,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * 100 TB rule (SURVEY.md §4.4): Parquet on the hot path — self-describing
   * schema, column pruning + predicate pushdown reach the scan for free.
-  * No schema inference happens here (parquet footers carry the schema).
+  * Each table's schema is inferred once per file commit and session
+  * ([[graft.flow.Committed.parquet]]): a rewritten fixture or another
+  * nanosAsLong setting gets its own inference, and the data is still
+  * read from parquet by every query.
   */
 object Tables {
-  /** Per-path parquet SCHEMA cache (r18, the fixed-cost-tail fix): a
-    * bare `spark.read.parquet(path)` infers the schema by listing the
-    * path and reading a footer — a driver-side job per TABLE REFERENCE,
-    * paid again by every one of the ~350 bench/verify query entries.
-    * The schema of a fixture table is immutable within a JVM's
-    * lifetime (fixtures are only regenerated between driver runs), so
-    * resolve it once per path and hand Spark the result; the DATA is
-    * still read from parquet by every query — this caches metadata
-    * only, never rows or results. The key includes the session's
-    * nanosAsLong flag state indirectly: only Tables.events reads the
-    * one table whose physical type depends on it, and it sets the conf
-    * before first touch, so every cached inference matches what an
-    * uncached read would produce. */
-  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]
-
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val path = s"$sfDir/$name.parquet"
-    val schema = schemaCache.computeIfAbsent(path,
-      _ => spark.read.parquet(path).schema)
-    spark.read.schema(schema).parquet(path)
-  }
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    graft.flow.Committed.parquet(spark, s"$sfDir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame     = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = table(s, d, "nation")

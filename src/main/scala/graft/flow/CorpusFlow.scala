@@ -192,7 +192,7 @@ object CorpusFlow {
     val output: DirTarget = DirTarget(s"${cfg.baseDir}/batch_$i/url_deduped")
     def run(spark: SparkSession): Unit = {
       import org.apache.spark.sql.expressions.Window
-      val batch = spark.read.parquet(requires.head.output.uri)
+      val batch = Committed.parquet(spark, requires.head.output.uri)
         .withColumn("curl", graft.llm.DedupOps.canonicalUrl(
           graft.llm.DedupOps.syntheticCrawlUrl(
             col("doc_id"), col("source"), col("lang"))))
@@ -203,7 +203,7 @@ object CorpusFlow {
       val kept =
         if (i == 0) withinFirst
         else withinFirst.join(
-          spark.read.parquet(requires(1).output.uri), Seq("curl"),
+          Committed.parquet(spark, requires(1).output.uri), Seq("curl"),
           "left_anti")
       output.atomicWrite { tmp => kept.write.parquet(tmp) }
     }
@@ -219,11 +219,11 @@ object CorpusFlow {
       else Seq(UrlDedupBatch(cfg, i), UrlIndex(cfg, i - 1))
     val output: DirTarget = DirTarget(s"${cfg.baseDir}/batch_$i/url_index")
     def run(spark: SparkSession): Unit = {
-      val batchUrls = spark.read.parquet(requires.head.output.uri)
+      val batchUrls = Committed.parquet(spark, requires.head.output.uri)
         .select(col("curl"))
       val newIndex =
         if (i == 0) batchUrls.distinct()
-        else spark.read.parquet(requires(1).output.uri)
+        else Committed.parquet(spark, requires(1).output.uri)
           .union(batchUrls).distinct()
       output.atomicWrite { tmp => newIndex.write.parquet(tmp) }
     }
@@ -238,7 +238,7 @@ object CorpusFlow {
     def run(spark: SparkSession): Unit = {
       val toks = split(col("text"), " ")
       output.atomicWrite { tmp =>
-        val base = spark.read.parquet(requires.head.output.uri)
+        val base = Committed.parquet(spark, requires.head.output.uri)
           .drop("curl") // the URL stage's working column, not corpus data
           .withColumn("n_tokens", size(toks))
           .withColumn("unique_ratio",
@@ -280,7 +280,7 @@ object CorpusFlow {
     val output: DirTarget = DirTarget(s"${cfg.baseDir}/batch_$i/deduped")
     def run(spark: SparkSession): Unit = {
       import org.apache.spark.sql.expressions.Window
-      val batch = spark.read.parquet(requires.head.output.uri)
+      val batch = Committed.parquet(spark, requires.head.output.uri)
         .withColumn("fp", graft.llm.DedupOps.contentFp(col("text")))
       val withinFirst = batch.withColumn("rn",
           row_number().over(Window.partitionBy(col("fp"))
@@ -289,7 +289,7 @@ object CorpusFlow {
       val kept =
         if (i == 0) withinFirst
         else withinFirst.join(
-          spark.read.parquet(requires(1).output.uri), Seq("fp"), "left_anti")
+          Committed.parquet(spark, requires(1).output.uri), Seq("fp"), "left_anti")
       output.atomicWrite { tmp => kept.write.parquet(tmp) }
     }
   }
@@ -306,11 +306,11 @@ object CorpusFlow {
       else Seq(DedupBatch(cfg, i), FpIndex(cfg, i - 1))
     val output: DirTarget = DirTarget(s"${cfg.baseDir}/batch_$i/fp_index")
     def run(spark: SparkSession): Unit = {
-      val batchFps = spark.read.parquet(requires.head.output.uri)
+      val batchFps = Committed.parquet(spark, requires.head.output.uri)
         .select(col("fp"))
       val newIndex =
         if (i == 0) batchFps.distinct()
-        else spark.read.parquet(requires(1).output.uri)
+        else Committed.parquet(spark, requires(1).output.uri)
           .union(batchFps).distinct()
       output.atomicWrite { tmp => newIndex.write.parquet(tmp) }
     }
@@ -363,7 +363,7 @@ object CorpusFlow {
       // raw carries NO shingle UDF: the shingle-free union leg at the
       // end reads it via an anti join on doc_id instead of re-running
       // the expensive shingle pass just to find the sub-3-token docs
-      val raw = spark.read.parquet(requires.head.output.uri)
+      val raw = Committed.parquet(spark, requires.head.output.uri)
       val shingled = withShingleFp(raw)
         .localCheckpoint() // feeds reps AND the final member filter
       val reps = shingled.groupBy(col("shfp"))
@@ -387,9 +387,9 @@ object CorpusFlow {
         if (i == 0) None
         else {
           val idx = requires(1).output.uri
-          val idxBands = spark.read.parquet(s"$idx/bands")
+          val idxBands = Committed.parquet(spark, s"$idx/bands")
             .select(col("band"), col("bandhash"), col("shfp").as("o_shfp"))
-          val idxReps = spark.read.parquet(s"$idx/reps")
+          val idxReps = Committed.parquet(spark, s"$idx/reps")
             .select(col("shfp").as("o_shfp"), col("sh").as("o_sh"))
           val cand = bands.select(col("band"), col("bandhash"), col("shfp"))
             .join(idxBands, Seq("band", "bandhash"))
@@ -447,7 +447,7 @@ object CorpusFlow {
     val output: DirTarget = DirTarget(s"${cfg.baseDir}/batch_$i/band_index")
     def run(spark: SparkSession): Unit = {
       val batchReps = withShingleFp(
-          spark.read.parquet(requires.head.output.uri))
+          Committed.parquet(spark, requires.head.output.uri))
         .groupBy(col("shfp"))
         .agg(min_by(col("sh"), col("doc_id")).as("sh"))
       output.atomicWrite { tmp =>
@@ -457,14 +457,14 @@ object CorpusFlow {
           bandsOf(matReps).write.parquet(s"$tmp/bands")
         } else {
           val prev = requires(1).output.uri
-          val prevReps = spark.read.parquet(s"$prev/reps")
+          val prevReps = Committed.parquet(spark, s"$prev/reps")
           // an shfp already indexed has identical shingle SET, hence
           // identical bands: the prev entry wins, nothing re-banded
           val fresh = batchReps.join(prevReps.select(col("shfp")),
               Seq("shfp"), "left_anti")
             .localCheckpoint() // feeds reps-union AND the new bands
           prevReps.unionByName(fresh).write.parquet(s"$tmp/reps")
-          spark.read.parquet(s"$prev/bands").unionByName(bandsOf(fresh))
+          Committed.parquet(spark, s"$prev/bands").unionByName(bandsOf(fresh))
             .write.parquet(s"$tmp/bands")
         }
       }
@@ -547,11 +547,11 @@ object CorpusFlow {
     val output: DirTarget = DirTarget(s"${cfg.baseDir}/batch_$i/image_deduped")
     def run(spark: SparkSession): Unit = {
       import graft.llm.MultimodalOps
-      val batch = spark.read.parquet(requires.head.output.uri)
+      val batch = Committed.parquet(spark, requires.head.output.uri)
       val dropIds =
         if (cfg.mediaConsensus)
           // the ≥2-of-3 policy, read from the once-per-flow artifact
-          spark.read.parquet(requires(1).output.uri)
+          Committed.parquet(spark, requires(1).output.uri)
         else
           // image-only: doc_b is the larger id of every scored pair
           // by construction (the min-parent rule)
@@ -574,9 +574,9 @@ object CorpusFlow {
     val output: DirTarget = DirTarget(s"${cfg.baseDir}/batch_$i/decontaminated")
     def run(spark: SparkSession): Unit = {
       import graft.llm.DedupOps
-      val batch = spark.read.parquet(requires.head.output.uri)
+      val batch = Committed.parquet(spark, requires.head.output.uri)
         .filter(col("doc_id") % cfg.evalEvery =!= 0)
-      val bench = spark.read.parquet(requires(1).output.uri)
+      val bench = Committed.parquet(spark, requires(1).output.uri)
       val leaked = batch
         .select(col("doc_id"), explode(DedupOps.shingleCol(col("text")))
           .as("shingle"))
@@ -641,8 +641,8 @@ object CorpusFlow {
     def run(spark: SparkSession): Unit = {
       val th = cfg.dsirMinMicro.getOrElse(
         sys.error("DsirSelectBatch scheduled without cfg.dsirMinMicro"))
-      val batch = spark.read.parquet(requires.head.output.uri)
-      val lam = spark.read.parquet(requires(1).output.uri)
+      val batch = Committed.parquet(spark, requires.head.output.uri)
+      val lam = Committed.parquet(spark, requires(1).output.uri)
       val keepRaw = batch
         .filter(!col("source").isin(DsirTargetSources: _*))
         .select(col("doc_id"), explode(split(col("text"), " ")).as("t"))
@@ -682,7 +682,7 @@ object CorpusFlow {
             lit(1000000007L)),
           col("doc_id"))
       output.atomicWrite { tmp =>
-        spark.read.parquet(requires.head.output.uri)
+        Committed.parquet(spark, requires.head.output.uri)
           .withColumn("rk", row_number().over(w))
           .filter(col("rk") <= cfg.quotaPerLang)
           .drop("rk")
@@ -713,8 +713,8 @@ object CorpusFlow {
       val budget = 512L
       val offset =
         if (i == 0) 0L
-        else spark.read.parquet(requires(1).output.uri).head.getLong(0)
-      val toks = spark.read.parquet(requires.head.output.uri)
+        else Committed.parquet(spark, requires(1).output.uri).head.getLong(0)
+      val toks = Committed.parquet(spark, requires.head.output.uri)
         .withColumn("n_toks",
           size(filter(split(col("text"), " "), w => length(w) > 0))
             .cast("long"))
@@ -765,8 +765,8 @@ object CorpusFlow {
     def run(spark: SparkSession): Unit = {
       val prev =
         if (i == 0) 0L
-        else spark.read.parquet(requires(1).output.uri).head.getLong(0)
-      val batchToks = spark.read.parquet(requires.head.output.uri)
+        else Committed.parquet(spark, requires(1).output.uri).head.getLong(0)
+      val batchToks = Committed.parquet(spark, requires.head.output.uri)
         .agg(coalesce(sum(col("n_toks")), lit(0L)).as("total")).head
         .getLong(0)
       output.atomicWrite { tmp =>
@@ -801,7 +801,7 @@ object CorpusFlow {
         (if (cfg.dsirMinMicro.isDefined) Seq("selected") else Nil) ++
         Seq("mixed", "packed")
       def stageCounts(stage: String) =
-        spark.read.parquet(
+        Committed.parquet(spark,
             (0 until n).map(i => s"${cfg.baseDir}/batch_$i/$stage"): _*)
           // greedy .* anchors to the LAST batch_<i>/<stage>/ segment so
           // a baseDir that itself contains "batch_<digits>" can't
@@ -833,8 +833,9 @@ object CorpusFlow {
     override def requires: Seq[Task] = Seq(PackBatch(cfg, i))
     val output: DirTarget = DirTarget(s"${cfg.baseDir}/batch_$i/drop_ledger")
     def run(spark: SparkSession): Unit = {
-      def ids(stage: String) = spark.read
-        .parquet(s"${cfg.baseDir}/batch_$i/$stage").select(col("doc_id"))
+      def ids(stage: String) =
+        Committed.parquet(spark, s"${cfg.baseDir}/batch_$i/$stage")
+          .select(col("doc_id"))
       val ladder =
         (if (cfg.urlDedup)
           Seq(("raw", "url_deduped", "url_dup"),
@@ -876,7 +877,7 @@ object CorpusFlow {
       // of truth — a PackBatch layout change cannot desynchronize this)
       val paths = dynamicRequires(spark).map(_.output.uri)
       output.atomicWrite { tmp =>
-        spark.read.parquet(paths: _*)
+        Committed.parquet(spark, paths: _*)
           .groupBy(col("lang"))
           .agg(countDistinct(col("doc_id")).as("n_docs"),
             sum(col("n_chars")).as("total_chars"),

@@ -2,7 +2,7 @@ package graft.flow
 
 import java.time.LocalDate
 import java.time.format.DateTimeFormatter
-import org.apache.spark.ml.{Pipeline, PipelineModel}
+import org.apache.spark.ml.Pipeline
 import org.apache.spark.ml.classification.DecisionTreeClassifier
 import org.apache.spark.ml.feature.{HashingTF, Tokenizer}
 import org.apache.spark.ml.functions.vector_to_array
@@ -145,7 +145,9 @@ object Pipelines {
   }
 
   /** D25/D19/D26: load versioned model, score, map labels, publish.
-    * Positional multi-input access (O2): requires(0)=model, requires(1)=cleaned. */
+    * Positional multi-input access (O2): requires(0)=model, requires(1)=cleaned.
+    * The model is loaded once per commit and session ([[Committed]]), not
+    * once per day of a backfill. */
   final case class Classify(cfg: FlowConfig, date: LocalDate) extends Task {
     override def name = s"Classify(${date.format(fmt)})"
     override val requires: Seq[Task] =
@@ -153,7 +155,7 @@ object Pipelines {
     val output: DirTarget = DirTarget(s"${cfg.baseDir}/daily/${date.format(fmt)}/ergebnis.csv")
     def run(spark: SparkSession): Unit = {
       import spark.implicits._
-      val model = PipelineModel.load(requires(0).output.uri)
+      val model = Committed.model(spark, requires(0).output.uri)
       val cleaned = readSemiCsvCleaned(spark, requires(1).output.uri)
         .na.fill("", Seq("cleaned_words"))
       val scored = model.transform(cleaned)

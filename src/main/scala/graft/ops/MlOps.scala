@@ -469,7 +469,7 @@ object MlOps extends graft.QueryModule {
     import spark.implicits._
     val df = spark.read.option("delimiter", ";").option("header", "true")
       .csv(cleanedCsv)
-    val model = org.apache.spark.ml.PipelineModel.load(modelPath)
+    val model = graft.flow.Committed.model(spark, modelPath)
     model.transform(df)
       .select($"id", $"subreddit", $"probability", $"prediction")
       .withColumn("prediction_label",

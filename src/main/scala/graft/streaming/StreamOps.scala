@@ -106,8 +106,8 @@ object StreamOps extends graft.QueryModule {
     * the nanos-long and the TIMESTAMP_NTZ physical forms of events.ts). */
   private def eventsStream(spark: SparkSession, sfDir: String): DataFrame = {
     graft.Tables.events(spark, sfDir) // sets the nanosAsLong conf
-    // raw (pre-normalization) schema through the Tables schema cache —
-    // no per-stream-query footer re-read
+    // raw (pre-normalization) schema through Tables' per-session schema
+    // memo (flow.Committed) — no per-stream-query footer re-read
     val rawSchema = graft.Tables.table(spark, sfDir, "events").schema
     // two fixture layouts exist: the driver's single FILE
     // events.parquet (stream the parent dir, glob on the file name —

@@ -3,7 +3,9 @@ package graft.flow
 import java.nio.file.{Files, Paths}
 import java.time.LocalDate
 import graft.SparkTestBase
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.ml.PipelineModel
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Orchestrator integration tests (SURVEY.md §5.2 "orchestrator" row):
   * end-to-end pipelines over the reference golden fixtures, idempotent
@@ -57,6 +59,100 @@ class FlowSpec extends SparkTestBase {
     assert(labels.subsetOf(Set("datascience", "gameofthrones")))
     assert(erg.count() == 143) // 32+41+39+31 golden records (FIXTURES.md §A)
     assert(erg.filter("probability NOT LIKE '[%'").count() == 0)
+  }
+
+  /** Counts Spark jobs per value of a thread-local tag. The listener
+    * bus is async: `drain` submits a marker job and waits until the
+    * listener has seen it, and with it every job submitted before. */
+  private final class JobTap(spark: SparkSession) extends SparkListener {
+    private val key = "graft.spec.tag"
+    private val counts = new java.util.concurrent.ConcurrentHashMap[String, Integer]
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      Option(e.properties).flatMap(p => Option(p.getProperty(key)))
+        .foreach(t => counts.merge(t, 1, (a, b) => a + b))
+    def tag(t: String): Unit = spark.sparkContext.setLocalProperty(key, t)
+    def tagged[A](t: String)(body: => A): A =
+      try { tag(t); body } finally tag(null)
+    /** Runner events that tag each task's jobs with the task name. */
+    val byTask: Runner.EventHandler = {
+      case Runner.TaskEvent.Start(t) => tag(t)
+      case _ => ()
+    }
+    def drain(): Map[String, Int] = {
+      val marker = s"drain-${System.nanoTime()}"
+      tagged(marker)(spark.sparkContext.parallelize(Seq(1), 1).count())
+      val deadline = System.nanoTime() + 20L * 1000 * 1000 * 1000
+      while (!counts.containsKey(marker) && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(counts.containsKey(marker), "listener bus never drained")
+      import scala.jdk.CollectionConverters._
+      counts.asScala.map { case (k, v) => k -> v.intValue }.toMap
+    }
+  }
+
+  /** Classify's output as an uncached load of `model` computes it. */
+  private def scoreUncached(model: PipelineModel, cleanedCsv: String): Seq[String] = {
+    import org.apache.spark.ml.functions.vector_to_array
+    import org.apache.spark.sql.functions._
+    val cleaned = spark.read
+      .schema("id STRING, cleaned_words STRING, subreddit STRING")
+      .option("header", true).option("delimiter", ";")
+      .option("multiLine", true).option("escape", "\"").csv(cleanedCsv)
+      .na.fill("", Seq("cleaned_words"))
+    rows(model.transform(cleaned).select(col("id"), col("subreddit"),
+      vector_to_array(col("probability")).cast("string").as("probability"),
+      col("prediction"),
+      when(col("prediction") === 1, "datascience")
+        .otherwise("gameofthrones").as("prediction_label")))
+  }
+
+  private def rows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  test("daily backfill loads the model once; a retrain at the same path reloads") {
+    val cfg = freshCfg()
+    Runner.run(Pipelines.TrainModel(cfg), spark)
+    val modelPath = Pipelines.ModelExists(cfg).output.uri
+    val day = LocalDate.of(2018, 2, 22)
+    val dayDir = s"${cfg.baseDir}/daily/02-22-2018"
+    val tap = new JobTap(spark)
+    spark.sparkContext.addSparkListener(tap)
+    try {
+      // the jobs of one uncached load, the baseline the counts below use
+      val first = tap.tagged("uncached load")(PipelineModel.load(modelPath))
+      Runner.backfill(d => Pipelines.Classify(cfg, d), day.minusDays(1), 3,
+        spark, events = tap.byTask)
+      var jobs = tap.drain()
+      val load = jobs("uncached load")
+      assert(load > 0)
+      // newest first: 02-21 loads the model, 02-20 and 02-19 reuse it
+      val Seq(loaded, reused1, reused2) = Seq(21, 20, 19)
+        .map(d => jobs(s"Classify(02-$d-2018)"))
+      assert(reused1 == reused2, jobs.toString)
+      assert(loaded - reused1 == load, jobs.toString)
+
+      // retrain at the same path on fewer rows, so the model differs
+      Runner.run(Pipelines.CleanDaily(cfg, day), spark)
+      val cleaned = s"$dayDir/cleaned.csv"
+      val before = scoreUncached(first, cleaned)
+      val retrain = cfg.copy(limit = 20)
+      Seq(Pipelines.Ingest(retrain), Pipelines.CleanTrain(retrain),
+        Pipelines.TrainModel(retrain)).foreach { t =>
+        val dir = Paths.get(t.output.uri)
+        Files.walk(dir).sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+          .forEach(f => Files.delete(f))
+      }
+      Runner.run(Pipelines.TrainModel(retrain), spark)
+      Runner.run(Pipelines.Classify(cfg, day), spark, events = tap.byTask)
+      jobs = tap.drain()
+      assert(jobs("Classify(02-22-2018)") == loaded, jobs.toString)
+      val erg = rows(spark.read
+        .schema("id STRING, subreddit STRING, probability STRING, prediction DOUBLE, prediction_label STRING")
+        .option("header", true).option("delimiter", ";").option("escape", "\"")
+        .csv(s"$dayDir/ergebnis.csv"))
+      assert(erg == scoreUncached(PipelineModel.load(modelPath), cleaned))
+      assert(erg != before, "the retrained model scores like the old one")
+    } finally spark.sparkContext.removeSparkListener(tap)
   }
 
   test("atomic write: a crashing writer leaves no target and no temp junk") {
