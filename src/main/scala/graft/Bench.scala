@@ -44,19 +44,20 @@ object Bench {
     // ~10 KB and overflows the driver's tail-capture window (BENCH_r10
     // came back "parsed": null); 3 decimals keeps the whole line inside it
     val qs = results.map { case (k, v) =>
-      "\"" + k + "\":" + "%.3f".formatLocal(java.util.Locale.ROOT, v)
+      Verify.jsonString(k) + ":" + "%.3f".formatLocal(java.util.Locale.ROOT, v)
     }.mkString("{", ",", "}")
-    def jstr(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
     val errs = timed.filter(_._2 < 0)
-      .map { case (k, _) => jstr(s"$k: ${failures.getOrElse(k, "?")}") }
+      .map { case (k, _) =>
+        Verify.jsonString(s"$k: ${failures.getOrElse(k, "?")}") }
       .mkString("[", ",", "]")
     val total = results.map(_._2).sum
+    val sf = Verify.jsonString(sfDir)
     // field order matters to the DRIVER's artifact, not to JSON: its
     // bench log keeps the TAIL of this line, so the scalar summary
     // (errors, total, count, sf) sits after the long per-query map — a
     // truncated capture loses individual timings, never the headline
     val line = s"""{"metric":"total","unit":"sec","queries":$qs,""" +
-      s""""errors":$errs,"n_queries":${results.size},"sf":"$sfDir",""" +
+      s""""errors":$errs,"n_queries":${results.size},"sf":$sf,""" +
       s""""value":$total}"""
     // <200-byte summary WITHOUT the per-query map: the 259-query map
     // overflowed the driver's tail-capture window four rounds running
@@ -67,7 +68,7 @@ object Bench {
     // truncate against) AND a committed file (no stdout parsing at
     // all), in addition to the marked lines below.
     val summary = s"""{"metric":"total","unit":"sec",""" +
-      s""""errors":$errs,"n_queries":${results.size},"sf":"$sfDir",""" +
+      s""""errors":$errs,"n_queries":${results.size},"sf":$sf,""" +
       s""""value":$total}"""
     println(summary)
     try java.nio.file.Files.writeString(

@@ -174,8 +174,6 @@ object CorpusFlow {
     }
   }
 
-  /** Gopher-lite quality gate over one batch: token floor + unique
-    * ratio + alpha ratio, a pure narrow map (filters reach the scan). */
   /** Config-gated crawl-URL dedup at the HEAD of the ladder (the
     * cheapest dedup pass a web corpus has — URL noise is resolved
     * before any content hashing): per canonical URL
@@ -229,6 +227,8 @@ object CorpusFlow {
     }
   }
 
+  /** Gopher-lite quality gate over one batch: token floor + unique
+    * ratio + alpha ratio, a pure narrow map (filters reach the scan). */
   final case class QualityGate(cfg: CorpusConfig, i: Int) extends Task {
     override def name = s"QualityGate($i)"
     override def requires: Seq[Task] =
@@ -316,17 +316,6 @@ object CorpusFlow {
     }
   }
 
-  /** Incremental NEAR-dup over one exact-deduped batch: drops (a) any
-    * doc whose shingle set verifies Jaccard >= 0.5 against the
-    * cumulative band index (batches 0..i-1's survivors, via the
-    * BandIndex chain — the q_dedup_incremental_minhash discipline as a
-    * TASK), and (b) within the batch, any doc that near-dups a
-    * SMALLER-doc_id representative (the deterministic min-parent rule —
-    * no iteration, one band self-join). Docs under 3 tokens have no
-    * shingles and can never near-dup: kept unconditionally. Candidates
-    * come from 21x3 LSH band collisions and are verified by exact
-    * Jaccard on the representatives' shingle sets, so the batch is
-    * never all-pairs joined — the 100 TB shape. */
   /** THE shared shingle-fingerprint recipe: doc columns + `sh` (the
     * distinct 3-gram shingle set) + `shfp` (sha2 of the NUL-joined
     * sorted set — the content key of the near-dup index). NearDupBatch
@@ -352,6 +341,17 @@ object CorpusFlow {
       .withColumnRenamed("col", "bandhash")
       .select(col("band"), col("bandhash"), col("shfp"))
 
+  /** Incremental NEAR-dup over one exact-deduped batch: drops (a) any
+    * doc whose shingle set verifies Jaccard >= 0.5 against the
+    * cumulative band index (batches 0..i-1's survivors, via the
+    * BandIndex chain — the q_dedup_incremental_minhash discipline as a
+    * TASK), and (b) within the batch, any doc that near-dups a
+    * SMALLER-doc_id representative (the deterministic min-parent rule —
+    * no iteration, one band self-join). Docs under 3 tokens have no
+    * shingles and can never near-dup: kept unconditionally. Candidates
+    * come from 21x3 LSH band collisions and are verified by exact
+    * Jaccard on the representatives' shingle sets, so the batch is
+    * never all-pairs joined — the 100 TB shape. */
   final case class NearDupBatch(cfg: CorpusConfig, i: Int) extends Task {
     override def name = s"NearDupBatch($i)"
     override def requires: Seq[Task] =
@@ -492,28 +492,6 @@ object CorpusFlow {
     }
   }
 
-  /** Benchmark decontamination of one near-deduped batch (GPT-3
-    * appendix C / The Pile §6.3 any-overlap rule, the
-    * q_dedup_decontaminate semantics as a TASK): drop (a) the eval
-    * docs themselves — a training corpus must not contain its
-    * benchmark — and (b) any doc sharing ≥ 1 distinct 3-gram shingle
-    * with the benchmark set. The benchmark side BROADCASTS (eval
-    * suites stay driver-small at any corpus scale); the batch side is
-    * one narrow explode → broadcast semi-join → anti-join back on
-    * doc_id — corpus text never shuffles. Docs under 3 tokens have no
-    * shingles and cannot leak: kept. */
-  /** Perceptual image near-dup drop of one near-deduped batch (the
-    * multimodal stage, config-gated like UrlDedupBatch/DsirSelectBatch):
-    * the batch's docs drop when they are the LARGER side of any ≤6-
-    * Hamming dHash pair — the min-parent rule NearDupBatch's selfDrop
-    * uses, applied on the image axis. Pairs come from the build-once
-    * image artifact (MultimodalOps.imagePhashPairs — rendered, encoded,
-    * ImageIO-decoded and hashed ONCE per corpus generation), so the
-    * stage itself is one ids-only anti join: no codec work per batch,
-    * and every batch agrees with first-seen-wins because the pair
-    * frame is corpus-wide. At 100 TB the artifact is the hash index a
-    * media pipeline maintains anyway; the per-batch cost stays
-    * batch-sized. */
   /** Once-per-flow consensus drop-id set (r16 advisor item): in
     * mediaConsensus mode every ImageDedupBatch used to recompute the
     * corpus-wide ≥2-of-3 keep-list — three artifact pair reads +
@@ -538,6 +516,18 @@ object CorpusFlow {
     }
   }
 
+  /** Perceptual image near-dup drop of one near-deduped batch (the
+    * multimodal stage, config-gated like UrlDedupBatch/DsirSelectBatch):
+    * the batch's docs drop when they are the LARGER side of any ≤6-
+    * Hamming dHash pair — the min-parent rule NearDupBatch's selfDrop
+    * uses, applied on the image axis. Pairs come from the build-once
+    * image artifact (MultimodalOps.imagePhashPairs — rendered, encoded,
+    * ImageIO-decoded and hashed ONCE per corpus generation), so the
+    * stage itself is one ids-only anti join: no codec work per batch,
+    * and every batch agrees with first-seen-wins because the pair
+    * frame is corpus-wide. At 100 TB the artifact is the hash index a
+    * media pipeline maintains anyway; the per-batch cost stays
+    * batch-sized. */
   final case class ImageDedupBatch(cfg: CorpusConfig, i: Int) extends Task {
     override def name = s"ImageDedupBatch($i)"
     override def requires: Seq[Task] =
@@ -565,6 +555,16 @@ object CorpusFlow {
     }
   }
 
+  /** Benchmark decontamination of one near-deduped batch (GPT-3
+    * appendix C / The Pile §6.3 any-overlap rule, the
+    * q_dedup_decontaminate semantics as a TASK): drop (a) the eval
+    * docs themselves — a training corpus must not contain its
+    * benchmark — and (b) any doc sharing ≥ 1 distinct 3-gram shingle
+    * with the benchmark set. The benchmark side BROADCASTS (eval
+    * suites stay driver-small at any corpus scale); the batch side is
+    * one narrow explode → broadcast semi-join → anti-join back on
+    * doc_id — corpus text never shuffles. Docs under 3 tokens have no
+    * shingles and cannot leak: kept. */
   final case class DecontaminateBatch(cfg: CorpusConfig, i: Int) extends Task {
     override def name = s"DecontaminateBatch($i)"
     override def requires: Seq[Task] =

@@ -201,25 +201,18 @@ object DedupOps extends graft.QueryModule {
       .orderBy($"threshold")
   }
 
-  /** Location of the persisted shingled-corpus artifact (doc_id, lang,
+  /** The persisted shingled-corpus artifact (doc_id, lang,
     * length-bucket, shingle set) — the dedup pipeline's FIRST working
     * set, built once per corpus and read by the scale-path queries. */
-  private[llm] def shingleIndexPath(sfDir: String): String =
-    s"${graft.Artifacts.root}/graft_shingle_index/${artifactKey(sfDir)}"
-
   private[llm] def buildShingleIndex(spark: SparkSession, sfDir: String): String = {
     import spark.implicits._
-    val path = shingleIndexPath(sfDir)
-    val target = graft.flow.DirTarget(path)
-    if (!target.exists) target.atomicWrite { tmp =>
+    graft.Artifacts.ensure("graft_shingle_index/", sfDir, Docs, ArtifactVersion) { tmp =>
       graft.Tables.documents(spark, sfDir)
         .select($"doc_id", $"lang", floor($"n_chars" / 100).as("lb"),
           shinglesUdf($"text").as("sh"))
         .filter(size($"sh") > 0)
         .write.mode("overwrite").parquet(tmp)
     }
-    graft.Artifacts.sweepStale(path) // retire prior fixture generations
-    path
   }
 
   /** The SCALE.md stop-shingle variant of [[ngramJaccard]]: shingles
@@ -477,8 +470,6 @@ object DedupOps extends graft.QueryModule {
       .orderBy($"a_id", $"b_id")
   }
 
-  /** Normalized content fingerprint shared by the incremental-dedup path
-    * and its index builder (whitespace-collapsed lowercase sha256). */
   /** THE normalized content fingerprint (whitespace-collapsed lowercase
     * sha2-256) — shared across the dedup family AND flow.CorpusFlow;
     * every cross-component dedup-compatibility claim rides on this
@@ -491,30 +482,22 @@ object DedupOps extends graft.QueryModule {
     * stale artifact built by older code — bump it with the definition. */
   private val ArtifactVersion = "v2"
 
-  /** Full artifact cache key (graft.Artifacts.key): code version +
-    * corpus dir + the source table's (length, mtime), so a corpus
-    * REBUILT at the same path gets a fresh artifact. */
-  private def artifactKey(sfDir: String): String =
-    graft.Artifacts.key(ArtifactVersion, sfDir, "documents.parquet")
-
-  /** Location of the persisted corpus-fingerprint index for one sf dir. */
-  private[llm] def fpIndexPath(sfDir: String): String =
-    s"${graft.Artifacts.root}/graft_fp_index/${artifactKey(sfDir)}"
+  /** The source every dedup artifact is keyed on (graft.Artifacts.key),
+    * so a corpus REBUILT at the same path gets a fresh artifact. */
+  private val Docs = "documents.parquet"
 
   /** Materialize the EXISTING corpus's fingerprint set ONCE as a parquet
     * artifact (distinct fp, hash-partitioned and sorted within partitions
-    * on fp), committed atomically (flow.DirTarget). This is the piece
-    * that makes incremental dedup actually incremental: daily batches
-    * anti-join against the index — one column, already distinct, a
-    * fraction of the corpus bytes — instead of re-hashing 100 TB of
+    * on fp), committed through graft.Artifacts.ensure. This is the
+    * piece that makes incremental dedup actually incremental: daily
+    * batches anti-join against the index — one column, already distinct,
+    * a fraction of the corpus bytes — instead of re-hashing 100 TB of
     * documents per run. After each accepted batch the index grows by an
     * append of the batch's new fps (same partitioning); here it is built
     * one-shot from the corpus slice because the fixture corpus is static. */
   private[llm] def buildFpIndex(spark: SparkSession, sfDir: String): String = {
     import spark.implicits._
-    val path = fpIndexPath(sfDir)
-    val target = graft.flow.DirTarget(path)
-    if (!target.exists) target.atomicWrite { tmp =>
+    graft.Artifacts.ensure("graft_fp_index/", sfDir, Docs, ArtifactVersion) { tmp =>
       graft.Tables.documents(spark, sfDir)
         .filter($"doc_id" % 3 =!= 0 && $"text".isNotNull) // EXISTING slice
         .select(contentFp($"text").as("fp"))
@@ -522,8 +505,6 @@ object DedupOps extends graft.QueryModule {
         .repartition(8, $"fp").sortWithinPartitions($"fp")
         .write.mode("overwrite").parquet(tmp)
     }
-    graft.Artifacts.sweepStale(path) // retire prior fixture generations
-    path
   }
 
   /** Incremental dedup: the production shape — dedup a NEW batch against
@@ -551,9 +532,6 @@ object DedupOps extends graft.QueryModule {
       .orderBy($"keep_id")
   }
 
-  private[llm] def minhashIndexPath(sfDir: String): String =
-    s"${graft.Artifacts.root}/graft_minhash_index/${artifactKey(sfDir)}"
-
   /** Persist the EXISTING corpus's MinHash-LSH index ONCE: three parquet
     * frames under one atomically-committed dir — `members` (fp, doc_id),
     * `reps` (fp, shingle set of the min-id representative), `bands`
@@ -567,9 +545,7 @@ object DedupOps extends graft.QueryModule {
     * corpus slice because the fixture corpus is static. */
   private[llm] def buildMinhashIndex(spark: SparkSession, sfDir: String): String = {
     import spark.implicits._
-    val path = minhashIndexPath(sfDir)
-    val target = graft.flow.DirTarget(path)
-    if (!target.exists) target.atomicWrite { tmp =>
+    graft.Artifacts.ensure("graft_minhash_index/", sfDir, Docs, ArtifactVersion) { tmp =>
       val corpus = graft.Tables.documents(spark, sfDir)
         .filter($"doc_id" % 3 =!= 0) // EXISTING slice (complement of batch)
         .select($"doc_id", shinglesUdf($"text").as("sh"))
@@ -592,8 +568,6 @@ object DedupOps extends graft.QueryModule {
         .repartition(8, $"bandhash")
         .write.mode("overwrite").parquet(s"$tmp/bands")
     }
-    graft.Artifacts.sweepStale(path) // retire prior fixture generations
-    path
   }
 
   /** Incremental NEAR-dup: a NEW batch (doc_id % 3 = 0) against the
@@ -1331,8 +1305,9 @@ object DedupOps extends graft.QueryModule {
 
   /** Location of the persisted near-dup pair-graph artifact (the edge
     * list every dup-graph analytics query consumes). */
+  private val PairIndex = "graft_pair_index/"
   private[llm] def pairIndexPath(sfDir: String): String =
-    s"${graft.Artifacts.root}/graft_pair_index/${artifactKey(sfDir)}"
+    graft.Artifacts.path(PairIndex, sfDir, Docs, ArtifactVersion)
 
   /** Materialize the exact ngram-Jaccard pair graph ONCE as a parquet
     * artifact (canonical a<b edges), committed atomically — the fp-index
@@ -1346,16 +1321,11 @@ object DedupOps extends graft.QueryModule {
     * analytics read this artifact (round 9), whose content is exactly
     * their oracle's nearpairs CTE; changing the artifact layout or
     * ArtifactVersion therefore requires re-verifying those oracles. */
-  private[llm] def buildPairIndex(spark: SparkSession, sfDir: String): String = {
-    val path = pairIndexPath(sfDir)
-    val target = graft.flow.DirTarget(path)
-    if (!target.exists) target.atomicWrite { tmp =>
+  private[llm] def buildPairIndex(spark: SparkSession, sfDir: String): String =
+    graft.Artifacts.ensure(PairIndex, sfDir, Docs, ArtifactVersion) { tmp =>
       ngramJaccard(spark, sfDir).select("a_id", "b_id")
         .write.mode("overwrite").parquet(tmp)
     }
-    graft.Artifacts.sweepStale(path) // retire prior fixture generations
-    path
-  }
 
   /** Triangle enumeration over the near-dup CANDIDATE graph — the classic
     * graph-quality signal (triangle-dense regions are true duplicate

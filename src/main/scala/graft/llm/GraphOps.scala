@@ -328,9 +328,9 @@ object GraphOps extends graft.QueryModule {
       .orderBy($"n_members".desc, $"community")
   }
 
+  private val LpaLabels = "graft_lpa_labels/"
   private[llm] def lpaArtifactPath(sfDir: String): String =
-    s"${graft.Artifacts.root}/graft_lpa_labels/" +
-      graft.Artifacts.key("v1", sfDir, "lineitem.parquet")
+    graft.Artifacts.path(LpaLabels, sfDir, "lineitem.parquet", "v1")
 
   /** The shared 4-round deterministic LPA core, persisted ONCE per
     * fixture generation as a build-once artifact (the shingle-index
@@ -343,15 +343,12 @@ object GraphOps extends graft.QueryModule {
     * parquet. Rebuild-if-missing is pinned by GraphArtifactSpec. */
   private def lpaLabels(spark: SparkSession, sfDir: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    val path = lpaArtifactPath(sfDir)
-    val target = graft.flow.DirTarget(path)
-    if (!target.exists) target.atomicWrite { tmp =>
+    val path = graft.Artifacts.ensure(LpaLabels, sfDir, "lineitem.parquet", "v1") { tmp =>
       val (edges, lbl2, lbl4) = lpaLabelsCompute(spark, sfDir)
       edges.write.mode("overwrite").parquet(s"$tmp/edges")
       lbl2.write.mode("overwrite").parquet(s"$tmp/lbl2")
       lbl4.write.mode("overwrite").parquet(s"$tmp/lbl4")
     }
-    graft.Artifacts.sweepStale(path)
     (spark.read.parquet(s"$path/edges"),
       spark.read.parquet(s"$path/lbl2"),
       spark.read.parquet(s"$path/lbl4"))

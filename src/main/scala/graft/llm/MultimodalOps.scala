@@ -172,11 +172,7 @@ object MultimodalOps extends graft.QueryModule {
     * demonstrates (ingest fidelity, not bulk throughput). */
   def mediaIngest(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val path = s"${graft.Artifacts.root}/graft_media_files/" +
-      graft.Artifacts.key("v1", sfDir, "documents.parquet")
-    val target = graft.flow.DirTarget(path)
-    if (!target.exists) target.atomicWrite { tmp =>
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tmp))
+    val path = graft.Artifacts.ensure("graft_media_files/", sfDir, Docs, "v1") { tmp =>
       graft.Tables.documents(spark, sfDir)
         .filter($"doc_id" % 20 === 0 && $"text".isNotNull)
         .select($"doc_id", encode($"text", "UTF-8").as("payload"))
@@ -188,7 +184,6 @@ object MultimodalOps extends graft.QueryModule {
           }
         }
     }
-    graft.Artifacts.sweepStale(path)
     spark.read.format("binaryFile")
       .option("pathGlobFilter", "*.bin").load(path)
       .select(
@@ -308,20 +303,10 @@ object MultimodalOps extends graft.QueryModule {
     * (documents.parquet is the source every media fixture derives
     * from, so its (length, mtime) keys all three). */
   private[llm] def mediaArtifactPath(modality: String, sfDir: String): String =
-    s"${graft.Artifacts.root}/graft_media_$modality/" +
-      graft.Artifacts.key("v1", sfDir, "documents.parquet")
+    graft.Artifacts.path(s"graft_media_$modality/", sfDir, Docs, "v1")
 
-  /** Build-once wrapper shared by the three modality artifacts: ensure
-    * the content-keyed dir, sweep stale generations, hand back the
-    * path. `build` receives the temp dir and writes its frames. */
-  private def ensureMediaArtifact(modality: String, sfDir: String)
-                                 (build: String => Unit): String = {
-    val path = mediaArtifactPath(modality, sfDir)
-    val target = graft.flow.DirTarget(path)
-    if (!target.exists) target.atomicWrite(build)
-    graft.Artifacts.sweepStale(path)
-    path
-  }
+  /** The source every media artifact is keyed on. */
+  private val Docs = "documents.parquet"
 
   /** The doc → (base, isdup, isflat) role frame every synthetic
     * modality shares: dup docs (doc_id ≡ 1 mod 10) replay their
@@ -419,7 +404,7 @@ object MultimodalOps extends graft.QueryModule {
     * consensus query paid all three modalities' passes a second
     * time). Seven consumers read parquet from here. */
   private def imageArtifact(spark: SparkSession, sfDir: String): String =
-    ensureMediaArtifact("image", sfDir) { tmp =>
+    graft.Artifacts.ensure("graft_media_image/", sfDir, Docs, "v1") { tmp =>
       val hashed = imageHashedCompute(spark, sfDir).localCheckpoint()
       hashed.write.parquet(s"$tmp/hashed")
       phashPairsFromHashed(hashed).write.parquet(s"$tmp/pairs")
@@ -449,16 +434,13 @@ object MultimodalOps extends graft.QueryModule {
     * fixture generation under the Target discipline (atomic publish +
     * stale sweep), written executor-side via foreachPartition — no
     * driver collect. */
+  private val ImageFiles = "graft_media_imagefiles/"
   private[llm] def imageFilesPath(sfDir: String): String =
-    s"${graft.Artifacts.root}/graft_media_imagefiles/" +
-      graft.Artifacts.key("v1", sfDir, "documents.parquet")
+    graft.Artifacts.path(ImageFiles, sfDir, Docs, "v1")
 
   private def ensureImageFiles(spark: SparkSession, sfDir: String): String = {
     import spark.implicits._
-    val path = imageFilesPath(sfDir)
-    val target = graft.flow.DirTarget(path)
-    if (!target.exists) target.atomicWrite { tmp =>
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tmp))
+    graft.Artifacts.ensure(ImageFiles, sfDir, Docs, "v1") { tmp =>
       mediaRoles(spark, sfDir).as[(Long, Long, Boolean, Boolean)]
         .foreachPartition { (it: Iterator[(Long, Long, Boolean, Boolean)]) =>
           javax.imageio.ImageIO.setUseCache(false)
@@ -469,8 +451,6 @@ object MultimodalOps extends graft.QueryModule {
           }
         }
     }
-    graft.Artifacts.sweepStale(path)
-    path
   }
 
   /** dHash frame sourced from the FILE TREE through Spark's built-in
@@ -653,7 +633,7 @@ object MultimodalOps extends graft.QueryModule {
   /** The audio artifact: per-doc band energies + unthresholded scored
     * pairs, built once per fixture generation. */
   private def audioArtifact(spark: SparkSession, sfDir: String): String =
-    ensureMediaArtifact("audio", sfDir) { tmp =>
+    graft.Artifacts.ensure("graft_media_audio/", sfDir, Docs, "v1") { tmp =>
       val energy = audioEnergyCompute(spark, sfDir).localCheckpoint()
       energy.write.parquet(s"$tmp/energy")
       audioPairsFromEnergy(energy).write.parquet(s"$tmp/pairs")
@@ -710,16 +690,13 @@ object MultimodalOps extends graft.QueryModule {
 
   /** The audio corpus as a FILE TREE (one WAV object per doc) — the
     * audio twin of [[imageFilesPath]]. */
+  private val AudioFiles = "graft_media_audiofiles/"
   private[llm] def audioFilesPath(sfDir: String): String =
-    s"${graft.Artifacts.root}/graft_media_audiofiles/" +
-      graft.Artifacts.key("v1", sfDir, "documents.parquet")
+    graft.Artifacts.path(AudioFiles, sfDir, Docs, "v1")
 
   private def ensureAudioFiles(spark: SparkSession, sfDir: String): String = {
     import spark.implicits._
-    val path = audioFilesPath(sfDir)
-    val target = graft.flow.DirTarget(path)
-    if (!target.exists) target.atomicWrite { tmp =>
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tmp))
+    graft.Artifacts.ensure(AudioFiles, sfDir, Docs, "v1") { tmp =>
       mediaRoles(spark, sfDir).as[(Long, Long, Boolean, Boolean)]
         .foreachPartition { (it: Iterator[(Long, Long, Boolean, Boolean)]) =>
           it.foreach { case (id, base, isdup, isflat) =>
@@ -729,8 +706,6 @@ object MultimodalOps extends graft.QueryModule {
           }
         }
     }
-    graft.Artifacts.sweepStale(path)
-    path
   }
 
   /** q_dedup_audio_fingerprint_files — the audio near-dup pipeline
@@ -861,7 +836,7 @@ object MultimodalOps extends graft.QueryModule {
     * expensive codec pass — exactly the cost the artifact retires from
     * every re-read). */
   private def videoArtifact(spark: SparkSession, sfDir: String): String =
-    ensureMediaArtifact("video", sfDir) { tmp =>
+    graft.Artifacts.ensure("graft_media_video/", sfDir, Docs, "v1") { tmp =>
       videoPairsCompute(spark, sfDir).write.parquet(s"$tmp/pairs")
     }
 
@@ -876,9 +851,9 @@ object MultimodalOps extends graft.QueryModule {
     * 80+81 (a replay pair arriving WHOLLY inside the batch). */
   private[llm] val INCR_BATCH: Seq[Long] = Seq(41L, 60L, 80L, 81L)
 
+  private val ImageIncrBase = "graft_media_image_incr/"
   private[llm] def imageIncrBasePath(sfDir: String): String =
-    s"${graft.Artifacts.root}/graft_media_image_incr/" +
-      graft.Artifacts.key("v1", sfDir, "documents.parquet")
+    graft.Artifacts.path(ImageIncrBase, sfDir, Docs, "v1")
 
   /** q_dedup_incremental_phash — BATCH-ADD to a persisted perceptual
     * image index (the q_dedup_incremental_minhash / incremental-IVF
@@ -921,13 +896,10 @@ object MultimodalOps extends graft.QueryModule {
                                     batchHashed: DataFrame): DataFrame = {
     import spark.implicits._
     val isBatch = pmod($"doc_id", lit(100L)).isin(INCR_BATCH: _*)
-    val basePath = imageIncrBasePath(sfDir)
-    val baseTarget = graft.flow.DirTarget(basePath)
-    if (!baseTarget.exists) baseTarget.atomicWrite { tmp =>
+    val basePath = graft.Artifacts.ensure(ImageIncrBase, sfDir, Docs, "v1") { tmp =>
       renderAndHash(mediaRoles(spark, sfDir).filter(!isBatch))
         .write.parquet(s"$tmp/hashed")
     }
-    graft.Artifacts.sweepStale(basePath)
     val baseHashed = spark.read.parquet(s"$basePath/hashed")
     def bandsOf(df: DataFrame) = df
       .select($"doc_id", posexplode(array($"s0", $"s1", $"s2", $"s3")))
@@ -977,19 +949,16 @@ object MultimodalOps extends graft.QueryModule {
     * its own cap CTE. */
   private val VIDEO_FILES_SLICE = "doc_id % 100 < 20"
 
+  private val VideoFiles = "graft_media_videofiles/"
   private[llm] def videoFilesPath(sfDir: String): String =
-    s"${graft.Artifacts.root}/graft_media_videofiles/" +
-      graft.Artifacts.key("v1", sfDir, "documents.parquet")
+    graft.Artifacts.path(VideoFiles, sfDir, Docs, "v1")
 
   /** One PNG per (doc, sampled frame) — the ffmpeg frame-dump layout
     * a production video pipeline actually lands (frames extracted
     * upstream AT the sampling rate, positions 0/2/4/6). */
   private def ensureVideoFiles(spark: SparkSession, sfDir: String): String = {
     import spark.implicits._
-    val path = videoFilesPath(sfDir)
-    val target = graft.flow.DirTarget(path)
-    if (!target.exists) target.atomicWrite { tmp =>
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tmp))
+    graft.Artifacts.ensure(VideoFiles, sfDir, Docs, "v1") { tmp =>
       mediaRoles(spark, sfDir).filter(expr(VIDEO_FILES_SLICE))
         .as[(Long, Long, Boolean, Boolean)]
         .foreachPartition { (it: Iterator[(Long, Long, Boolean, Boolean)]) =>
@@ -1003,8 +972,6 @@ object MultimodalOps extends graft.QueryModule {
           }
         }
     }
-    graft.Artifacts.sweepStale(path)
-    path
   }
 
   /** q_dedup_video_framehash_files — the video near-dup pipeline
@@ -1057,16 +1024,13 @@ object MultimodalOps extends graft.QueryModule {
 
   /** The arriving batch as a FILE TREE (one PNG per batch doc) — what
     * the streaming ingest watches. */
+  private val StreamBatchFiles = "graft_media_streambatch/"
   private[llm] def streamBatchFilesPath(sfDir: String): String =
-    s"${graft.Artifacts.root}/graft_media_streambatch/" +
-      graft.Artifacts.key("v1", sfDir, "documents.parquet")
+    graft.Artifacts.path(StreamBatchFiles, sfDir, Docs, "v1")
 
   private def ensureStreamBatchFiles(spark: SparkSession, sfDir: String): String = {
     import spark.implicits._
-    val path = streamBatchFilesPath(sfDir)
-    val target = graft.flow.DirTarget(path)
-    if (!target.exists) target.atomicWrite { tmp =>
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tmp))
+    graft.Artifacts.ensure(StreamBatchFiles, sfDir, Docs, "v1") { tmp =>
       mediaRoles(spark, sfDir)
         .filter(pmod($"doc_id", lit(100L)).isin(INCR_BATCH: _*))
         .as[(Long, Long, Boolean, Boolean)]
@@ -1079,8 +1043,6 @@ object MultimodalOps extends graft.QueryModule {
           }
         }
     }
-    graft.Artifacts.sweepStale(path)
-    path
   }
 
   /** q_stream_media_dedup — STREAMING multimodal ingest closing the

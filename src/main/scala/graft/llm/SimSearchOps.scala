@@ -223,9 +223,8 @@ object SimSearchOps extends graft.QueryModule {
   // nprobe/nlist fraction, not the plan, is the tuning surface
   private val NPROBE = 12
 
-  private[llm] def ivfIndexPath(sfDir: String): String =
-    s"${graft.Artifacts.root}/graft_ivf_index/" +
-      graft.Artifacts.key("v1", sfDir, "embeddings.parquet")
+  /** The source every IVF artifact is keyed on. */
+  private val Emb = "embeddings.parquet"
 
   /** Persist the IVF index ONCE: `centroids` (cell, double[] center) and
     * `cells` — the corpus REWRITTEN `partitionBy(cell)`, the piece that
@@ -245,9 +244,7 @@ object SimSearchOps extends graft.QueryModule {
     import spark.implicits._
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
-    val path = ivfIndexPath(sfDir)
-    val target = graft.flow.DirTarget(path)
-    if (!target.exists) target.atomicWrite { tmp =>
+    graft.Artifacts.ensure("graft_ivf_index/", sfDir, Emb, "v1") { tmp =>
       val emb = graft.Tables.embeddings(spark, sfDir)
         .withColumn("ne", normalizeUdf($"embedding"))
         .withColumn("fv", array_to_vector($"ne".cast("array<double>")))
@@ -264,8 +261,6 @@ object SimSearchOps extends graft.QueryModule {
         .toDF("cell", "center")
         .coalesce(1).write.mode("overwrite").parquet(s"$tmp/centroids")
     }
-    graft.Artifacts.sweepStale(path)
-    path
   }
 
   /** IVF-style approximate top-k over the PERSISTED index: each query
@@ -320,13 +315,12 @@ object SimSearchOps extends graft.QueryModule {
       .orderBy($"q_id", $"rk")
   }
 
+  private val IvfIncrBase = "graft_ivf_incr_base/"
+  private val IvfIncrDelta = "graft_ivf_incr_delta/"
   private[llm] def ivfIncrBasePath(sfDir: String): String =
-    s"${graft.Artifacts.root}/graft_ivf_incr_base/" +
-      graft.Artifacts.key("v1", sfDir, "embeddings.parquet")
-
+    graft.Artifacts.path(IvfIncrBase, sfDir, Emb, "v1")
   private[llm] def ivfIncrDeltaPath(sfDir: String): String =
-    s"${graft.Artifacts.root}/graft_ivf_incr_delta/" +
-      graft.Artifacts.key("v1", sfDir, "embeddings.parquet")
+    graft.Artifacts.path(IvfIncrDelta, sfDir, Emb, "v1")
 
   /** q_simsearch_incremental_ivf — BATCH-ADD to a persisted IVF index
     * (the standard IVF add path: assign new vectors to their nearest
@@ -358,9 +352,7 @@ object SimSearchOps extends graft.QueryModule {
     import spark.implicits._
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
-    val basePath = ivfIncrBasePath(sfDir)
-    val baseTarget = graft.flow.DirTarget(basePath)
-    if (!baseTarget.exists) baseTarget.atomicWrite { tmp =>
+    val basePath = graft.Artifacts.ensure(IvfIncrBase, sfDir, Emb, "v1") { tmp =>
       val base = graft.Tables.embeddings(spark, sfDir)
         .filter(pmod($"vec_id", lit(20L)) =!= 7L)
         .withColumn("ne", normalizeUdf($"embedding"))
@@ -378,7 +370,6 @@ object SimSearchOps extends graft.QueryModule {
         .toDF("cell", "center")
         .coalesce(1).write.mode("overwrite").parquet(s"$tmp/centroids")
     }
-    graft.Artifacts.sweepStale(basePath)
     // NLIST rows — the coarse quantizer IS a driver-side constant
     val centroids = spark.read.parquet(s"$basePath/centroids")
       .collect().map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
@@ -407,19 +398,17 @@ object SimSearchOps extends graft.QueryModule {
       centroids.flatten.foldLeft(1125899906842597L)((a, d) =>
         a * 31L + java.lang.Double.doubleToLongBits(d)))
     val deltaPath = ivfIncrDeltaPath(sfDir)
-    val deltaTarget = graft.flow.DirTarget(deltaPath)
     val genFile = java.nio.file.Paths.get(s"$deltaPath/base_gen")
-    if (deltaTarget.exists &&
+    if (new java.io.File(deltaPath).isDirectory &&
         (!java.nio.file.Files.exists(genFile) ||
           new String(java.nio.file.Files.readAllBytes(genFile),
             "UTF-8").trim != baseGen)) {
       // stale delta from a previous base generation — drop and re-add
-      val dir = java.nio.file.Paths.get(deltaPath)
-      java.nio.file.Files.walk(dir)
+      java.nio.file.Files.walk(java.nio.file.Paths.get(deltaPath))
         .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
         .forEach(f => java.nio.file.Files.deleteIfExists(f))
     }
-    if (!deltaTarget.exists) deltaTarget.atomicWrite { tmp =>
+    graft.Artifacts.ensure(IvfIncrDelta, sfDir, Emb, "v1") { tmp =>
       // the add: new batch only — the base corpus is NOT re-read
       graft.Tables.embeddings(spark, sfDir)
         .filter(pmod($"vec_id", lit(20L)) === 7L)
@@ -434,7 +423,6 @@ object SimSearchOps extends graft.QueryModule {
         java.nio.file.Paths.get(s"$tmp/base_gen"),
         baseGen.getBytes("UTF-8"))
     }
-    graft.Artifacts.sweepStale(deltaPath)
     val queries = graft.Tables.embeddings(spark, sfDir)
       .filter($"vec_id" < 10)
       .select($"vec_id".as("q_id"), $"embedding".as("q_e"),

@@ -123,22 +123,14 @@ object SpanDedup extends graft.QueryModule {
     * pre-distinct, a fraction of corpus bytes, built once per corpus
     * generation and committed atomically. In production each accepted
     * batch appends its new spans. */
-  private[llm] def corpusSpanIndexPath(sfDir: String): String =
-    s"${graft.Artifacts.root}/graft_span_index/" +
-      graft.Artifacts.key("v1", sfDir, "documents.parquet")
-
   private[llm] def buildCorpusSpanIndex(spark: SparkSession, sfDir: String): String = {
     import spark.implicits._
-    val path = corpusSpanIndexPath(sfDir)
-    val target = graft.flow.DirTarget(path)
-    if (!target.exists) target.atomicWrite { tmp =>
+    graft.Artifacts.ensure("graft_span_index/", sfDir, "documents.parquet", "v1") { tmp =>
       windows(graft.Tables.documents(spark, sfDir)
           .filter($"doc_id" % 3 =!= 0))
         .select($"span").distinct()
         .write.mode("overwrite").parquet(tmp)
     }
-    graft.Artifacts.sweepStale(path)
-    path
   }
 
   /** q_dedup_span_incremental — the continuous-ingestion form: a new

@@ -115,8 +115,6 @@ object AggOps extends graft.QueryModule {
       .orderBy($"l_returnflag", $"l_linestatus")
   }
 
-  /** Exact interpolated percentiles (Spark `percentile` == DuckDB
-    * `quantile_cont`: linear interpolation between closest ranks). */
   /** Sketch-based quantiles (approx_percentile — Greenwald-Khanna with
     * bounded accuracy=10000): the 100 TB path where an exact percentile's
     * per-group sort buffer is unaffordable; the sketch is mergeable
@@ -135,6 +133,8 @@ object AggOps extends graft.QueryModule {
       .orderBy($"l_returnflag")
   }
 
+  /** Exact interpolated percentiles (Spark `percentile` == DuckDB
+    * `quantile_cont`: linear interpolation between closest ranks). */
   def percentiles(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     graft.Tables.lineitem(spark, sfDir)

@@ -19,43 +19,6 @@ object EvalOps extends graft.QueryModule {
 
   private def micro(c: Column): Column = floor(c * 1e6).cast("long") / 1e6
 
-  /** q_ml_bradley_terry — Bradley–Terry preference ratings via the MM
-    * algorithm (Hunter, Annals of Statistics 2004, eq. 1.4): pairwise
-    * duels are derived from the data (two suppliers sharing an order
-    * compete on exact-cents line revenue; ties are dropped), collapsed
-    * once into the per-pair win matrix, and 6 fixed MM rounds iterate
-    * p_i ← W_i / Σ_j n_ij/(p_i+p_j). Ratings are scale-free, so
-    * normalization happens ONCE at readout (divide by the mean) — no
-    * per-round scalar frame. Scale: duels are emitted MAP-side per
-    * order bucket ([[orderDuelsUdf]], in place of the (l_orderkey)
-    * shuffle self-join: one lineitem exchange instead of two plus the
-    * join), the win matrix is bounded
-    * by the supplier domain squared (observed pairs only), and every MM
-    * round joins
-    * that matrix to the ≤|supplier| rating frame (broadcast) — round
-    * count is constant, each round localCheckpointed to cut lineage
-    * (the kcore discipline), COALESCED to 1 partition first: the frame
-    * is ≤|supplier| rows, and materializing it as 32 shuffle
-    * partitions made checkpoint task overhead the dominant cost of
-    * the whole query (8.5 s at sf0.1, the r14 suite's slowest). The
-    * corpus is scanned exactly once. The readout ships the PER-ROUND
-    * convergence curve — conv_d2/conv_d4/conv_max_delta = the max
-    * normalized rating move at rounds 2, 4, and 6 — which is what cut
-    * the budget from the r15 8 rounds: the iterate contracts at a
-    * measured rate ≈0.55/round on this fixture (d: 0.058 → 0.017 →
-    * 0.005), so the geometric tail past round 6 is ≈1.2·conv_max_delta
-    * ≈ 0.6% of the mean rating — converged at the rating scale the
-    * 1e-6-floored readout serves, while the curve is exactly the
-    * evidence an operator needs to BUY more rounds when a tighter
-    * threshold matters (full rank stability over 1000 near-tied
-    * suppliers is not reachable by any small fixed budget: measured,
-    * rounds 8 and 16 still disagree on 400+ positions, because
-    * adjacent ratings sit closer than the remaining drift — ship the
-    * curve, not a false "converged" flag). 100 TB caveat:
-    * the per-round broadcast is |competitor-domain|-sized — right for
-    * catalog-bounded domains like suppliers; for an unbounded domain
-    * past spark.sql.autoBroadcastJoinThreshold, drop the broadcast()
-    * hints and let the rating join shuffle on s/o instead. */
   /** All (si < sj, wi, wj) duels of ONE order's line list, emitted
     * MAP-side (r18): per-supplier exact-cents totals are summed inside
     * the bucket and tie pairs dropped — replaces the (l_orderkey)
@@ -93,6 +56,43 @@ object EvalOps extends graft.QueryModule {
       out.result()
     })
 
+  /** q_ml_bradley_terry — Bradley–Terry preference ratings via the MM
+    * algorithm (Hunter, Annals of Statistics 2004, eq. 1.4): pairwise
+    * duels are derived from the data (two suppliers sharing an order
+    * compete on exact-cents line revenue; ties are dropped), collapsed
+    * once into the per-pair win matrix, and 6 fixed MM rounds iterate
+    * p_i ← W_i / Σ_j n_ij/(p_i+p_j). Ratings are scale-free, so
+    * normalization happens ONCE at readout (divide by the mean) — no
+    * per-round scalar frame. Scale: duels are emitted MAP-side per
+    * order bucket ([[orderDuelsUdf]], in place of the (l_orderkey)
+    * shuffle self-join: one lineitem exchange instead of two plus the
+    * join), the win matrix is bounded
+    * by the supplier domain squared (observed pairs only), and every MM
+    * round joins
+    * that matrix to the ≤|supplier| rating frame (broadcast) — round
+    * count is constant, each round localCheckpointed to cut lineage
+    * (the kcore discipline), COALESCED to 1 partition first: the frame
+    * is ≤|supplier| rows, and materializing it as 32 shuffle
+    * partitions made checkpoint task overhead the dominant cost of
+    * the whole query (8.5 s at sf0.1, the r14 suite's slowest). The
+    * corpus is scanned exactly once. The readout ships the PER-ROUND
+    * convergence curve — conv_d2/conv_d4/conv_max_delta = the max
+    * normalized rating move at rounds 2, 4, and 6 — which is what cut
+    * the budget from the r15 8 rounds: the iterate contracts at a
+    * measured rate ≈0.55/round on this fixture (d: 0.058 → 0.017 →
+    * 0.005), so the geometric tail past round 6 is ≈1.2·conv_max_delta
+    * ≈ 0.6% of the mean rating — converged at the rating scale the
+    * 1e-6-floored readout serves, while the curve is exactly the
+    * evidence an operator needs to BUY more rounds when a tighter
+    * threshold matters (full rank stability over 1000 near-tied
+    * suppliers is not reachable by any small fixed budget: measured,
+    * rounds 8 and 16 still disagree on 400+ positions, because
+    * adjacent ratings sit closer than the remaining drift — ship the
+    * curve, not a false "converged" flag). 100 TB caveat:
+    * the per-round broadcast is |competitor-domain|-sized — right for
+    * catalog-bounded domains like suppliers; for an unbounded domain
+    * past spark.sql.autoBroadcastJoinThreshold, drop the broadcast()
+    * hints and let the rating join shuffle on s/o instead. */
   def bradleyTerry(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val duels = graft.Tables.lineitem(spark, sfDir)

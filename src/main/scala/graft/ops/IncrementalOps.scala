@@ -63,26 +63,18 @@ object IncrementalOps extends graft.QueryModule {
   private def withDay(ev: DataFrame): DataFrame =
     ev.withColumn("day", to_date(col("ts")))
 
-  private[ops] def aggIndexPath(sfDir: String): String =
-    s"${graft.Artifacts.root}/graft_dayagg/" +
-      graft.Artifacts.key("v1", sfDir, "events.parquet")
-
   /** Persist the HISTORY rollup (all days strictly before the newest) —
     * in production this is yesterday's agg table; the newest day plays
     * the arriving batch. The 1-row max-day collect is bounded by
     * construction (the upsert-sink precedent). */
   private[ops] def buildAggIndex(spark: SparkSession, sfDir: String): String = {
     import spark.implicits._
-    val path = aggIndexPath(sfDir)
-    val target = graft.flow.DirTarget(path)
-    if (!target.exists) target.atomicWrite { tmp =>
+    graft.Artifacts.ensure("graft_dayagg/", sfDir, "events.parquet", "v1") { tmp =>
       val ev = withDay(graft.Tables.events(spark, sfDir))
       val last = ev.agg(max($"day")).collect()(0).getDate(0)
       dailyAgg(ev.filter($"day" < lit(last)))
         .write.mode("overwrite").parquet(tmp)
     }
-    graft.Artifacts.sweepStale(path)
-    path
   }
 
   /** q_agg_incremental — merge(history artifact, missing-day batch);

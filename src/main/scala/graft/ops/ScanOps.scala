@@ -27,16 +27,6 @@ object ScanOps extends graft.QueryModule {
   private lazy val runLocalDir: String =
     java.nio.file.Files.createTempDirectory("graft_run_").toString
 
-  /** Content-keyed artifact dir for artifacts that are REUSED across runs
-    * (dppJoin's fact/dim tables) rather than rewritten unconditionally
-    * like the roundtrip dirs: Artifacts.key folds in the source file's
-    * (length, mtime), so a fixture regenerated at the same path can never
-    * silently serve a stale artifact. */
-  private def cachedArtifactDir(tag: String, sfDir: String,
-                                source: String): String =
-    s"${graft.Artifacts.root}/graft_roundtrip/" +
-      s"${tag}_${graft.Artifacts.key("v1", sfDir, source)}"
-
   /** Explicit-schema parquet scan: schema declared, not inferred; Catalyst
     * prunes to the 4 projected columns (check ReadSchema in explain). */
   def scanParquet(spark: SparkSession, sfDir: String): DataFrame = {
@@ -490,16 +480,17 @@ object ScanOps extends graft.QueryModule {
     * dynamicpruning PartitionFilter is pinned in PlanSpec and the result
     * is fully oracled (pruning never changes the answer). Both sides
     * are one-time parquet artifacts so the pruning acts on real
-    * directories, not an in-memory relation. */
+    * directories, not an in-memory relation. The fact is REUSED across
+    * runs (content-keyed, unlike the roundtrip dirs, which are
+    * rewritten on every run). */
   def dppJoin(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val factPath = cachedArtifactDir("events_by_type", sfDir, "events.parquet")
-    if (!new java.io.File(factPath + "/_SUCCESS").exists()) {
+    val factPath = graft.Artifacts.ensure("graft_roundtrip/events_by_type_",
+        sfDir, "events.parquet", "v1") { tmp =>
       graft.Tables.events(spark, sfDir)
         .select($"event_id", $"user_id", $"value", $"event_type")
-        .write.mode("overwrite").partitionBy("event_type").parquet(factPath)
+        .write.mode("overwrite").partitionBy("event_type").parquet(tmp)
     }
-    graft.Artifacts.sweepStale(factPath) // retire prior fixture generations
     // the dim's CONTENT is this 5-row literal, not anything derived from
     // the source data — a content key can't protect it, and rewriting a
     // SHARED dir every call would let one run's overwrite race another

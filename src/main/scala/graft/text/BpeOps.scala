@@ -92,15 +92,9 @@ object BpeOps extends graft.QueryModule {
     * the train-once/apply-everywhere shape: learned once per corpus
     * generation (content-keyed like the shingle/fp/pair indexes),
     * committed atomically, read by both declared queries. */
-  private[text] def mergeIndexPath(sfDir: String): String =
-    s"${graft.Artifacts.root}/graft_bpe_merges/" +
-      graft.Artifacts.key("v1", sfDir, "documents.parquet")
-
   private[text] def buildMergeIndex(spark: SparkSession, sfDir: String): String = {
     import spark.implicits._
-    val path = mergeIndexPath(sfDir)
-    val target = graft.flow.DirTarget(path)
-    if (!target.exists) target.atomicWrite { tmp =>
+    graft.Artifacts.ensure("graft_bpe_merges/", sfDir, "documents.parquet", "v1") { tmp =>
       val words = graft.Tables.documents(spark, sfDir)
         .select(explode(split($"text", " ")).as("word"))
         .filter(length($"word") > 0)
@@ -110,8 +104,6 @@ object BpeOps extends graft.QueryModule {
         .coalesce(1)
         .write.mode("overwrite").parquet(tmp)
     }
-    graft.Artifacts.sweepStale(path)
-    path
   }
 
   /** q_text_bpe_merges — the first 10 BPE merges learned from the

@@ -45,16 +45,10 @@ object SearchOps extends graft.QueryModule {
   private[text] val Terms = Seq("vector", "stream", "hash")
   private val Buckets = 64
 
-  private[text] def indexPath(sfDir: String): String =
-    s"${graft.Artifacts.root}/graft_postings/" +
-      graft.Artifacts.key("v1", sfDir, "documents.parquet")
-
   /** Build (or reuse) the inverted-index artifact. */
   private[text] def buildIndex(spark: SparkSession, sfDir: String): String = {
     import spark.implicits._
-    val path = indexPath(sfDir)
-    val target = graft.flow.DirTarget(path)
-    if (!target.exists) target.atomicWrite { tmp =>
+    graft.Artifacts.ensure("graft_postings/", sfDir, "documents.parquet", "v1") { tmp =>
       val toks = graft.Tables.documents(spark, sfDir)
         .select($"doc_id", split($"text", " ").as("t"))
         .select($"doc_id", size($"t").as("dl"), explode($"t").as("tok"))
@@ -66,8 +60,6 @@ object SearchOps extends graft.QueryModule {
       toks.groupBy($"doc_id").agg(count(lit(1)).as("dl"))
         .write.mode("overwrite").parquet(s"$tmp/docstats")
     }
-    graft.Artifacts.sweepStale(path)
-    path
   }
 
   /** The terms' bucket ids, computed through Spark's own xxhash64 (a

@@ -587,9 +587,6 @@ object TextOps extends graft.QueryModule {
       .orderBy($"doc_id", $"sent_idx")
   }
 
-  /** one tight pass; duplicates kept (counts need them). Same rationale
-    * as shinglesUdf: a transform/element_at column tree re-inlines the
-    * aliased split into every element under pushdown. */
   /** consecutive-token 3-grams, duplicates KEPT (repetition metrics
     * need the multiset; DedupOps.shinglesUdf dedupes and can't be
     * shared) — same one-tight-pass rationale as bigramsUdf. */
@@ -602,6 +599,9 @@ object TextOps extends graft.QueryModule {
     }
   })
 
+  /** one tight pass; duplicates kept (counts need them). Same rationale
+    * as shinglesUdf: a transform/element_at column tree re-inlines the
+    * aliased split into every element under pushdown. */
   private val bigramsUdf = udf((text: String) => {
     if (text == null) Array.empty[String]
     else {
@@ -748,27 +748,6 @@ object TextOps extends graft.QueryModule {
         micro(vxy * vxy / (vxx * vyy))).as("r2"))
   }
 
-  /** q_text_rake — RAKE keyword extraction (Rose et al., "Automatic
-    * Keyword Extraction from Individual Documents", 2010), corpus-wide:
-    * candidate phrases are the maximal stopword-free token runs
-    * (delimiters = the pinned NLTK list, the q_text_clean filter set);
-    * each word scores deg(w)/freq(w) where freq counts candidate
-    * occurrences and deg sums the lengths of the phrases containing
-    * them (hub words inside long collocations outrank isolated
-    * frequent words); a phrase scores the sum of its words' scores.
-    * Top-20 phrases by (score, phrase). Numerics: deg/freq is ONE
-    * double division per word occurrence, round(,6)::DECIMAL, exact
-    * DECIMAL phrase sums, cast once at the readout (identical phrase
-    * text ⇒ identical word multiset ⇒ identical score, so the
-    * cross-doc collapse can take max(score) without ambiguity).
-    *
-    * Scale: segmentation and phrase lengths are emitted MAP-side from
-    * each doc's own token array ([[rakeSegUdf]], r18 — the previous
-    * shape paid a corpus exchange + two per-doc window sorts for
-    * values derivable from the array in one pass); word stats are one
-    * hash aggregation over candidate occurrences; the final top-20 is
-    * a TakeOrderedAndProject heap. Linear in corpus tokens end to
-    * end. */
   /** (pid, pos, tok, phrase_len) of every CANDIDATE (non-stopword)
     * token of one doc, emitted map-side: pid = number of stopword
     * delimiters before the token (the running sum(is_stop) the
@@ -801,6 +780,27 @@ object TextOps extends graft.QueryModule {
     }
   })
 
+  /** q_text_rake — RAKE keyword extraction (Rose et al., "Automatic
+    * Keyword Extraction from Individual Documents", 2010), corpus-wide:
+    * candidate phrases are the maximal stopword-free token runs
+    * (delimiters = the pinned NLTK list, the q_text_clean filter set);
+    * each word scores deg(w)/freq(w) where freq counts candidate
+    * occurrences and deg sums the lengths of the phrases containing
+    * them (hub words inside long collocations outrank isolated
+    * frequent words); a phrase scores the sum of its words' scores.
+    * Top-20 phrases by (score, phrase). Numerics: deg/freq is ONE
+    * double division per word occurrence, round(,6)::DECIMAL, exact
+    * DECIMAL phrase sums, cast once at the readout (identical phrase
+    * text ⇒ identical word multiset ⇒ identical score, so the
+    * cross-doc collapse can take max(score) without ambiguity).
+    *
+    * Scale: segmentation and phrase lengths are emitted MAP-side from
+    * each doc's own token array ([[rakeSegUdf]], r18 — the previous
+    * shape paid a corpus exchange + two per-doc window sorts for
+    * values derivable from the array in one pass); word stats are one
+    * hash aggregation over candidate occurrences; the final top-20 is
+    * a TakeOrderedAndProject heap. Linear in corpus tokens end to
+    * end. */
   def rake(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val seg = graft.Tables.documents(spark, sfDir)

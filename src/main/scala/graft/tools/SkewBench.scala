@@ -58,13 +58,13 @@ object SkewBench {
   /** Planted-hot-key probe slice: hotTenths/10 of event rows remapped
     * to [[HotUser]], replicated ×amplify, persisted as parquet so every
     * variant pays the same realistic scan (content-keyed — a fixture
-    * regen invalidates it). */
+    * regen invalidates it; the variant is part of the name, so
+    * building one variant never retires another). */
   def slicePath(spark: SparkSession, sfDir: String,
                 hotTenths: Int, amplify: Int): String = {
     import spark.implicits._
-    val key = graft.Artifacts.key("skew1", sfDir, "events.parquet")
-    val path = s"${graft.Artifacts.root}/graft_skew_${key}_${hotTenths}_$amplify"
-    if (!new java.io.File(s"$path/_SUCCESS").exists) {
+    graft.Artifacts.ensure(s"graft_skew_${hotTenths}_${amplify}_", sfDir,
+        "events.parquet", "skew1") { tmp =>
       graft.Tables.events(spark, sfDir)
         .select($"event_id",
           when(pmod($"event_id", lit(10L)) < hotTenths, lit(HotUser))
@@ -72,9 +72,8 @@ object SkewBench {
           $"value")
         .withColumn("rep", explode(sequence(lit(1), lit(amplify))))
         .drop("rep")
-        .write.mode("overwrite").parquet(path)
+        .write.mode("overwrite").parquet(tmp)
     }
-    path
   }
 
   /** Runs one variant under the given session confs (restored after),

@@ -18,8 +18,7 @@ object Smoke {
     spark.sparkContext.setLogLevel("ERROR")
     val n = graft.SparkEntry.entry(spark).count()
     println(s"entry rows: $n (smoke ${if (n > 0) "PASS" else "FAIL"})")
-    val dangling = graft.SparkEntry.oracleSql.keySet --
-      graft.SparkEntry.queries.keySet
+    val dangling = Counts.orphanOracles
     require(dangling.isEmpty, s"oracleSql keys without a query: $dangling")
     println(s"queries: ${graft.SparkEntry.queries.size}, " +
       s"oracles: ${graft.SparkEntry.oracleSql.size}")

@@ -36,4 +36,14 @@ class SkewBenchSpec extends SparkTestBase {
     assert(salted.maxRec < (plain.maxRec * 7L) / 10L,
       s"salting did not split the hot task:\n${plain.line}\n${salted.line}")
   }
+
+  test("slice variants built at one sfDir all survive") {
+    // each (hotTenths, amplify) variant is its own artifact family: the
+    // stale-generation sweep of one build never retires another variant
+    val a = SkewBench.slicePath(spark, sf0001, hotTenths = 1, amplify = 1)
+    val b = SkewBench.slicePath(spark, sf0001, hotTenths = 2, amplify = 1)
+    assert(a != b)
+    Seq(a, b).foreach(p =>
+      assert(graft.flow.DirTarget(p).exists, s"slice variant missing: $p"))
+  }
 }
