@@ -1,6 +1,6 @@
 package graft.flow
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The LLM-corpus curation pipeline on the graft orchestrator — the
@@ -189,20 +189,11 @@ object CorpusFlow {
       else Seq(IngestBatch(cfg, i), UrlIndex(cfg, i - 1))
     val output: DirTarget = DirTarget(s"${cfg.baseDir}/batch_$i/url_deduped")
     def run(spark: SparkSession): Unit = {
-      import org.apache.spark.sql.expressions.Window
       val batch = Committed.parquet(spark, requires.head.output.uri)
         .withColumn("curl", graft.llm.DedupOps.canonicalUrl(
           graft.llm.DedupOps.syntheticCrawlUrl(
             col("doc_id"), col("source"), col("lang"))))
-      val withinFirst = batch.withColumn("rn",
-          row_number().over(Window.partitionBy(col("curl"))
-            .orderBy(col("doc_id"))))
-        .filter(col("rn") === 1).drop("rn")
-      val kept =
-        if (i == 0) withinFirst
-        else withinFirst.join(
-          Committed.parquet(spark, requires(1).output.uri), Seq("curl"),
-          "left_anti")
+      val kept = firstSeen(spark, requires, "curl", batch)
       output.atomicWrite { tmp => kept.write.parquet(tmp) }
     }
   }
@@ -217,12 +208,7 @@ object CorpusFlow {
       else Seq(UrlDedupBatch(cfg, i), UrlIndex(cfg, i - 1))
     val output: DirTarget = DirTarget(s"${cfg.baseDir}/batch_$i/url_index")
     def run(spark: SparkSession): Unit = {
-      val batchUrls = Committed.parquet(spark, requires.head.output.uri)
-        .select(col("curl"))
-      val newIndex =
-        if (i == 0) batchUrls.distinct()
-        else Committed.parquet(spark, requires(1).output.uri)
-          .union(batchUrls).distinct()
+      val newIndex = extendIndex(spark, requires, "curl")
       output.atomicWrite { tmp => newIndex.write.parquet(tmp) }
     }
   }
@@ -279,17 +265,9 @@ object CorpusFlow {
       else Seq(QualityGate(cfg, i), FpIndex(cfg, i - 1))
     val output: DirTarget = DirTarget(s"${cfg.baseDir}/batch_$i/deduped")
     def run(spark: SparkSession): Unit = {
-      import org.apache.spark.sql.expressions.Window
       val batch = Committed.parquet(spark, requires.head.output.uri)
         .withColumn("fp", graft.llm.DedupOps.contentFp(col("text")))
-      val withinFirst = batch.withColumn("rn",
-          row_number().over(Window.partitionBy(col("fp"))
-            .orderBy(col("doc_id"))))
-        .filter(col("rn") === 1).drop("rn")
-      val kept =
-        if (i == 0) withinFirst
-        else withinFirst.join(
-          Committed.parquet(spark, requires(1).output.uri), Seq("fp"), "left_anti")
+      val kept = firstSeen(spark, requires, "fp", batch)
       output.atomicWrite { tmp => kept.write.parquet(tmp) }
     }
   }
@@ -306,14 +284,36 @@ object CorpusFlow {
       else Seq(DedupBatch(cfg, i), FpIndex(cfg, i - 1))
     val output: DirTarget = DirTarget(s"${cfg.baseDir}/batch_$i/fp_index")
     def run(spark: SparkSession): Unit = {
-      val batchFps = Committed.parquet(spark, requires.head.output.uri)
-        .select(col("fp"))
-      val newIndex =
-        if (i == 0) batchFps.distinct()
-        else Committed.parquet(spark, requires(1).output.uri)
-          .union(batchFps).distinct()
+      val newIndex = extendIndex(spark, requires, "fp")
       output.atomicWrite { tmp => newIndex.write.parquet(tmp) }
     }
+  }
+
+  /** The first-seen-wins step of an i-chain dedup (URL or content fp):
+    * per `key` the batch's smallest doc_id survives, then keys already
+    * claimed by the cumulative index of batches 0..i-1 (the task's
+    * second requirement, absent for batch 0) are anti-joined away. */
+  private def firstSeen(spark: SparkSession, requires: Seq[Task],
+                        key: String, batch: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val withinFirst = batch.withColumn("rn",
+        row_number().over(Window.partitionBy(col(key))
+          .orderBy(col("doc_id"))))
+      .filter(col("rn") === 1).drop("rn")
+    requires.lift(1).fold(withinFirst)(prior => withinFirst.join(
+      Committed.parquet(spark, prior.output.uri), Seq(key), "left_anti"))
+  }
+
+  /** The cumulative one-column `key` index after batch i: the prior
+    * index (the second requirement, absent for batch 0) unioned with
+    * the keys of the survivors the first requirement just wrote — read
+    * back, never recomputed. */
+  private def extendIndex(spark: SparkSession, requires: Seq[Task],
+                          key: String): DataFrame = {
+    val keys = Committed.parquet(spark, requires.head.output.uri)
+      .select(col(key))
+    requires.lift(1).fold(keys.distinct())(prior =>
+      Committed.parquet(spark, prior.output.uri).union(keys).distinct())
   }
 
   /** THE shared shingle-fingerprint recipe: doc columns + `sh` (the
@@ -324,8 +324,7 @@ object CorpusFlow {
     * shfp, and a one-site edit (separator, sort, extra key column)
     * would otherwise make batch i+1 silently stop matching index i.
     * Docs with no shingles (< 3 tokens) are absent from the result. */
-  private[flow] def withShingleFp(df: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame =
+  private[flow] def withShingleFp(df: DataFrame): DataFrame =
     df.withColumn("sh", graft.llm.DedupOps.shingleCol(col("text")))
       .filter(size(col("sh")) > 0)
       .withColumn("shfp",
@@ -333,8 +332,7 @@ object CorpusFlow {
 
   /** The 21-band LSH rows of a reps frame — shared by both index
     * writers for the same drift-lockstep reason as [[withShingleFp]]. */
-  private[flow] def bandsOf(reps: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame =
+  private[flow] def bandsOf(reps: DataFrame): DataFrame =
     reps.select(col("shfp"),
         posexplode(graft.llm.DedupOps.bandCol(col("sh"))))
       .withColumnRenamed("pos", "band")
@@ -373,8 +371,7 @@ object CorpusFlow {
       val bands = reps.select(col("shfp"), col("rep_id"),
           posexplode(DedupOps.bandCol(col("sh"))))
         .withColumnRenamed("pos", "band").withColumnRenamed("col", "bandhash")
-      def verify(cand: org.apache.spark.sql.DataFrame,
-                 otherSh: org.apache.spark.sql.DataFrame) =
+      def verify(cand: DataFrame, otherSh: DataFrame) =
         cand.join(reps.select(col("shfp"), col("sh").as("a_sh")), Seq("shfp"))
           .join(otherSh, Seq("o_shfp"))
           .filter(size(array_intersect(col("a_sh"), col("o_sh")))
@@ -698,10 +695,10 @@ object CorpusFlow {
     * cross-batch state is [[TokenLedger]]'s 1-row cumulative total —
     * batch i's cumsum starts at the ledger of i-1, so sequences tile
     * ACROSS batches without ever re-reading an earlier batch. Within
-    * the batch the running sum uses the same 64-range two-level
-    * decomposition as the query (no keyless window over batch data;
-    * the 1-row ledger read and the 1-row max-id agg are the reviewed
-    * bounded collects). */
+    * the batch the running sum is the query's [[graft.ops.Prefix]]
+    * running sum over 64 doc_id ranges (no keyless window over batch
+    * data; the 1-row ledger read and the 1-row max-id agg are the
+    * reviewed bounded collects). */
   final case class PackBatch(cfg: CorpusConfig, i: Int) extends Task {
     override def name = s"PackBatch($i)"
     override def requires: Seq[Task] =
@@ -709,7 +706,6 @@ object CorpusFlow {
       else Seq(MixBatch(cfg, i), TokenLedger(cfg, i - 1))
     val output: DirTarget = DirTarget(s"${cfg.baseDir}/batch_$i/packed")
     def run(spark: SparkSession): Unit = {
-      import org.apache.spark.sql.expressions.Window
       val budget = 512L
       val offset =
         if (i == 0) 0L
@@ -729,16 +725,9 @@ object CorpusFlow {
         } else {
           val width = maxRow.getLong(0) / 64L + 1L
           val ranged = toks.withColumn("rng", expr(s"doc_id div $width"))
-          val local = ranged.withColumn("cum_in", sum(col("n_toks"))
-            .over(Window.partitionBy(col("rng")).orderBy(col("doc_id"))))
-          val offs = ranged.groupBy(col("rng"))
-            .agg(sum(col("n_toks")).as("t"))
-            .withColumn("off", coalesce(
-              sum(col("t")).over(Window.orderBy(col("rng"))
-                .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-            .select(col("rng"), col("off"))
-          local.join(broadcast(offs), Seq("rng"))
-            .withColumn("cum_end", col("cum_in") + col("off") + offset)
+          graft.ops.Prefix.running(ranged, Nil, "rng", Seq(col("doc_id")),
+              Some(col("n_toks")), "cum")
+            .withColumn("cum_end", col("cum") + offset)
             // zero-token docs occupy NO sequence (the declared
             // q_ml_pack_sequences semantics): null ids, kept as rows
             // so the funnel's packed == mixed count invariant holds
@@ -746,7 +735,7 @@ object CorpusFlow {
               expr(s"(cum_end - n_toks) div $budget")))
             .withColumn("last_seq", when(col("n_toks") > 0,
               expr(s"(cum_end - 1) div $budget")))
-            .drop("rng", "cum_in", "off", "cum_end")
+            .drop("rng", "cum", "cum_end")
             .write.parquet(tmp)
         }
       }

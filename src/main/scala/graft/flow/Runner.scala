@@ -51,18 +51,17 @@ object Runner {
   def historySink(path: String): EventHandler = {
     val file = java.nio.file.Paths.get(path)
     Option(file.getParent).foreach(java.nio.file.Files.createDirectories(_))
-    def esc(s: String): String =
-      s.replace("\\", "\\\\").replace("\"", "\\\"")
-        .replace("\n", "\\n").replace("\r", "\\r")
+    def named(event: String, t: String): String =
+      s""""event":"$event","task":${graft.Verify.jsonString(t)}"""
     ev => {
       val fields = Seq(s""""ts_ms":${System.currentTimeMillis()}""") ++ (ev match {
-        case TaskEvent.Start(t) => Seq(s""""event":"start","task":"${esc(t)}"""")
+        case TaskEvent.Start(t) => Seq(named("start", t))
         case TaskEvent.Success(t, ms) =>
-          Seq(s""""event":"success","task":"${esc(t)}"""", s""""millis":$ms""")
+          Seq(named("success", t), s""""millis":$ms""")
         case TaskEvent.Failure(t, e) =>
-          Seq(s""""event":"failure","task":"${esc(t)}"""",
-            s""""error":"${esc(String.valueOf(e.getMessage))}"""")
-        case TaskEvent.Skipped(t) => Seq(s""""event":"skipped","task":"${esc(t)}"""")
+          Seq(named("failure", t), "\"error\":" +
+            graft.Verify.jsonString(String.valueOf(e.getMessage)))
+        case TaskEvent.Skipped(t) => Seq(named("skipped", t))
       })
       val line = fields.mkString("{", ",", "}") + "\n"
       file.synchronized {

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ops.AggOps.micro
 
 /** Graph analytics over the near-dup pair graph beyond connected
   * components: PageRank-style centrality, the classic "which node is the
@@ -219,8 +220,6 @@ object GraphOps extends graft.QueryModule {
       .union(pairs.select($"b_id".as("src"), $"a_id".as("dst")))
       .localCheckpoint() // feeds degrees + both moment joins
     val deg = edges.groupBy($"src").agg(count(lit(1)).as("deg"))
-    def micro(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      floor(c * 1e6).cast("long") / 1e6
     val n = deg.agg(count(lit(1)).as("n_nodes")) // 1 row
     edges
       .join(deg.select($"src", $"deg".as("dj")), Seq("src"))
@@ -415,8 +414,6 @@ object GraphOps extends graft.QueryModule {
     val bj = joint.groupBy($"lb").agg(count(lit(1)).as("c"))
       .agg(sum(c2($"c")).as("sum_b2"), count(lit(1)).as("k4"))
     val n = joint.agg(count(lit(1)).as("n_nodes"))
-    def micro(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      floor(c * 1e6).cast("long") / 1e6
     n.crossJoin(broadcast(nij)).crossJoin(broadcast(ai))
       .crossJoin(broadcast(bj)) // four 1-row frames
       .withColumn("cn2", c2($"n_nodes"))
@@ -459,8 +456,6 @@ object GraphOps extends graft.QueryModule {
       .join(lbl.select($"node".as("b_id"), $"lbl".as("lb")), Seq("b_id"))
       .filter($"la" === $"lb")
       .groupBy($"la".as("lbl")).agg(count(lit(1)).as("e"))
-    def micro(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      floor(c * 1e6).cast("long") / 1e6
     dc.join(ec, Seq("lbl"), "left")
       .crossJoin(broadcast(m)) // 1-row edge count
       .agg(count(lit(1)).as("n_communities"),
@@ -501,8 +496,6 @@ object GraphOps extends graft.QueryModule {
       .filter($"u" < $"v") // each wedge at middle w counted once
       .join(edges.select($"a_id".as("u"), $"b_id".as("v")), Seq("u", "v"))
       .groupBy($"w").agg(count(lit(1)).as("triangles"))
-    def micro(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      floor(c * 1e6).cast("long") / 1e6
     deg.join(tri, $"src" === $"w", "left")
       .select($"src".as("node"), $"degree",
         coalesce($"triangles", lit(0L)).as("triangles"),

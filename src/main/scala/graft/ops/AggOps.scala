@@ -33,6 +33,23 @@ object AggOps extends graft.QueryModule {
   def davg(c: Column): Column =
     sum(dec(c)).cast("double") / count(c).cast("double")
 
+  /** A double readout floored to 6 dp — how a double leaves the engine
+    * so DuckDB agrees with it: its twin spells the same
+    * `CAST(floor(x * 1e6) AS BIGINT) / 1e6`, and a floor (unlike a
+    * round) has no tie to break differently. */
+  def micro(c: Column): Column = floor(c * 1e6).cast("long") / 1e6
+
+  /** The daily revenue series every time-series query reads:
+    * `(day, rev, extra…)` with rev = Σ order price in exact integer
+    * cents per order date. One partial-agg'd groupBy over orders, so
+    * the result lives on the bounded calendar domain, not the corpus. */
+  def dailyRevenue(spark: SparkSession, sfDir: String,
+                   extra: Column*): DataFrame =
+    graft.Tables.orders(spark, sfDir)
+      .select(to_date(col("o_orderdate")).as("day"),
+        (dec(col("o_totalprice")) * 100).cast("long").as("cents"))
+      .groupBy(col("day")).agg(sum(col("cents")).as("rev"), extra: _*)
+
   /** Flagship: TPC-H Q1-shaped pricing summary over lineitem.
     * Generalizes the reference's agg-free relational surface per
     * SURVEY.md §2.3 (scan→filter→agg→sort); reference evidence for the
@@ -338,29 +355,17 @@ object AggOps extends graft.QueryModule {
     *
     * Scale: a per-flag running sum over all distinct prices would
     * sort each flag in ONE partition (3 partitions for the corpus —
-    * the keyless-window trap). Instead the globalShuffle/pack_sequences
-    * two-level decomposition: prices land in 64 fixed ranges, the
-    * 3×64 per-(flag, bucket) totals frame computes prefix offsets
-    * (bounded window), and the within-bucket running sum partitions
-    * by (flag, bucket) — cum(x) = offset(bucket) + local_cum(x).
-    * Equality with the single-window DuckDB twin proves the
-    * decomposition IS the global weighted cumsum. */
+    * the keyless-window trap). Instead the [[Prefix]] running sum per
+    * flag: prices land in 64 fixed ranges, so the offsets frame is
+    * 3×64 rows. */
   def weightedMedian(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val w2 = org.apache.spark.sql.expressions.Window
     val g = graft.Tables.lineitem(spark, sfDir)
       .select($"l_returnflag".as("f"), $"l_extendedprice".as("x"),
         $"l_quantity".cast("long").as("q"))
       .groupBy($"f", $"x").agg(sum($"q").as("w"))
       .withColumn("bkt", least(floor($"x" / 2048.0).cast("long"), lit(63L)))
-    val offsets = g.groupBy($"f", $"bkt").agg(sum($"w").as("bw"))
-      .withColumn("off", coalesce(sum($"bw").over(
-        w2.partitionBy($"f").orderBy($"bkt")
-          .rowsBetween(w2.unboundedPreceding, -1)), lit(0L)))
-      .select($"f", $"bkt", $"off") // 3 x 64 bounded frame
-    val cum = g.join(offsets, Seq("f", "bkt"))
-      .withColumn("cw", $"off" + sum($"w").over(
-        w2.partitionBy($"f", $"bkt").orderBy($"x")))
+    val cum = Prefix.running(g, Seq("f"), "bkt", Seq($"x"), Some($"w"), "cw")
     val tot = g.groupBy($"f").agg(sum($"w").as("wtot"))
     cum.join(broadcast(tot), Seq("f"))
       .groupBy($"f", $"wtot")
@@ -415,7 +420,6 @@ object AggOps extends graft.QueryModule {
         sum(x).as("sx"), sum(y).as("sy"),
         sum(x * x).as("sxx"), sum(y * y).as("syy"),
         sum(x * y).as("sxy"))
-    def micro(c: Column): Column = floor(c * 1e6).cast("long") / 1e6
     val r = $"sy".cast("double") / $"sx".cast("double")
     val xb = $"sx".cast("double") / $"n"
     def cov(sab: Column, sa: Column, sb: Column): Column =
@@ -454,7 +458,6 @@ object AggOps extends graft.QueryModule {
         sum(x).as("sx"), sum(y).as("sy"),
         sum(x * x).as("sxx"), sum(y * y).as("syy"),
         sum(x * y).as("sxy"))
-    def micro(c: Column): Column = floor(c * 1e6).cast("long") / 1e6
     // centered second moments, one canonical op order on both engines
     val vxx = $"sxx".cast("double") -
       $"sx".cast("double") * $"sx".cast("double") / $"n"
@@ -495,20 +498,17 @@ object AggOps extends graft.QueryModule {
     * sqrt is IEEE-correctly-rounded in both engines (the
     * temperatureMix bridge), the transform is monotone so bucket
     * order = value order, and its width grows with |m|, which makes
-    * the dense-near-zero slope mass land in FINE buckets. Pass 1 is a
-    * map-side-combined bucket count (3M rows → ≤2·√max|m| cells);
-    * the bucket cumsum locates which 1-2 buckets hold the middle
-    * ranks; pass 2 ranks INSIDE those buckets only. (Measured at
-    * sf0.1: plain global rank window 7.4 s → full-frame per-bucket
-    * window 4.8-6.9 s → this two-pass selection is the one that
-    * actually removes the 3M-row sort from the plan.) */
+    * the dense-near-zero slope mass land in FINE buckets. Pass 1 is
+    * the [[Prefix]] offsets frame (a map-side-combined bucket count,
+    * 3M rows → ≤2·√max|m| cells), which locates the 1-2 buckets that
+    * hold the middle ranks; pass 2 ranks INSIDE those buckets only.
+    * (Measured at sf0.1: plain global rank window 7.4 s → full-frame
+    * per-bucket window 4.8-6.9 s → this two-pass selection is the one
+    * that actually removes the 3M-row sort from the plan.) */
   def theilSen(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val w2 = org.apache.spark.sql.expressions.Window
-    val daily = graft.Tables.orders(spark, sfDir)
-      .select(to_date($"o_orderdate").as("day"),
-        (dec($"o_totalprice") * 100).cast("long").as("cents"))
-      .groupBy($"day").agg(sum($"cents").as("rev"))
+    val daily = dailyRevenue(spark, sfDir)
       .localCheckpoint() // bounded day domain; feeds both join legs
     val a = daily.select($"day".as("d1"), $"rev".as("r1"))
     val b = daily.select($"day".as("d2"), $"rev".as("r2"))
@@ -529,10 +529,7 @@ object AggOps extends graft.QueryModule {
       // sqrt bucket) is the expensive part — measured 10 s when both
       // passes replay it vs 3.8 s materializing (m, bkt) once
       .localCheckpoint()
-    val bcum = slopes.groupBy($"bkt").agg(count(lit(1)).as("bw"))
-      .withColumn("off", coalesce(sum($"bw").over(
-        w2.orderBy($"bkt").rowsBetween(w2.unboundedPreceding, -1)),
-        lit(0L))) // cumsum over the ≤2·√max|m| bounded bucket frame
+    val bcum = Prefix.offsets(slopes, Nil, "bkt", None)
       .localCheckpoint() // tiny; feeds total + target filter
     val tot = bcum.agg(sum($"bw").as("n_pairs")) // 1 row
       .withColumn("k1", expr("(n_pairs + 1L) div 2L"))
@@ -544,7 +541,6 @@ object AggOps extends graft.QueryModule {
         ($"off" < $"k2" && $"off" + $"bw" >= $"k2"))
       .select($"bkt", $"off")
     val nd = daily.agg(count(lit(1)).as("n_days"))
-    def micro(c: Column): Column = floor(c * 1e6).cast("long") / 1e6
     slopes.join(broadcast(targets), Seq("bkt")) // middle buckets only
       .withColumn("cw", $"off" + row_number().over(
         w2.partitionBy($"bkt").orderBy($"m")))
@@ -585,7 +581,6 @@ object AggOps extends graft.QueryModule {
         .orderBy($"cents".desc, $"o_orderkey".asc))) // ≤ k+1 rows
     val pivot = ranked.filter($"rk" === k + 1)
       .select($"cents".as("ck1")) // 1 row
-    def micro(c: Column): Column = floor(c * 1e6).cast("long") / 1e6
     ranked.filter($"rk" <= k).crossJoin(broadcast(pivot))
       .select(round(log($"cents".cast("double") / $"ck1".cast("double")), 6)
         .cast("decimal(18,6)").as("term"), $"ck1")

@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ops.AggOps.micro
 
 /** Model-evaluation statistics a training/eval pipeline runs AFTER the
   * corpus work: pairwise-preference ratings, sampled-success pass@k,
@@ -16,8 +17,6 @@ import org.apache.spark.sql.functions._
   * to sums where possible.
   */
 object EvalOps extends graft.QueryModule {
-
-  private def micro(c: Column): Column = floor(c * 1e6).cast("long") / 1e6
 
   /** All (si < sj, wi, wj) duels of ONE order's line list, emitted
     * MAP-side (r18): per-supplier exact-cents totals are summed inside
@@ -444,9 +443,9 @@ object EvalOps extends graft.QueryModule {
     *
     * Scale: the ONLY order statistic is q̂, and it is found by the
     * theil_sen two-pass √-bucket selection — scores bucket by
-    * s div 65536 (bounded by the PRICE domain, not the corpus), a
-    * cumsum over that bounded bucket frame locates the one target
-    * bucket, and only ITS rows are ever ranked. No keyless corpus
+    * s div 65536 (bounded by the PRICE domain, not the corpus), the
+    * [[Prefix]] offsets over that bounded bucket frame locate the one
+    * target bucket, and only ITS rows are ever ranked. No keyless corpus
     * window; the model join broadcasts a 12-row frame; readout 1 row.
     */
   def conformalInterval(spark: SparkSession, sfDir: String): DataFrame = {
@@ -463,10 +462,7 @@ object EvalOps extends graft.QueryModule {
       .select(abs($"cents" - $"yhat").as("s"))
       .withColumn("bkt", expr("s div 65536L"))
       .localCheckpoint() // feeds bucket counts AND the ranked pass
-    val bcum = cal.groupBy($"bkt").agg(count(lit(1)).as("bw"))
-      .withColumn("off", coalesce(sum($"bw").over(
-        w.orderBy($"bkt").rowsBetween(w.unboundedPreceding, -1)),
-        lit(0L))) // cumsum over the price-bounded bucket frame
+    val bcum = Prefix.offsets(cal, Nil, "bkt", None)
     val tot = cal.agg(count(lit(1)).as("n_cal"))
       .withColumn("k", least(expr("(9L * n_cal + 18L) div 10L"), $"n_cal"))
     val target = bcum.crossJoin(broadcast(tot))

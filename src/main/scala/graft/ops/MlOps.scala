@@ -4,6 +4,7 @@ import org.apache.spark.ml.feature.{HashingTF, Tokenizer}
 import org.apache.spark.ml.functions.vector_to_array
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ops.AggOps.micro
 
 /** ML-adjacent declared operators (reference D17/D18/D20/D22):
   * label derivation, deterministic splits, HashingTF featurization.
@@ -282,24 +283,15 @@ object MlOps extends graft.QueryModule {
     * every document to the sequence ids it lands in (first_seq /
     * last_seq / n_seqs) — the token-budget accounting a training
     * dataloader needs before a single shard is written. The core is a
-    * GLOBAL running token sum, and the naive plan — `SUM() OVER (ORDER
-    * BY doc_id)` with no partition — is the single-partition window
-    * that cannot survive 100 TB. Instead the [[globalShuffle]]
-    * discipline: the doc_id space is cut into 64 contiguous ranges
-    * (range count scales with the cluster; the 1-row max-id collect is
-    * the reviewed max-day pattern), a per-range window computes the
-    * within-range running sum in parallel, a 64-row totals frame turns
-    * into per-range offsets under a trivially-single-task window, and
-    * the global cumsum is offset + within-range sum, broadcast-joined
-    * back. Contiguity of the ranges in doc_id makes the concatenation
-    * exactly the global order — the oracle's one keyless window proves
-    * it. Token count = whitespace tokens (the same measure the
+    * GLOBAL running token sum, computed by the [[Prefix]] two-level
+    * decomposition over 64 contiguous doc_id ranges (range count
+    * scales with the cluster; the 1-row max-id collect is the reviewed
+    * max-day pattern). Token count = whitespace tokens (the same measure the
     * token-stats family declares); zero-token docs occupy no sequence
     * and are excluded. All arithmetic is non-negative integers, so
     * Spark `div` and DuckDB `//` agree. */
   def packSequences(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
     val budget = 512L
     val toks = graft.Tables.documents(spark, sfDir)
       .select($"doc_id",
@@ -316,16 +308,8 @@ object MlOps extends graft.QueryModule {
     val maxId = maxRow.getLong(0)
     val width = maxId / 64L + 1L
     val ranged = toks.withColumn("rng", expr(s"doc_id div $width"))
-    val local = ranged.withColumn("cum_in",
-      sum($"n_toks").over(Window.partitionBy($"rng").orderBy($"doc_id")))
-    // 64-row totals -> exclusive prefix offsets (single task over 64 rows)
-    val offs = ranged.groupBy($"rng").agg(sum($"n_toks").as("t"))
-      .withColumn("off", coalesce(
-        sum($"t").over(Window.orderBy($"rng")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select($"rng", $"off")
-    local.join(broadcast(offs), Seq("rng"))
-      .withColumn("cum_end", $"cum_in" + $"off")
+    Prefix.running(ranged, Nil, "rng", Seq($"doc_id"), Some($"n_toks"),
+        "cum_end")
       .filter($"n_toks" > 0)
       .select($"doc_id", $"n_toks",
         expr(s"(cum_end - n_toks) div $budget").as("first_seq"),
@@ -338,17 +322,10 @@ object MlOps extends graft.QueryModule {
     * assignment — the last step before a training run reads the corpus:
     * a reproducible global visit order (pos 1..N over a stable hash of
     * doc_id) and the shard each example lands in (pos-round-robin over
-    * 8 shards, so shard sizes differ by at most one). The naive plan —
-    * `row_number() OVER (ORDER BY hash)` — is a SINGLE-partition window:
-    * every row funnels through one task, the one shape that cannot
-    * survive 100 TB. Instead the hash space [0, 1e9+7) is cut into 64
-    * contiguous ranges: a per-RANGE window ranks 1/64th of the data per
-    * task (one shuffle on the range id), a 64-row count aggregate turns
-    * into cumulative offsets under a window over 64 rows (trivially
-    * single-task), and pos = offset + within-range rank, broadcast-joined
-    * back. Because the ranges are contiguous in h, the concatenation IS
-    * the global (h, doc_id) order — the oracle's one global ROW_NUMBER
-    * proves it. Same int64 hash envelope as [[groupSplit]]. */
+    * 8 shards, so shard sizes differ by at most one). pos is the
+    * [[Prefix]] global rank over 64 contiguous ranges of the hash
+    * space [0, 1e9+7), not `row_number() OVER (ORDER BY hash)`. Same
+    * int64 hash envelope as [[groupSplit]]. */
   def globalShuffle(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val M = 1000000007L
@@ -358,16 +335,8 @@ object MlOps extends graft.QueryModule {
       .select($"doc_id")
       .withColumn("h", pmod(pmod($"doc_id", lit(M)) * 2654435761L + 17L, lit(M)))
       .withColumn("bucket", ($"h" / lit(width)).cast("int"))
-    val wb = org.apache.spark.sql.expressions.Window.partitionBy($"bucket")
-      .orderBy($"h".asc, $"doc_id".asc)
-    val ranked = hashed.withColumn("rk", row_number().over(wb).cast("long"))
-    val wo = org.apache.spark.sql.expressions.Window.orderBy($"bucket")
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val offsets = ranked.groupBy($"bucket").agg(count(lit(1)).as("n"))
-      .withColumn("offset", coalesce(sum($"n").over(wo), lit(0L)))
-      .select($"bucket", $"offset")
-    ranked.join(broadcast(offsets), Seq("bucket"))
-      .withColumn("pos", $"offset" + $"rk")
+    Prefix.running(hashed, Nil, "bucket", Seq($"h".asc, $"doc_id".asc),
+        None, "pos")
       .select($"pos", pmod($"pos" - 1L, lit(8L)).as("shard_id"), $"doc_id")
       .orderBy($"pos")
   }
@@ -592,16 +561,10 @@ object MlOps extends graft.QueryModule {
     * feasible corpus (10^16 chars × 100 ticks brushes the limit;
     * beyond that the same plan runs with the product in
     * DECIMAL(38,0), noted not implemented). The global cumulative sum
-    * is the globalShuffle/weighted-median TWO-LEVEL decomposition, not
-    * a keyless window: 64 fixed doc_id ranges (bounds from a 1-row agg
-    * broadcast in), per-range totals → prefix offsets over the
-    * 64-row bounded frame, within-range running sums partitioned by
-    * range — cum(x) = offset(range) + local_cum(x). Equality with the
-    * single-window DuckDB twin proves the decomposition IS the global
-    * cumsum. */
+    * is the [[Prefix]] running sum over 64 fixed doc_id ranges (bounds
+    * from a 1-row agg broadcast in), not a keyless window. */
   def ppsSystematicSample(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
     val K = 100
     val docs = graft.Tables.documents(spark, sfDir)
       .select($"doc_id", $"lang", $"n_chars")
@@ -611,15 +574,7 @@ object MlOps extends graft.QueryModule {
       .withColumn("bkt", least(
         floor($"doc_id".cast("double") * 64.0 / ($"mx" + 1)).cast("long"),
         lit(63L)))
-    val offsets = b.groupBy($"bkt").agg(sum($"n_chars").as("bw"))
-      .withColumn("off", coalesce(sum($"bw").over(
-        Window.orderBy($"bkt")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select($"bkt", $"off") // 64-row bounded frame
-    b.join(broadcast(offsets), Seq("bkt"))
-      .withColumn("cum", $"off" + sum($"n_chars").over(
-        Window.partitionBy($"bkt").orderBy($"doc_id")
-          .rowsBetween(Window.unboundedPreceding, 0)))
+    Prefix.running(b, Nil, "bkt", Seq($"doc_id"), Some($"n_chars"), "cum")
       .withColumn("n_picks", expr(
         s"(cum * $K) div w_tot - ((cum - n_chars) * $K) div w_tot"))
       .filter($"n_picks" >= 1)
@@ -766,8 +721,6 @@ object MlOps extends graft.QueryModule {
     val pooled = per.agg(count(lit(1)).as("n"),
       sum($"x").as("sx"), sum($"y").as("sy"), sum($"x" * $"y").as("sxy"),
       sum($"x" * $"x").as("sxx"), sum($"y" * $"y").as("syy")) // 1 row
-    def micro(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      floor(c * 1e6).cast("long") / 1e6
     // pooled θ, x̄ and the algebraic variance identities, all from the
     // six exact moments (cents → dollars only in the readouts)
     val cov = $"sxy".cast("double") / $"n" -
@@ -825,8 +778,6 @@ object MlOps extends graft.QueryModule {
       .localCheckpoint() // bounded |lang|×2 frame
     val tot = cells.groupBy($"treat")
       .agg(sum($"n").as("nt"), sum($"sy").as("st")) // 2 rows
-    def micro(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      floor(c * 1e6).cast("long") / 1e6
     val naive = tot.agg(
       sum($"nt").as("n_docs"),
       micro(max(when($"treat" === 1L, $"st".cast("double") / $"nt")) -
@@ -890,8 +841,6 @@ object MlOps extends graft.QueryModule {
     val long3 = per.select($"t", expr(
       "stack(3, 'pre_dollars', pre_dollars, 'pre_orders', pre_orders," +
         " 'pre_days', pre_days) as (covariate, v)"))
-    def micro(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      floor(c * 1e6).cast("long") / 1e6
     def m(arm: Long, f: org.apache.spark.sql.Column => org.apache.spark.sql.Column) =
       sum(when($"t" === arm, f($"v")).otherwise(lit(0).cast("decimal(20,0)")))
     val g = long3.groupBy($"covariate").agg(
@@ -945,8 +894,6 @@ object MlOps extends graft.QueryModule {
       .agg(sum($"event").as("d"),
         sum(lit(1L) - $"event").as("c")) // bounded duration domain
     val tot = cells.agg(sum($"d" + $"c").as("n_total")) // 1 row
-    def micro(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      floor(c * 1e6).cast("long") / 1e6
     cells.crossJoin(broadcast(tot))
       .withColumn("n_risk", $"n_total" - coalesce(sum($"d" + $"c").over(
         w2.orderBy($"dur").rowsBetween(w2.unboundedPreceding, -1)),
@@ -995,8 +942,6 @@ object MlOps extends graft.QueryModule {
       .agg(sum($"event").as("d"),
         sum(lit(1L) - $"event").as("c")) // bounded duration domain
     val tot = cells.agg(sum($"d" + $"c").as("n_total")) // 1 row
-    def micro(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      floor(c * 1e6).cast("long") / 1e6
     cells.crossJoin(broadcast(tot))
       .withColumn("n_risk", $"n_total" - coalesce(sum($"d" + $"c").over(
         w2.orderBy($"dur").rowsBetween(w2.unboundedPreceding, -1)),
@@ -1033,8 +978,6 @@ object MlOps extends graft.QueryModule {
         .as("y"))
       .agg(count(lit(1)).as("n"), sum($"y").as("sy"),
         sum($"y" * $"y").as("syy")) // 1 row
-    def micro(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      floor(c * 1e6).cast("long") / 1e6
     val mean = $"sy".cast("double") / $"n"
     // n·Σy² overflows int64 near sf0.01 — the numerator runs in
     // DECIMAL(38) exactly, one double cast (mirrored in the twin)
@@ -1075,8 +1018,6 @@ object MlOps extends graft.QueryModule {
         sum(lit(1L) - $"label").as("neg")) // bounded score domain
     val cum = h.withColumn("negb",
       sum($"neg").over(w) - $"neg") // ≤97-row running sum
-    def micro(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      floor(c * 1e6).cast("long") / 1e6
     cum.agg(sum($"pos").as("n_pos"), sum($"neg").as("n_neg"),
         sum($"pos" * (lit(2L) * $"negb" + $"neg")).as("num2"))
       .select($"n_pos", $"n_neg",
@@ -1191,8 +1132,8 @@ object MlOps extends graft.QueryModule {
           .when($"h" < th(3), 3L).when($"h" < th(4), 4L)
           .when($"h" < th(5), 5L).otherwise(6L))
     val reps = fan.groupBy($"r")
-      .agg((floor(sum($"w" * $"p").cast("double") /
-        sum($"w").cast("double") * 1e6).cast("long") / 1e6).as("mean_r"))
+      .agg(micro(sum($"w" * $"p").cast("double") /
+        sum($"w").cast("double")).as("mean_r"))
     val ranked = reps.withColumn("rk", row_number().over(
       org.apache.spark.sql.expressions.Window
         .orderBy($"mean_r".asc, $"r".asc))) // 100 rows by construction
@@ -1201,8 +1142,7 @@ object MlOps extends graft.QueryModule {
       max(when($"rk" === 3, $"mean_r")).as("ci_lo"),
       max(when($"rk" === 98, $"mean_r")).as("ci_hi"))
     val point = orders.agg(count(lit(1)).as("n_orders"),
-      (floor(sum($"p").cast("double") / count(lit(1)) * 1e6)
-        .cast("long") / 1e6).as("mean_point"))
+      micro(sum($"p").cast("double") / count(lit(1))).as("mean_point"))
     point.crossJoin(ci) // two 1-row frames
       .select($"n_orders", $"mean_point", $"n_replicates", $"ci_lo", $"ci_hi")
   }
@@ -1308,10 +1248,10 @@ object MlOps extends graft.QueryModule {
       .withColumn("mu", $"st".cast("double") / $"nt")
       .select($"doc_id", $"source", $"n_chars",
         when($"n" > 1L,
-          floor(($"s" - $"n_chars").cast("double") / ($"n" - 1L) * 1e6)
-            .cast("long") / 1e6).as("loo_enc"),
-        (floor((($"s" - $"n_chars").cast("double") + lit(10.0) * $"mu") /
-          ($"n" - 1L + 10L) * 1e6).cast("long") / 1e6).as("loo_enc_m10"))
+          micro(($"s" - $"n_chars").cast("double") / ($"n" - 1L)))
+          .as("loo_enc"),
+        micro((($"s" - $"n_chars").cast("double") + lit(10.0) * $"mu") /
+          ($"n" - 1L + 10L)).as("loo_enc_m10"))
       .orderBy($"doc_id")
   }
 
@@ -1334,8 +1274,6 @@ object MlOps extends graft.QueryModule {
   def bestSplit(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val w = org.apache.spark.sql.expressions.Window
-    def micro(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      floor(c * 1e6).cast("long") / 1e6
     val bins = graft.Tables.orders(spark, sfDir)
       .groupBy(least(floor($"o_totalprice" / 6000.0), lit(99.0))
         .cast("long").as("bin"))

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ops.AggOps.micro
 
 /** Data-quality constraint auditing — the "production-ready" layer every
   * scheduled pipeline needs before publishing a table (the reference's
@@ -395,10 +396,9 @@ object QualityOps extends graft.QueryModule {
     docs.join(broadcast(thr), Seq("lang"))
       .groupBy($"lang", $"n", $"lo", $"hi")
       .agg(
-        (floor(sum($"n_chars").cast("double") / $"n" * 1e6)
-          .cast("long") / 1e6).as("mean_raw"),
-        (floor(sum(greatest($"lo", least($"hi", $"n_chars")))
-          .cast("double") / $"n" * 1e6).cast("long") / 1e6).as("mean_winsor"))
+        micro(sum($"n_chars").cast("double") / $"n").as("mean_raw"),
+        micro(sum(greatest($"lo", least($"hi", $"n_chars")))
+          .cast("double") / $"n").as("mean_winsor"))
       .select($"lang", $"n", $"lo", $"hi", $"mean_raw", $"mean_winsor")
       .orderBy($"lang")
   }
@@ -432,12 +432,10 @@ object QualityOps extends graft.QueryModule {
           .cast("decimal(18,6)"))
       .agg(first($"n_docs").as("n_docs"),
         count(lit(1)).as("n_cells"),
-        (floor(sum($"term").cast("double") / first($"n_docs") * 1e6)
-          .cast("long") / 1e6).as("mi"))
+        micro(sum($"term").cast("double") / first($"n_docs")).as("mi"))
     def entropy(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      floor(-sum(c * round(log(c.cast("double") / $"n_docs".cast("double")), 6)
-        .cast("decimal(18,6)")).cast("double") / first($"n_docs") * 1e6)
-        .cast("long") / 1e6
+      micro(-sum(c * round(log(c.cast("double") / $"n_docs".cast("double")), 6)
+        .cast("decimal(18,6)")).cast("double") / first($"n_docs"))
     val hl = cl.crossJoin(broadcast(n)).agg(entropy($"c_l").as("h_lang"))
     val hs = cs.crossJoin(broadcast(n)).agg(entropy($"c_s").as("h_source"))
     mi.crossJoin(hl).crossJoin(hs) // three 1-row frames
@@ -513,15 +511,14 @@ object QualityOps extends graft.QueryModule {
         $"n_docs".cast("double"), 6).cast("decimal(18,6)"))
       .agg(first($"n_docs").as("n_docs"), first($"r").as("n_lang"),
         first($"k").as("n_source"),
-        (floor((sum($"term") - sum($"e")).cast("double") * 1e6)
-          .cast("long") / 1e6 + first($"n_docs")).as("chi2_adj"))
+        (micro((sum($"term") - sum($"e")).cast("double")) + first($"n_docs"))
+          .as("chi2_adj"))
       // degenerate table guard: min(r,k)=1 makes the normalizer 0 —
       // emit NULL (mirrored CASE in the oracle), not Infinity/NaN
       .withColumn("cramers_v",
         when(least($"n_lang", $"n_source") > 1L,
-          floor(sqrt($"chi2_adj" / ($"n_docs" *
-            (least($"n_lang", $"n_source") - 1L)).cast("double")) * 1e6)
-            .cast("long") / 1e6))
+          micro(sqrt($"chi2_adj" / ($"n_docs" *
+            (least($"n_lang", $"n_source") - 1L)).cast("double")))))
       .select($"n_docs", $"n_lang", $"n_source", $"chi2_adj", $"cramers_v")
   }
 
@@ -543,8 +540,6 @@ object QualityOps extends graft.QueryModule {
       .select($"n".as("n0"), $"sx".as("sx0"), $"sxx".as("sxx0"))
     val b = g.filter($"source" === "src1")
       .select($"n".as("n1"), $"sx".as("sx1"), $"sxx".as("sxx1"))
-    def micro(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      floor(c * 1e6).cast("long") / 1e6
     val m0 = $"sx0".cast("double") / $"n0"
     val m1 = $"sx1".cast("double") / $"n1"
     val v0 = ($"sxx0".cast("double") -
@@ -585,8 +580,6 @@ object QualityOps extends graft.QueryModule {
       .select($"n".as("n0"), $"sx".as("sx0"), $"sxx".as("sxx0"))
     val b = g.filter($"source" === "src1")
       .select($"n".as("n1"), $"sx".as("sx1"), $"sxx".as("sxx1"))
-    def micro(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      floor(c * 1e6).cast("long") / 1e6
     val m0 = $"sx0".cast("double") / $"n0"
     val m1 = $"sx1".cast("double") / $"n1"
     val v0 = ($"sxx0".cast("double") -
@@ -632,8 +625,6 @@ object QualityOps extends graft.QueryModule {
       .select($"n".as("n0"), $"sx".as("sx0"), $"sxx".as("sxx0"))
     val b = g.filter($"source" === "src1")
       .select($"n".as("n1"), $"sx".as("sx1"), $"sxx".as("sxx1"))
-    def micro(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      floor(c * 1e6).cast("long") / 1e6
     val diff = $"sx0".cast("double") / $"n0" -
       $"sx1".cast("double") / $"n1"
     val v0 = ($"sxx0".cast("double") -
@@ -686,8 +677,6 @@ object QualityOps extends graft.QueryModule {
       .agg(sum((($"i" - $"j") * ($"i" - $"j") * $"ri")
         .cast("decimal(19,0)") * $"cj".cast("decimal(19,0)"))
         .as("sum_we")) // (w·row)·col as DECIMAL(38,0): exact past int64
-    def micro(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      floor(c * 1e6).cast("long") / 1e6
     // degenerate guard: one observed class zeroes every weight in the
     // expected margin product -> kappa_w undefined -> NULL
     n.crossJoin(broadcast(wo)).crossJoin(broadcast(we)) // 1-row frames
@@ -721,8 +710,6 @@ object QualityOps extends graft.QueryModule {
     val ssb = g.select(round($"sx".cast("double") * $"sx".cast("double") /
         $"n".cast("double"), 6).cast("decimal(24,6)").as("t"))
       .agg(sum($"t").as("ssb_raw"))
-    def micro(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      floor(c * 1e6).cast("long") / 1e6
     val grand = $"ss".cast("double") * $"ss".cast("double") /
       $"nn".cast("double")
     val ssbD = $"ssb_raw".cast("double") - grand
@@ -763,8 +750,6 @@ object QualityOps extends graft.QueryModule {
       .select($"n".as("n0"), $"sx".as("sx0"), $"sxx".as("sxx0"))
     val b = g.filter($"source" === "src1")
       .select($"n".as("n1"), $"sx".as("sx1"), $"sxx".as("sxx1"))
-    def micro(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      floor(c * 1e6).cast("long") / 1e6
     val muGap = $"sx0".cast("double") / $"n0" -
       $"sx1".cast("double") / $"n1"
     val m2Gap = $"sxx0".cast("double") / $"n0" -
@@ -813,8 +798,6 @@ object QualityOps extends graft.QueryModule {
     val ssb = g.select(round($"sx".cast("double") * $"sx".cast("double") /
         $"n".cast("double"), 6).cast("decimal(24,6)").as("t"))
       .agg(sum($"t").as("ssb_raw"))
-    def micro(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      floor(c * 1e6).cast("long") / 1e6
     val grand = $"ss".cast("double") * $"ss".cast("double") /
       $"nn".cast("double")
     val ssbD = $"ssb_raw".cast("double") - grand
@@ -865,8 +848,6 @@ object QualityOps extends graft.QueryModule {
         .as("n_gt"),
       sum($"c0".cast("decimal(19,0)") * $"c1a".cast("decimal(19,0)"))
         .as("n_lt"))
-    def micro(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      floor(c * 1e6).cast("long") / 1e6
     val pairsD = $"n0".cast("double") * $"n1".cast("double")
     val delta6 = micro(($"n_gt".cast("double") - $"n_lt".cast("double"))
       / pairsD)
@@ -907,8 +888,6 @@ object QualityOps extends graft.QueryModule {
         sum(when($"source" === "src1", 1L).otherwise(0L)).as("c1"))
     val cum = h.withColumn("c1b",
       sum($"c1").over(w) - $"c1") // bounded length domain
-    def micro(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      floor(c * 1e6).cast("long") / 1e6
     cum.agg(sum($"c0").as("n0"), sum($"c1").as("n1"),
         sum($"c0" * (lit(2L) * $"c1b" + $"c1")).as("ux2"),
         sum(($"c0" + $"c1") * ($"c0" + $"c1") * ($"c0" + $"c1") -
@@ -946,8 +925,6 @@ object QualityOps extends graft.QueryModule {
         sum(when($"source" === "src1", 1L).otherwise(0L)).as("c1"))
       .localCheckpoint() // bounded length-domain histogram, feeds 2 legs
     val tot = h.agg(sum($"c0").as("n0"), sum($"c1").as("n1")) // 1 row
-    def micro(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      floor(c * 1e6).cast("long") / 1e6
     h.crossJoin(broadcast(tot))
       .withColumn("den", $"c0" * $"n1" + $"c1" * $"n0")
       .withColumn("t0", when($"c0" > 0L, $"c0" *
@@ -996,8 +973,6 @@ object QualityOps extends graft.QueryModule {
         ($"ng" * $"s").cast("double")), 6).cast("decimal(18,6)")).as("t"),
         lit(1L).as("one"))
       .agg(sum($"t").as("sb"), sum($"one").as("n_sources")) // 1 row
-    def micro(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      floor(c * 1e6).cast("long") / 1e6
     rowSum.crossJoin(grpSum).crossJoin(broadcast(tot)) // three 1-row frames
       .select($"n".as("n_docs"), $"n_sources",
         micro($"st".cast("double") / $"s".cast("double"))
@@ -1050,8 +1025,6 @@ object QualityOps extends graft.QueryModule {
       .agg(sum($"p_c".cast("decimal(19,0)") *
         (lit(3L) * $"n_units" - $"p_c").cast("decimal(19,0)"))
         .as("de_num")) // decimal(38,0): exact past the int64 ceiling
-    def micro(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      floor(c * 1e6).cast("long") / 1e6
     // degenerate guard: a corpus every annotator labels identically
     // zeroes D_e and alpha is undefined -> NULL (lazily gated: ANSI
     // throws on the division otherwise)

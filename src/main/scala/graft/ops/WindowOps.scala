@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ops.AggOps.micro
 
 /** Window operators (SURVEY.md §2.3 "window" rows): ranking, analytic,
   * explicit frames. No reference equivalent (its relational surface has no
@@ -178,18 +179,13 @@ object WindowOps extends graft.QueryModule {
     * keyless ntile would single-partition-sort the billion-customer
     * rollup on a real cluster. Instead, ntile's exact equal-count
     * semantics (so the ntile-based oracle is unchanged) come from the
-    * two-level global rank already proven on q_ml_global_shuffle: the
-    * three metrics go to long format (3n rows), each value is
-    * range-bucketed by approx-percentile boundaries (boundaries affect
-    * only BALANCE — per-bucket ranks plus exact bucket-count offsets
-    * reconstruct the exact global row_number wherever the cuts fall),
-    * ranked inside (metric, bucket) partitions in parallel, offset by
-    * the ≤3×33-row bucket-count ledger (bounded driver collect, the
-    * reviewed k-centroids pattern), and mapped to tiles with the
-    * standard SQL ntile formula (first n%5 tiles take one extra row)
-    * as integer DIV arithmetic on the reconstructed position. No
-    * Exchange SinglePartition anywhere in the declared plan — this
-    * query runs PlanAudit with no allowance. */
+    * [[Prefix]] global rank per metric: the three metrics go to long
+    * format (3n rows), each value is range-bucketed by
+    * approx-percentile boundaries (≤33 buckets per metric), and the
+    * reconstructed position maps to tiles with the standard SQL ntile
+    * formula (first n%5 tiles take one extra row) as integer DIV
+    * arithmetic. No Exchange SinglePartition anywhere in the declared
+    * plan — this query runs PlanAudit with no allowance. */
   def rfmSegments(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val rolled = graft.Tables.orders(spark, sfDir)
@@ -225,20 +221,6 @@ object WindowOps extends graft.QueryModule {
     val bucketed = long.join(broadcast(bnds), Seq("metric"))
       .withColumn("__b", size(filter($"bnds", x => x < $"dv")))
       .drop("bnds", "dv")
-    val wb = Window.partitionBy($"metric", $"__b")
-      .orderBy($"value".asc, $"o_custkey".asc)
-    val ranked = bucketed
-      .withColumn("__rk", row_number().over(wb).cast("long"))
-    // exact per-bucket counts -> global offsets, computed driver-side
-    // over the <= 3*(nB+1)-row ledger (bounded by construction)
-    val counts = ranked.groupBy($"metric", $"__b")
-      .agg(count(lit(1)).as("c"))
-      .as[(String, Int, Long)].collect()
-    val offsets = counts.groupBy(_._1).toSeq.flatMap { case (m, rows) =>
-      rows.sortBy(_._2).scanLeft((m, -1, 0L, 0L)) {
-        case ((_, _, off, n), (_, b, c)) => (m, b, off + n, c)
-      }.drop(1).map { case (mm, b, off, _) => (mm, b, off) }
-    }.toDF("metric", "__b", "__off")
     // standard SQL ntile(5) over n rows from the exact global position:
     // q = n/5, r = n%5; the first r tiles take q+1 rows
     val q = nCust / 5; val r = nCust % 5
@@ -249,8 +231,8 @@ object WindowOps extends graft.QueryModule {
            |  THEN (__pos - 1) DIV ${q + 1} + 1
            |  ELSE $r + (__pos - ${r * (q + 1)} - 1) DIV $q + 1
            |END AS INT)""".stripMargin)
-    val scored = ranked.join(broadcast(offsets), Seq("metric", "__b"))
-      .withColumn("__pos", $"__off" + $"__rk")
+    val scored = Prefix.running(bucketed, Seq("metric"), "__b",
+        Seq($"value".asc, $"o_custkey".asc), None, "__pos")
       .withColumn("tile", tile)
       .groupBy($"o_custkey")
       .agg( // recency flips so fewest days -> score 5
@@ -399,7 +381,7 @@ object WindowOps extends graft.QueryModule {
       .select($"o_custkey", $"o_orderkey", $"o_orderdate", $"o_totalprice")
       .withColumn("denom", lit(65536.0) - pow(lit(2.0), lit(16) - m))
       .withColumn("ewma",
-        (floor(wsum / $"denom" * 1e6).cast("long") / 1e6))
+        micro(wsum / $"denom"))
       .select($"o_custkey", $"o_orderkey", $"o_orderdate", $"ewma")
       .orderBy($"o_custkey", $"o_orderkey")
   }
@@ -422,10 +404,7 @@ object WindowOps extends graft.QueryModule {
   def cusum(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val w2 = Window.orderBy($"day") // bounded day domain
-    val daily = graft.Tables.orders(spark, sfDir)
-      .select(to_date($"o_orderdate").as("day"),
-        (AggOps.dec($"o_totalprice") * 100).cast("long").as("cents"))
-      .groupBy($"day").agg(sum($"cents").as("rev"))
+    val daily = AggOps.dailyRevenue(spark, sfDir)
     val tot = daily.agg(count(lit(1)).as("n"), sum($"rev").as("s")) // 1 row
     daily.crossJoin(broadcast(tot))
       .withColumn("p", sum($"n" * $"rev" - $"s").over(w2))
@@ -434,8 +413,8 @@ object WindowOps extends graft.QueryModule {
       // positive — caught by the Wave12Spec textbook-recursion replay
       .withColumn("cusum_scaled", $"p" - least(min($"p").over(w2), lit(0L)))
       .select($"day", $"rev".as("rev_cents"),
-        (floor($"cusum_scaled".cast("double") / $"n" / 100.0 * 1e6)
-          .cast("long") / 1e6).as("cusum_dollars"),
+        micro($"cusum_scaled".cast("double") / $"n" / 100.0)
+          .as("cusum_dollars"),
         ($"cusum_scaled" > $"s" * 2L).cast("int").as("shift_flag"))
       .orderBy($"day")
   }
@@ -449,10 +428,7 @@ object WindowOps extends graft.QueryModule {
   def drawdown(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val w2 = Window.orderBy($"day") // bounded day domain
-    graft.Tables.orders(spark, sfDir)
-      .select(to_date($"o_orderdate").as("day"),
-        (AggOps.dec($"o_totalprice") * 100).cast("long").as("cents"))
-      .groupBy($"day").agg(sum($"cents").as("rev"))
+    AggOps.dailyRevenue(spark, sfDir)
       .withColumn("peak", max($"rev").over(w2))
       .select($"day", $"rev".as("rev_cents"), $"peak".as("peak_cents"),
         ($"peak" - $"rev").as("drawdown_cents"),
@@ -479,10 +455,7 @@ object WindowOps extends graft.QueryModule {
   def seasonal(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val w7 = Window.orderBy($"day").rowsBetween(-3, 3) // bounded day domain
-    val daily = graft.Tables.orders(spark, sfDir)
-      .select(to_date($"o_orderdate").as("day"),
-        (AggOps.dec($"o_totalprice") * 100).cast("long").as("cents"))
-      .groupBy($"day").agg(sum($"cents").as("rev"))
+    val daily = AggOps.dailyRevenue(spark, sfDir)
       .withColumn("t7", sum($"rev").over(w7))
       .withColumn("c7", count(lit(1)).over(w7))
       .withColumn("dscaled", when($"c7" === 7, $"rev" * 7L - $"t7"))
@@ -493,14 +466,14 @@ object WindowOps extends graft.QueryModule {
     daily.join(broadcast(seas), Seq("dow"), "left")
       .select($"day", $"rev".as("rev_cents"), $"dow",
         when($"c7" === 7,
-          floor($"t7".cast("double") / 7.0 / 100.0 * 1e6).cast("long") / 1e6)
+          micro($"t7".cast("double") / 7.0 / 100.0))
           .as("trend_dollars"),
-        (floor($"snum".cast("double") / (lit(7.0) * $"scnt") / 100.0 * 1e6)
-          .cast("long") / 1e6).as("seasonal_dollars"),
+        micro($"snum".cast("double") / (lit(7.0) * $"scnt") / 100.0)
+          .as("seasonal_dollars"),
         when($"c7" === 7,
-          floor(($"rev" - $"t7".cast("double") / 7.0 -
-            $"snum".cast("double") / (lit(7.0) * $"scnt")) / 100.0 * 1e6)
-            .cast("long") / 1e6).as("residual_dollars"))
+          micro(($"rev" - $"t7".cast("double") / 7.0 -
+            $"snum".cast("double") / (lit(7.0) * $"scnt")) / 100.0))
+          .as("residual_dollars"))
       .orderBy($"day")
   }
 
@@ -518,18 +491,13 @@ object WindowOps extends graft.QueryModule {
   def acf(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val w2 = Window.orderBy($"day") // bounded day domain
-    val daily = graft.Tables.orders(spark, sfDir)
-      .select(to_date($"o_orderdate").as("day"),
-        (AggOps.dec($"o_totalprice") * 100).cast("long").as("cents"))
-      .groupBy($"day").agg(sum($"cents").as("rev"))
+    val daily = AggOps.dailyRevenue(spark, sfDir)
     val tot = daily.agg(count(lit(1)).as("nd"), sum($"rev").as("s")) // 1 row
     val u = daily.crossJoin(broadcast(tot))
       .select($"day", $"nd",
         ($"nd" * $"rev" - $"s").cast("decimal(19,0)").as("u"))
     val lagged = u.select(($"nd" +: $"u" +:
       (1 to 7).map(k => lag($"u", k).over(w2).as(s"u$k"))): _*)
-    def micro(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      floor(c * 1e6).cast("long") / 1e6
     // degenerate guard: a CONSTANT series zeroes γ₀ and every r_k is
     // 0/0 — the `when` lazily gates the division (ANSI throws on
     // double x/0), mirrored as CASE in the twin
@@ -558,10 +526,7 @@ object WindowOps extends graft.QueryModule {
   def neweyWest(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val w2 = Window.orderBy($"day") // bounded day domain
-    val daily = graft.Tables.orders(spark, sfDir)
-      .select(to_date($"o_orderdate").as("day"),
-        (AggOps.dec($"o_totalprice") * 100).cast("long").as("cents"))
-      .groupBy($"day").agg(sum($"cents").as("rev"))
+    val daily = AggOps.dailyRevenue(spark, sfDir)
     val tot = daily.agg(count(lit(1)).as("nd"), sum($"rev").as("s"))
     val u = daily.crossJoin(broadcast(tot))
       .select($"day", $"nd", $"s",
@@ -572,8 +537,6 @@ object WindowOps extends graft.QueryModule {
       sum($"u" * $"u").as("g0")) ++
       (1 to 7).map(k => sum($"u" * col(s"u$k")).as(s"g$k"))
     val g = lagged.agg(aggCols.head, aggCols.tail: _*)
-    def micro(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      floor(c * 1e6).cast("long") / 1e6
     val n3 = $"nd".cast("double") * $"nd".cast("double") *
       $"nd".cast("double")
     // lrv = γ0 + 2·Σ w_k γ_k, all γ in the same n³ scaling
@@ -617,10 +580,7 @@ object WindowOps extends graft.QueryModule {
   def stlStrength(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val w7 = Window.orderBy($"day").rowsBetween(-3, 3)
-    val daily = graft.Tables.orders(spark, sfDir)
-      .select(to_date($"o_orderdate").as("day"),
-        (AggOps.dec($"o_totalprice") * 100).cast("long").as("cents"))
-      .groupBy($"day").agg(sum($"cents").as("rev"))
+    val daily = AggOps.dailyRevenue(spark, sfDir)
       .withColumn("t7", sum($"rev").over(w7))
       .withColumn("c7", count(lit(1)).over(w7))
       .withColumn("dscaled", when($"c7" === 7, $"rev" * 7L - $"t7"))
@@ -642,8 +602,6 @@ object WindowOps extends graft.QueryModule {
         round($"tr" + $"re", 6).cast("decimal(24,6)").as("tr1"),
         round(($"tr" + $"re") * ($"tr" + $"re"), 6)
           .cast("decimal(30,6)").as("tr2"))
-    def micro(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      floor(c * 1e6).cast("long") / 1e6
     def varOf(s1: org.apache.spark.sql.Column, s2: org.apache.spark.sql.Column,
         n: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
       s2.cast("double") / n.cast("double") -
@@ -685,10 +643,7 @@ object WindowOps extends graft.QueryModule {
   def varianceRatio(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val wO = Window.orderBy($"day")
-    val daily = graft.Tables.orders(spark, sfDir)
-      .select(to_date($"o_orderdate").as("day"),
-        (AggOps.dec($"o_totalprice") * 100).cast("long").as("cents"))
-      .groupBy($"day").agg(sum($"cents").as("rev"))
+    val daily = AggOps.dailyRevenue(spark, sfDir)
       .localCheckpoint() // bounded day frame; feeds base + 3 q-frames
     def popVarN3(df: DataFrame, c: String): DataFrame = {
       // (n, Σu²) with u = n·x − Σx: population Var = Σu²/n³ exactly
@@ -700,8 +655,6 @@ object WindowOps extends graft.QueryModule {
     }
     val base = popVarN3(daily.select($"day", $"rev"), "rev")
       .select($"n".as("n1"), $"uu".as("uu1"))
-    def micro(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      floor(c * 1e6).cast("long") / 1e6
     val perQ = Seq(2, 5, 10).map { q =>
       val sums = daily
         .withColumn("qs", sum($"rev").over(
@@ -745,10 +698,7 @@ object WindowOps extends graft.QueryModule {
     * group frame; 1-row readout. */
   def kruskalDow(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val daily = graft.Tables.orders(spark, sfDir)
-      .select(to_date($"o_orderdate").as("day"),
-        (AggOps.dec($"o_totalprice") * 100).cast("long").as("cents"))
-      .groupBy($"day").agg(sum($"cents").as("rev"))
+    val daily = AggOps.dailyRevenue(spark, sfDir)
       .withColumn("dow", expr("weekday(day)") + 1)
       .withColumn("ar2",
         lit(2L) * rank().over(Window.orderBy($"rev")) +
@@ -762,8 +712,6 @@ object WindowOps extends graft.QueryModule {
     val ties = daily.groupBy($"rev").agg(count(lit(1)).as("t"))
       .agg(sum($"t" * $"t" * $"t" - $"t").as("tcorr"))
     val n = daily.agg(count(lit(1)).as("n_days"))
-    def micro(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      floor(c * 1e6).cast("long") / 1e6
     n.crossJoin(broadcast(grp)).crossJoin(broadcast(ties)) // 1-row frames
       .withColumn("h_raw",
         lit(3.0) * $"sum_r2sq".cast("double") /
@@ -808,10 +756,7 @@ object WindowOps extends graft.QueryModule {
   def ljungBox(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val w2 = Window.orderBy($"day")
-    val daily = graft.Tables.orders(spark, sfDir)
-      .select(to_date($"o_orderdate").as("day"),
-        (AggOps.dec($"o_totalprice") * 100).cast("long").as("cents"))
-      .groupBy($"day").agg(sum($"cents").as("rev"))
+    val daily = AggOps.dailyRevenue(spark, sfDir)
     val tot = daily.agg(count(lit(1)).as("nd"), sum($"rev").as("s"))
     val u = daily.crossJoin(broadcast(tot))
       .select($"day", $"nd",
@@ -821,8 +766,6 @@ object WindowOps extends graft.QueryModule {
     val aggCols = Seq(max($"nd").as("nd"), sum($"u" * $"u").as("g0")) ++
       (1 to 7).map(k => sum($"u" * col(s"u$k")).as(s"g$k"))
     val g = lagged.agg(aggCols.head, aggCols.tail: _*)
-    def micro(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      floor(c * 1e6).cast("long") / 1e6
     val q = (1 to 7).foldLeft(lit(0.0)) { (acc, k) =>
       acc + (col(s"g$k").cast("double") / $"g0".cast("double")) *
         (col(s"g$k").cast("double") / $"g0".cast("double")) /
@@ -861,10 +804,7 @@ object WindowOps extends graft.QueryModule {
     * tests would partition the same join by key. */
   def mannKendall(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val daily = graft.Tables.orders(spark, sfDir)
-      .select(to_date($"o_orderdate").as("day"),
-        (AggOps.dec($"o_totalprice") * 100).cast("long").as("cents"))
-      .groupBy($"day").agg(sum($"cents").as("rev"))
+    val daily = AggOps.dailyRevenue(spark, sfDir)
       .localCheckpoint() // bounded day domain; feeds pairs + ties + n
     val a = daily.select($"day".as("d1"), $"rev".as("r1"))
     val b = daily.select($"day".as("d2"), $"rev".as("r2"))
@@ -877,8 +817,6 @@ object WindowOps extends graft.QueryModule {
       .agg(sum($"t" * ($"t" - 1L)).as("ux2"),
         sum($"t" * ($"t" - 1L) * (lit(2L) * $"t" + 5L)).as("tcorr"))
     val n = daily.agg(count(lit(1)).as("n_days"))
-    def micro(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      floor(c * 1e6).cast("long") / 1e6
     s.crossJoin(broadcast(ties)).crossJoin(broadcast(n)) // three 1-row frames
       .withColumn("var18",
         $"n_days" * ($"n_days" - 1L) * (lit(2L) * $"n_days" + 5L) - $"tcorr")
@@ -923,10 +861,7 @@ object WindowOps extends graft.QueryModule {
     * 1-row readouts cross-joined broadcast. */
   def pettitt(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val daily = graft.Tables.orders(spark, sfDir)
-      .select(to_date($"o_orderdate").as("day"),
-        (AggOps.dec($"o_totalprice") * 100).cast("long").as("cents"))
-      .groupBy($"day").agg(sum($"cents").as("rev"))
+    val daily = AggOps.dailyRevenue(spark, sfDir)
       .localCheckpoint() // bounded day domain; feeds both pair legs
     val a = daily.select($"day".as("d1"), $"rev".as("r1"))
     val b = daily.select($"day".as("d2"), $"rev".as("r2"))
@@ -937,8 +872,6 @@ object WindowOps extends graft.QueryModule {
       .localCheckpoint() // ≤|days| rows; feeds the max AND the argmax
     val k = u.agg(max(abs($"u")).as("k_stat"),
       count(lit(1)).as("n_days")) // 1-row frame
-    def micro(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      floor(c * 1e6).cast("long") / 1e6
     u.crossJoin(broadcast(k))
       .filter(abs($"u") === $"k_stat")
       .agg(first($"n_days").as("n_days"), first($"k_stat").as("k_stat"),
@@ -974,15 +907,9 @@ object WindowOps extends graft.QueryModule {
     * daily groupBy only. */
   def ccf(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val daily = graft.Tables.orders(spark, sfDir)
-      .select(to_date($"o_orderdate").as("day"),
-        (AggOps.dec($"o_totalprice") * 100).cast("long").as("cents"))
-      .groupBy($"day").agg(sum($"cents").as("rev"),
-        count(lit(1)).as("cnt"))
+    val daily = AggOps.dailyRevenue(spark, sfDir, count(lit(1)).as("cnt"))
       .localCheckpoint() // bounded day domain; feeds both band legs
     def d19(c: org.apache.spark.sql.Column) = c.cast("decimal(19,0)")
-    def micro(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      floor(c * 1e6).cast("long") / 1e6
     val a = daily.select($"day".as("d1"), $"rev".as("x"))
     val b = daily.select($"day".as("d2"), $"cnt".as("y"))
     a.join(b, datediff($"d1", $"d2").between(0, 7)) // calendar band
@@ -1029,10 +956,7 @@ object WindowOps extends graft.QueryModule {
   def runsTest(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val w = Window.orderBy($"day")
-    val daily = graft.Tables.orders(spark, sfDir)
-      .select(to_date($"o_orderdate").as("day"),
-        (AggOps.dec($"o_totalprice") * 100).cast("long").as("cents"))
-      .groupBy($"day").agg(sum($"cents").as("rev"))
+    val daily = AggOps.dailyRevenue(spark, sfDir)
       .localCheckpoint() // bounded day domain; feeds median + signs
     val med = daily
       .withColumn("rn", row_number().over(Window.orderBy($"rev", $"day")))
@@ -1048,8 +972,6 @@ object WindowOps extends graft.QueryModule {
           lag($"s", 1).over(w) =!= $"s", 1L).otherwise(0L))
       .agg(sum($"chg").as("r"), sum($"s").as("n1"),
         sum(lit(1L) - $"s").as("n2"))
-    def micro(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      floor(c * 1e6).cast("long") / 1e6
     // degenerate guards: a ONE-SIDED sign sequence (n1=0 or n2=0 —
     // e.g. a 2-day series where the median day drops) zeroes σ²'s
     // (n1+n2−1) denominator, and n1=n2=1 zeroes σ² itself — both make
@@ -1091,10 +1013,7 @@ object WindowOps extends graft.QueryModule {
     * by (size, block). Readout: 4 rows + the constant H column. */
   def hurst(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val daily = graft.Tables.orders(spark, sfDir)
-      .select(to_date($"o_orderdate").as("day"),
-        (AggOps.dec($"o_totalprice") * 100).cast("long").as("cents"))
-      .groupBy($"day").agg(sum($"cents").as("rev"))
+    val daily = AggOps.dailyRevenue(spark, sfDir)
       .withColumn("idx",
         row_number().over(Window.orderBy($"day")).cast("long"))
       .localCheckpoint() // bounded day domain, indexed once
@@ -1137,8 +1056,6 @@ object WindowOps extends graft.QueryModule {
         .cast("decimal(18,6)").as("xy"),
       round(log($"bs".cast("double")) * log($"bs".cast("double")), 6)
         .cast("decimal(18,6)").as("xx"))
-    def micro(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      floor(c * 1e6).cast("long") / 1e6
     // degenerate guard: a 16–31-day series yields full blocks at ONE
     // size only, so the log-log OLS denominator k·Σxx − (Σx)² is
     // exactly 0 → 0/0; the `when` lazily gates the DIVISION (ANSI
@@ -1177,11 +1094,7 @@ object WindowOps extends graft.QueryModule {
     * pass is a 1-row aggregate. */
   def spearman(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val daily = graft.Tables.orders(spark, sfDir)
-      .select(to_date($"o_orderdate").as("day"),
-        (AggOps.dec($"o_totalprice") * 100).cast("long").as("cents"))
-      .groupBy($"day").agg(sum($"cents").as("rev"),
-        count(lit(1)).as("cnt"))
+    val daily = AggOps.dailyRevenue(spark, sfDir, count(lit(1)).as("cnt"))
     // rank() is min-rank; 2·minrank + t − 1 == the 2-scaled average
     // rank (exact integers, no halves)
     def ar2(v: org.apache.spark.sql.Column, name: String) =
@@ -1202,8 +1115,6 @@ object WindowOps extends graft.QueryModule {
       sum(d($"ax") * d($"ay")).as("rxy"),
       sum(d($"ax") * d($"ax")).as("rxx"),
       sum(d($"ay") * d($"ay")).as("ryy"))
-    def micro(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      floor(c * 1e6).cast("long") / 1e6
     // degenerate guard: a constant series (or all-tied ranks) zeroes
     // a variance factor — correlation undefined; the `when` lazily
     // gates the division (ANSI throws on double x/0), CASE-mirrored

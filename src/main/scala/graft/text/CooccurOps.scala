@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ops.AggOps.micro
 
 /** Token co-occurrence statistics and cheap corpus LMs — the signals a
   * pretraining-data pipeline computes between tokenization and quality
@@ -162,8 +163,7 @@ object CooccurOps extends graft.QueryModule {
       // differently (r11 evidence at sf0.1); floor of the IEEE-identical
       // quotient is bit-deterministic everywhere
       .agg(count(lit(1)).as("n_bigrams"),
-        (floor(-(sum($"lp").cast("double")) / count(lit(1)) * lit(1e6))
-          .cast("bigint") / lit(1e6)).as("nll"))
+        micro(-(sum($"lp").cast("double")) / count(lit(1))).as("nll"))
       .orderBy($"doc_id")
   }
 

@@ -1,7 +1,8 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ops.AggOps.micro
 
 /** Language-model estimation statistics over the corpus's TRIGRAM
   * event space — the one n-gram order where the fixture is genuinely
@@ -16,8 +17,6 @@ import org.apache.spark.sql.functions._
   * micro-floored division per readout column.
   */
 object LmOps extends graft.QueryModule {
-
-  private def micro(c: Column): Column = floor(c * 1e6).cast("long") / 1e6
 
   private val trigramsUdf = udf((text: String) => {
     if (text == null) Array.empty[String]

@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ops.AggOps.micro
 
 /** Full-text retrieval over the `documents` table through a PERSISTED
   * inverted index — the working-set pattern (fingerprint / shingle /
@@ -244,8 +245,7 @@ object SearchOps extends graft.QueryModule {
     dcg.join(idcg, Seq("k"))
       .select($"k", $"dcg".cast("double").as("dcg"),
         $"idcg".cast("double").as("idcg"),
-        (floor($"dcg".cast("double") / $"idcg".cast("double") * 1e6)
-          .cast("long") / 1e6).as("ndcg"))
+        micro($"dcg".cast("double") / $"idcg".cast("double")).as("ndcg"))
       .orderBy($"k")
   }
 
@@ -281,8 +281,6 @@ object SearchOps extends graft.QueryModule {
         round($"cum".cast("double") / $"rank", 6).cast("decimal(18,6)")))
     val firstRel = flags.filter($"r" === 1L)
       .agg(min($"rank").as("fr")) // 1 row (NULL fr when no hit)
-    def micro(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      floor(c * 1e6).cast("long") / 1e6
     Seq(5, 10, 20).toDF("k").join(flags, $"rank" <= $"k")
       .groupBy($"k")
       .agg(sum($"r").as("hits_at_k"),

@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ops.AggOps.micro
 
 /** Text-pipeline operators (SURVEY.md §2.4 + reference D8-D15: the Clean
   * chain at 00_training_pipeline.py:77-89 / 01_classification_pipeline.py:104-122).
@@ -102,8 +103,6 @@ object TextOps extends graft.QueryModule {
     * which a real pipeline drops. */
   def readability(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    def micro(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      floor(c * 1e6).cast("long") / 1e6
     graft.Tables.documents(spark, sfDir)
       .select($"doc_id",
         size(split($"text", " ")).cast("long").as("n_words"),
@@ -184,8 +183,6 @@ object TextOps extends graft.QueryModule {
           abs($"fa" - $"fb").cast("double") /
           sqrt($"varn".cast("double")), 6)
           .cast("decimal(18,6)").as("term"))
-    def micro(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      floor(c * 1e6).cast("long") / 1e6
     pairs.groupBy($"sa", $"sb")
       .agg(sum($"term").as("ts"), count(lit(1)).as("n_words"))
       .select($"sa".as("source_a"), $"sb".as("source_b"), $"n_words",
@@ -722,8 +719,6 @@ object TextOps extends graft.QueryModule {
       .select(
         round(log($"rk".cast("double")), 6).cast("decimal(18,6)").as("x"),
         round(log($"c".cast("double")), 6).cast("decimal(18,6)").as("y"))
-    def micro(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      floor(c * 1e6).cast("long") / 1e6
     val g = ranked.agg(count(lit(1)).as("n"),
       sum($"x").as("sx"), sum($"y").as("sy"),
       sum($"x" * $"x").as("sxx"), sum($"y" * $"y").as("syy"),
@@ -865,8 +860,7 @@ object TextOps extends graft.QueryModule {
         term($"c", $"c" * $"n", ($"c" + $"d") * $"n0") +
         term($"d", $"d" * $"n", ($"c" + $"d") * $"n1"))
       .select($"tok", $"a".as("count_src0"), $"b".as("count_src1"),
-        (floor($"g2x2".cast("double") * 2.0 * 1e6).cast("long") / 1e6)
-          .as("g2"),
+        micro($"g2x2".cast("double") * 2.0).as("g2"),
         when($"a" * $"n1" > $"b" * $"n0", "src0").otherwise("src1")
           .as("overused_in"))
       .orderBy($"g2".desc, $"tok").limit(20) // top-k heap
@@ -893,7 +887,6 @@ object TextOps extends graft.QueryModule {
       .groupBy($"doc_id", $"tok").agg(count(lit(1)).as("c"))
     val n = graft.Tables.documents(spark, sfDir)
       .agg(count(lit(1)).as("n_docs")) // 1 row
-    def micro(c: Column): Column = floor(c * 1e6).cast("long") / 1e6
     dc.groupBy($"tok")
       .agg(count(lit(1)).as("df"), sum($"c").as("s1"),
         sum($"c" * $"c").as("s2"))
@@ -948,8 +941,7 @@ object TextOps extends graft.QueryModule {
         term($"k22", $"t" - $"ca", $"t" - $"cbm"))
       .select($"bg", $"k11".as("c_ab"), $"ca".as("c_a_first"),
         $"cbm".as("c_b_second"),
-        (floor($"g2x2".cast("double") * 2.0 * 1e6).cast("long") / 1e6)
-          .as("g2"))
+        micro($"g2x2".cast("double") * 2.0).as("g2"))
       .orderBy($"g2".desc, $"bg").limit(20) // top-k heap
   }
 
@@ -977,8 +969,6 @@ object TextOps extends graft.QueryModule {
           .as("x"),
         round(log($"n_types".cast("double")), 6).cast("decimal(18,6)")
           .as("y")) // bounded |sources| frame
-    def micro(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      floor(c * 1e6).cast("long") / 1e6
     val g = pts.agg(count(lit(1)).as("n"),
       sum($"x").as("sx"), sum($"y").as("sy"),
       sum($"x" * $"x").as("sxx"), sum($"y" * $"y").as("syy"),

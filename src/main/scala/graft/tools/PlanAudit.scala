@@ -45,8 +45,9 @@ object PlanAudit {
     // cumsum window over the bounded day domain + 1-row K readout
     // crossed back (the mann_kendall/theil_sen calendar discipline)
     "q_window_pettitt" -> Set("SinglePartition"),
-    // cumsum over the PRICE-bounded score-bucket frame (theil_sen
-    // two-pass selection) + 12-row model / 1-row q̂ broadcast joins
+    // graft.ops.Prefix offsets over the PRICE-bounded score-bucket
+    // frame (theil_sen two-pass selection) + 12-row model / 1-row q̂
+    // broadcast joins
     "q_ml_conformal_interval" -> Set("NestedLoop", "SinglePartition"),
     // ≤|months| completeness frame and three ≤k-row/1-row readout
     // frames crossed broadcast; rank windows partition by month
@@ -174,9 +175,9 @@ object PlanAudit {
     // (S / ties / n) frames crossJoined
     "q_window_mann_kendall" -> Set("SinglePartition", "NestedLoop"),
     // the same bounded |days|² pair frame, collapsed to a slope-value
-    // histogram; the only keyless window is the bucket-offset cumsum
-    // over the ≤2·√max|m| bucket frame (the weighted_median two-level
-    // decomposition — the per-value cumsum is partitioned by bucket)
+    // histogram; the only keyless window is the graft.ops.Prefix
+    // offsets window over the ≤2·√max|m| bucket frame (the per-value
+    // rank is partitioned by bucket)
     "q_agg_theil_sen" -> Set("SinglePartition", "NestedLoop"),
     // rank window over the 101-row TakeOrderedAndProject cut + its
     // broadcast 1-row x_(k+1) pivot frame (the dsir pattern)
@@ -267,8 +268,8 @@ object PlanAudit {
     "q_ml_temperature_mix" -> Set("SinglePartition", "NestedLoop"),
     // k-strata moment frame crossJoined with its 1-row Σs aggregate
     "q_ml_neyman_sample" -> Set("SinglePartition", "NestedLoop"),
-    // 1-row (max, total) bounds frame broadcast-crossed in; prefix
-    // offsets window over the 64-row fixed-range frame
+    // 1-row (max, total) bounds frame broadcast-crossed in; the
+    // graft.ops.Prefix offsets window over the 64-row fixed-range frame
     "q_ml_pps_systematic_sample" -> Set("SinglePartition", "NestedLoop"),
     // 100-replicate-mean rank window + two 1-row frames crossJoined —
     // the corpus-sized fan-out collapses map-side via partial agg
@@ -306,9 +307,9 @@ object PlanAudit {
     // keyless TopKPerKey: partial per-partition heaps -> one final
     // partition over <= partitions x k partial rows, not the data
     "q_ml_weighted_sample" -> Set("SinglePartition"),
+    // graft.ops.Prefix offsets window over the 64-row range-totals
+    // frame (the reviewed bounded-frame window) in both
     "q_ml_global_shuffle" -> Set("SinglePartition"),
-    // 64-row range-totals frame -> prefix offsets (globalShuffle's
-    // reviewed bounded-frame window, reused for the packing cumsum)
     "q_ml_pack_sequences" -> Set("SinglePartition"),
     // ANN/HNSW bounded-beam expansions (constant-size frames)
     "q_simsearch_topk" -> Set("Cartesian", "NestedLoop"),

@@ -30,6 +30,12 @@ import org.apache.spark.sql.functions._
   *    the SAME at both scales, which is exactly what the calendar-
   *    bounded claims (theil_sen) promise to be invariant to.
   *
+  * The second decade (`--decade 2`, round-17 verdict item #4) puts a
+  * second measured 10× step under the 100 TB extrapolation: sf10 is
+  * synthesized from the sf1 synth with second-level mutations (see
+  * [[synthesize]]) and the worst five shapes are timed at all three
+  * scales into SCALESPOT.json.
+  *
   * Timing = min over two full sweeps of `df.count()` (Bench's
   * discipline: sweep-separated passes so one ambient stall cannot
   * inflate both; artifact-building first passes are dropped by the
@@ -123,61 +129,97 @@ object ScaleSweep {
       "rep-collapsed 21-band self-join candidates ~ linear on the " +
         "shard-independent synth; exact jaccard verify on reps"))
 
-  private val Off = 1000000000L // replica key offset; > any sf1 key
+  /** The r16 verdict's worst five (embedding_cosine_lsh post-fix),
+    * timed across BOTH decades by `--decade 2`. */
+  val SpotShapes: Seq[String] = Seq(
+    "q_ml_bradley_terry",
+    "q_dedup_audio_fingerprint_files",
+    "q_dedup_embedding_cosine_lsh",
+    "q_graph_kcore",
+    "q_text_textrank")
 
-  private def shift(df: DataFrame, cols: Seq[String], i: Int): DataFrame =
-    cols.foldLeft(df)((d, c) => d.withColumn(c, col(c) + lit(i * Off)))
+  private def shift(df: DataFrame, cols: Seq[String], off: Long,
+                    i: Int): DataFrame =
+    cols.foldLeft(df)((d, c) => d.withColumn(c, col(c) + lit(i * off)))
 
   /** Replicate one table `reps`× with re-keyed ids (replica 0 is the
     * original bytes modulo parquet re-encode). */
   private def replicate(spark: SparkSession, base: String, out: String,
-                        name: String, reps: Int,
+                        name: String, reps: Int, off: Long,
                         keyCols: Seq[String],
                         mutate: (DataFrame, Int) => DataFrame): Unit = {
     val src = spark.read.parquet(s"$base/$name.parquet")
     val all = (0 until reps)
-      .map(i => mutate(shift(src, keyCols, i), i))
+      .map(i => mutate(shift(src, keyCols, off, i), i))
       .reduce(_.unionAll(_))
     all.write.mode("overwrite").parquet(s"$out/$name.parquet")
   }
 
-  private def idmut(df: DataFrame, i: Int): DataFrame = df
-
+  /** Synthesize the next decade: 10 re-keyed replicas of `base`.
+    * Decade 1 (sf0.1 → sf1) is the object doc's recipe over every
+    * table. Decade 2 (sf1 → sf10) replicates only what [[SpotShapes]]
+    * read (lineitem, documents, embeddings — ~1.6 GB, not a full
+    * testdata tree) with SECOND-level mutations, so the decade is
+    * shard-independent like the first:
+    *  - keys shift by replica·1e11 (a second 1e9 shift would COLLIDE
+    *    replica 1 of shard 2 with replica 0 of shard 3);
+    *  - tokens are suffixed `~s<i>` (distinct from the first level's
+    *    `~r<i>`; vocabulary ×10 again, the documented pessimistic
+    *    trade);
+    *  - embeddings: replica i multiplies by a SEEDED Rademacher sign
+    *    vector (i=0 identity). A second circular shift would collide:
+    *    first-level shifts are 0..9, so second-level shifts j would
+    *    make (i+j) repeat total-shift values of the SAME base vector
+    *    and manufacture cosine-1 duplicate clusters. A diagonal ±1
+    *    map is orthogonal — within-replica cosines are EXACTLY
+    *    preserved — and cross-replica cosine of the same base vector
+    *    is a sign-weighted sum of squares with E=0, Var ~ 1/d_eff,
+    *    i.e. random-pair statistics. */
   def synthesize(spark: SparkSession, base: String, out: String,
-                 reps: Int = 10): Unit = {
+                 decade: Int = 1, reps: Int = 10): Unit = {
     val marker = java.nio.file.Paths.get(s"$out/_SYNTH_OK")
     if (java.nio.file.Files.exists(marker)) return
-    // dimension tables stay as-is: a 10x fact corpus over the same
-    // nation/region star is the realistic growth mode
-    for (t <- Seq("region", "nation"))
-      spark.read.parquet(s"$base/$t.parquet")
-        .write.mode("overwrite").parquet(s"$out/$t.parquet")
-    replicate(spark, base, out, "customer", reps, Seq("c_custkey"), idmut)
-    replicate(spark, base, out, "supplier", reps, Seq("s_suppkey"), idmut)
-    replicate(spark, base, out, "part", reps, Seq("p_partkey"), idmut)
-    replicate(spark, base, out, "orders", reps,
-      Seq("o_orderkey", "o_custkey"), idmut)
-    replicate(spark, base, out, "lineitem", reps,
-      Seq("l_orderkey", "l_partkey", "l_suppkey"), idmut)
-    // events: read through the ns-long normalizer, write micros
-    val ev = graft.Tables.events(spark, base)
-    (0 until reps).map(i => shift(ev, Seq("event_id", "user_id"), i))
-      .reduce(_.unionAll(_))
-      .write.mode("overwrite").parquet(s"$out/events.parquet")
-    replicate(spark, base, out, "documents", reps, Seq("doc_id"),
-      (df, i) =>
-        if (i == 0) df
-        else df
-          .withColumn("text", expr(
-            s"array_join(transform(split(text, ' '), t -> " +
-              s"concat(t, '~r$i')), ' ')"))
-          .withColumn("n_chars", length(col("text")).cast("long")))
-    replicate(spark, base, out, "embeddings", reps, Seq("vec_id"),
-      (df, i) =>
-        if (i == 0) df
-        else df.withColumn("embedding", expr(
-          s"concat(slice(embedding, ${i + 1}, size(embedding) - $i), " +
-            s"slice(embedding, 1, $i))")))
+    val off = if (decade == 1) 1000000000L else 100000000000L
+    def rep(name: String, keyCols: Seq[String],
+            mutate: (DataFrame, Int) => DataFrame = (df, _) => df): Unit =
+      replicate(spark, base, out, name, reps, off, keyCols, mutate)
+    if (decade == 1) {
+      // dimension tables stay as-is: a 10x fact corpus over the same
+      // nation/region star is the realistic growth mode
+      for (t <- Seq("region", "nation"))
+        spark.read.parquet(s"$base/$t.parquet")
+          .write.mode("overwrite").parquet(s"$out/$t.parquet")
+      rep("customer", Seq("c_custkey"))
+      rep("supplier", Seq("s_suppkey"))
+      rep("part", Seq("p_partkey"))
+      rep("orders", Seq("o_orderkey", "o_custkey"))
+      // events: read through the ns-long normalizer, write micros
+      val ev = graft.Tables.events(spark, base)
+      (0 until reps).map(i => shift(ev, Seq("event_id", "user_id"), off, i))
+        .reduce(_.unionAll(_))
+        .write.mode("overwrite").parquet(s"$out/events.parquet")
+    }
+    rep("lineitem", Seq("l_orderkey", "l_partkey", "l_suppkey"))
+    val tag = if (decade == 1) "r" else "s"
+    rep("documents", Seq("doc_id"), (df, i) =>
+      if (i == 0) df
+      else df
+        .withColumn("text", expr(
+          s"array_join(transform(split(text, ' '), t -> " +
+            s"concat(t, '~$tag$i')), ' ')"))
+        .withColumn("n_chars", length(col("text")).cast("long")))
+    rep("embeddings", Seq("vec_id"), (df, i) =>
+      if (i == 0) df
+      else if (decade == 1) df.withColumn("embedding", expr(
+        s"concat(slice(embedding, ${i + 1}, size(embedding) - $i), " +
+          s"slice(embedding, 1, $i))"))
+      else {
+        val rnd = new scala.util.Random(424200L + i)
+        val signs = Array.fill(64)(if (rnd.nextBoolean()) 1.0f else -1.0f)
+        df.withColumn("embedding",
+          zip_with(col("embedding"), typedLit(signs),
+            (x, s) => x * s).cast("array<float>"))
+      })
     java.nio.file.Files.writeString(marker, s"base=$base reps=$reps\n")
   }
 
@@ -187,41 +229,78 @@ object ScaleSweep {
     (System.nanoTime() - t0) / 1e9
   }
 
+  /** Usage: `ScaleSweep [--decade 2] [base] [sf1] [sf10] [only]`.
+    * Decade 1 (the default) times [[Shapes]] at `base` (sf0.1) and its
+    * sf1 synth and writes SCALESWEEP.json; decade 2 also synthesizes
+    * sf10 from sf1 and times [[SpotShapes]] at all three scales into
+    * SCALESPOT.json, with per-decade exponents log10(t_next / t_prev).
+    * The JSON lands in the working directory; with `only` set (a
+    * comma-separated query list) the tool times just those shapes and
+    * SKIPS the write — the JSON files record full runs only. */
   def main(args: Array[String]): Unit = {
-    val base = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val synth = if (args.length > 1) args(1) else "/root/repo/target/sf1"
+    val (decade, rest) = args.toList match {
+      case "--decade" :: d :: tail => (d.toInt, tail)
+      case all => (1, all)
+    }
+    require(decade == 1 || decade == 2, s"--decade is 1 or 2, got $decade")
+    val base = rest.headOption.getOrElse("/root/testdata/sf0.1")
+    val synths = Seq("target/sf1", "target/sf10").take(decade).zipWithIndex
+      .map { case (d, k) => rest.lift(k + 1).getOrElse(d) }
+    val dirs = base +: synths
     val only: Set[String] =
-      if (args.length > 2) args(2).split(",").toSet else Set.empty
+      rest.lift(decade + 1).fold(Set.empty[String])(_.split(",").toSet)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = graft.Session.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000).selectExpr("sum(id)").collect() // JIT warm-up
-    synthesize(spark, base, synth)
-    val shapes = Shapes.filter(s => only.isEmpty || only(s._1))
-    def sweepAt(dir: String): Map[String, Double] = {
-      val p1 = shapes.map(s => s._1 -> time(spark, s._1, dir)).toMap
-      val p2 = shapes.map(s => s._1 -> time(spark, s._1, dir)).toMap
-      shapes.map(s => s._1 -> math.min(p1(s._1), p2(s._1))).toMap
+    for (d <- 1 to decade) synthesize(spark, dirs(d - 1), dirs(d), d)
+    val names = if (decade == 1) Shapes.map(_._1) else SpotShapes
+    val shapes = names.filter(q => only.isEmpty || only(q))
+    // min over two sweep-separated passes per scale
+    val t: Seq[Map[String, Double]] = dirs.map { dir =>
+      val p1 = shapes.map(q => q -> time(spark, q, dir)).toMap
+      val p2 = shapes.map(q => q -> time(spark, q, dir)).toMap
+      shapes.map(q => q -> math.min(p1(q), p2(q))).toMap
     }
-    val tSmall = sweepAt(base)
-    val tLarge = sweepAt(synth)
     def f(x: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, x)
-    val rows = shapes.map { case (q, claimed, why) =>
-      val (a, b) = (tSmall(q), tLarge(q))
-      val obs = math.log10(b / a)
-      System.out.println(
-        f"SCALESWEEP $q%-32s sf0.1=${f(a)}s sf1=${f(b)}s " +
-          f"observed=${f(obs)} claimed=${f(claimed)}")
-      s"""{"query":"$q","t_sf01":${f(a)},"t_sf1":${f(b)},""" +
-        s""""observed_exp":${f(obs)},"claimed_exp":$claimed,""" +
-        s""""claim":"$why"}"""
-    }
-    val out = s"""{"base":"$base","synth":"$synth","factor":10,""" +
-      s""""method":"min of 2 sweep-separated count() passes",""" +
+    def js(s: String) = graft.Verify.jsonString(s)
+    val (tag, head, method, rows) =
+      if (decade == 1) {
+        val rows = Shapes.filter(s => shapes.contains(s._1)).map {
+          case (q, claimed, why) =>
+            val (a, b) = (t(0)(q), t(1)(q))
+            val obs = math.log10(b / a)
+            System.out.println(
+              f"SCALESWEEP $q%-32s sf0.1=${f(a)}s sf1=${f(b)}s " +
+                f"observed=${f(obs)} claimed=${f(claimed)}")
+            s"""{"query":${js(q)},"t_sf01":${f(a)},"t_sf1":${f(b)},""" +
+              s""""observed_exp":${f(obs)},"claimed_exp":$claimed,""" +
+              s""""claim":${js(why)}}"""
+        }
+        ("SCALESWEEP",
+          s""""base":${js(base)},"synth":${js(dirs(1))},"factor":10""",
+          "min of 2 sweep-separated count() passes", rows)
+      } else {
+        val rows = shapes.map { q =>
+          val e1 = math.log10(t(1)(q) / t(0)(q))
+          val e2 = math.log10(t(2)(q) / t(1)(q))
+          System.out.println(
+            f"SCALESPOT $q%-34s sf0.1=${f(t(0)(q))}s sf1=${f(t(1)(q))}s " +
+              f"sf10=${f(t(2)(q))}s exp(d1)=${f(e1)} exp(d2)=${f(e2)}")
+          s"""{"query":${js(q)},"t_sf01":${f(t(0)(q))},""" +
+            s""""t_sf1":${f(t(1)(q))},"t_sf10":${f(t(2)(q))},""" +
+            s""""exp_decade1":${f(e1)},"exp_decade2":${f(e2)}}"""
+        }
+        ("SCALESPOT",
+          s""""base":${js(base)},"sf1":${js(dirs(1))},"sf10":${js(dirs(2))}""",
+          "min of 2 sweep-separated count() passes per scale", rows)
+      }
+    val out = s"""{$head,"method":${js(method)},""" +
       s""""shapes":[${rows.mkString(",")}]}"""
-    println(s"SCALESWEEP_JSON: $out")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("/root/repo/SCALESWEEP.json"), out + "\n")
+    println(s"${tag}_JSON: $out")
+    if (only.isEmpty)
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(s"$tag.json"), out + "\n")
     spark.stop()
   }
 }

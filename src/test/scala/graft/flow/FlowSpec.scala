@@ -667,16 +667,36 @@ class FlowSpec extends SparkTestBase {
     // re-run records skips
     Runner.run(Pipelines.TrainModel(cfg), spark,
       events = Runner.historySink(hist))
+    // a failure message with control characters (a tab, as a quoted
+    // stack trace has, and U+0001) must still be one valid JSON line
+    val msg = "a\tb\u0001c"
+    val boom = new Task {
+      override def name = "boom"
+      val output: Target = FileTarget(s"${cfg.baseDir}/never")
+      def run(spark: SparkSession): Unit = throw new RuntimeException(msg)
+    }
+    intercept[RuntimeException] {
+      Runner.run(boom, spark, events = Runner.historySink(hist))
+    }
+    import scala.jdk.CollectionConverters._
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val lines = Files.readAllLines(Paths.get(hist)).asScala
+    val failure = lines.map(mapper.readTree)
+      .filter(_.get("event").asText == "failure")
+    assert(failure.map(_.get("error").asText) == Seq(msg))
     val df = spark.read
       .schema("ts_ms LONG, event STRING, task STRING, millis LONG, error STRING")
       .json(hist)
     val byEvent = df.groupBy("event").count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    // 3 tasks: start+success each on run 1, skipped each on run 2
-    assert(byEvent == Map("start" -> 3L, "success" -> 3L, "skipped" -> 3L),
-      byEvent.toString)
+    // 3 tasks: start+success each on run 1, skipped each on run 2;
+    // then boom's one start + failure
+    assert(byEvent == Map("start" -> 4L, "success" -> 3L, "skipped" -> 3L,
+      "failure" -> 1L), byEvent.toString)
     assert(df.filter("event = 'success' AND millis < 0").count() == 0)
     assert(df.filter("task IS NULL OR ts_ms IS NULL").count() == 0)
+    assert(df.filter("event = 'failure'").select("error").head.getString(0)
+      == msg)
   }
 
   test("cycle detection") {
