@@ -1,6 +1,9 @@
 #!/bin/bash
 # Run a graft main class against the compiled sbt output without sbt JVM
 # startup overhead. Usage: scripts/run.sh graft.Verify <args...>
+# The classes come from the checkout this script lives in; output files a
+# tool writes land in the working directory.
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
 CLASS="$1"; shift
 ADD_OPENS=""
 for p in java.base/java.lang java.base/java.lang.invoke java.base/java.lang.reflect \
@@ -13,5 +16,5 @@ done
 exec java $ADD_OPENS \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -Xmx${SPARK_DRIVER_MEM:-48g} \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$ROOT/target/scala-2.13/classes:/opt/spark/jars/*" \
   "$CLASS" "$@"

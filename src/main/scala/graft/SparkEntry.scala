@@ -34,8 +34,8 @@ object SparkEntry {
     * the optimizer rule / strategy / SQL functions are installed at query
     * entry, so the physical plan a query gets (e.g. whether a
     * row_number<=k window becomes TopKPerKeyExec) is the same on a fresh
-    * session regardless of which query ran earlier. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    * session regardless of which query ran earlier. Built once. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
     modules.flatMap(_.queries).toMap.map { case (name, fn) =>
       name -> { (s: SparkSession, dir: String) =>
         plans.GraftExtensions.register(s); fn(s, dir)

@@ -1,40 +1,30 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Correctness dump: each SparkEntry.queries result → parquet, plus
+/** Correctness dump: each declared query's result → parquet, plus
   * oracle_sql.json, for the DuckDB compare. A throwing query is logged
-  * and the rest still dump; the run then exits 1 naming every failure. */
+  * and the rest still dump; the run then exits 1 naming every failure,
+  * and so does a name filter that selects no query. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional extra args: only dump queries whose name contains one of
     // them (dev loop: verify one operator without the full sweep)
-    val only = args.drop(2)
-    def selected(name: String): Boolean =
-      only.isEmpty || only.exists(name.contains)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Session.local(cpus)
+    val only = args.drop(2).toSeq
+    val names = Sweep.names.filter(q => only.isEmpty || only.exists(q.contains))
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    var failed = List.empty[String]
-    SparkEntry.queries.foreach { case (name, fn) =>
-      if (selected(name))
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-          failed ::= name
-        }
+    val results = Sweep.run(spark, sfDir, names, "VERIFY") { (name, df) =>
+      df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
     }
     val json = SparkEntry.oracleSql
-      .filter { case (k, _) => selected(k) }
+      .filter { case (k, _) => names.contains(k) }
       .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
-    if (failed.nonEmpty) {
-      System.err.println(s"VERIFY FAIL: ${failed.reverse.mkString(", ")}")
-      sys.exit(1)
-    }
+    val unmatched = only.filterNot(f => Sweep.names.exists(_.contains(f)))
+    Sweep.finish(spark, "VERIFY",
+      unmatched.map(f => s"filter '$f' selects no query") ++ Sweep.failed(results))
   }
 
   /** `s` as a quoted JSON string: backslash, quote and ALL control chars

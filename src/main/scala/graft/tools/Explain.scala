@@ -1,44 +1,53 @@
 package graft.tools
 
+import graft.Sweep
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Dev tool: print the formatted physical plan + wall time of declared
   * queries. Usage: Explain <queryName>[,<queryName>…] [sfDir]
-  * [explain|time|both]. Expression ids (`#12`, `#7L`) and exchange
-  * `plan_id`s are stripped from the plan text: they count up per
-  * session, so without them the plans printed by two checkouts can be
-  * `diff`ed. */
+  * [explain|time|both]. The plan text is [[normalise]]d, so the plans
+  * printed by two builds — in one session or in two checkouts — can be
+  * `diff`ed. A name that fails (or is not declared) is reported, the
+  * rest still print, and the run exits 1 naming every failure. */
 object Explain {
 
-  /** `plan` without expression ids and plan ids. */
-  private def stripIds(plan: String): String =
-    plan.replaceAll("#\\d+L?", "").replaceAll("plan_id=\\d+", "plan_id")
+  /** `plan` without what changes between two builds of one query:
+    * expression ids, exchange plan ids, RDD ids, lambda-variable and
+    * `_common_expr_` counters, source line numbers and the artifact root
+    * path. */
+  private[graft] def normalise(plan: String): String = Seq(
+    "#\\d+L?" -> "",
+    "plan_id=\\d+" -> "plan_id",
+    "RDD\\[\\d+\\]" -> "RDD",
+    "(lambda \\w+?)_\\d+" -> "$1",
+    "_common_expr_\\d+" -> "_common_expr",
+    "\\.scala:\\d+" -> ".scala",
+    java.util.regex.Pattern.quote(graft.Artifacts.root) -> "<artifacts>"
+  ).foldLeft(plan) { case (s, (re, to)) => s.replaceAll(re, to) }
 
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",").toSeq
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     val mode = if (args.length > 2) args(2) else "both"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = graft.Session.local(cpus)
+    val spark = graft.Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
     spark.sparkContext.setLogLevel("ERROR")
-    for (name <- names) {
+    val failed = names.flatMap { name =>
       println(s"== $name ==")
-      if (mode != "time")
-        println(stripIds(graft.SparkEntry.queries(name)(spark, sfDir)
-          .queryExecution.explainString(FormattedMode)))
-      if (mode != "explain") {
-        // rebuild the df EVERY run: construction is part of a query's cost
-        // (streaming queries drain their readStream there, sink queries write
-        // artifacts), and re-counting one df object lets Spark reuse shuffle
-        // map outputs across runs — both flatter the timing vs what
-        // graft.Bench (and the driver) actually charge per sweep
-        for (i <- 1 to 3) {
-          val t0 = System.nanoTime()
-          val n = graft.SparkEntry.queries(name)(spark, sfDir).count()
-          println(f"run$i: ${(System.nanoTime() - t0) / 1e9}%.3f s ($n rows)")
+      val plan = if (mode == "time") Nil
+        else Sweep.run(spark, sfDir, Seq(name), "EXPLAIN") { (_, df) =>
+          println(normalise(df.queryExecution.explainString(FormattedMode)))
         }
-      }
+      // rebuild the df EVERY run: construction is part of a query's cost
+      // (streaming queries drain their readStream there, sink queries write
+      // artifacts), and re-counting one df object lets Spark reuse shuffle
+      // map outputs across runs — both flatter the timing vs what
+      // graft.Bench (and the driver) actually charge per sweep
+      val runs = if (mode == "explain" || Sweep.failed(plan).nonEmpty) Nil
+        else Sweep.run(spark, sfDir, Seq.fill(3)(name), "EXPLAIN")((_, df) => df.count())
+      for ((r, i) <- runs.zipWithIndex; n <- r.value)
+        println(f"run${i + 1}: ${r.secs}%.3f s ($n rows)")
+      Sweep.failed(plan ++ runs)
     }
-    spark.stop()
+    Sweep.finish(spark, "EXPLAIN", failed.distinct)
   }
 }

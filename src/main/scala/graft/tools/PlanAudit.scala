@@ -1,24 +1,21 @@
 package graft.tools
 
-/** Systematic plan QA over EVERY declared query: flags the plan shapes
+/** Plan QA for EVERY declared query: flags the plan shapes
   * that are scale bugs when unintentional — cartesian products,
   * single-partition exchanges (global sorts/windows), and
   * driver-surprising nested-loop joins — so a regression in any one
   * query's plan shows up as a diff in this report, not as a cluster
   * incident later. Declared exceptions (bounded by construction or
-  * documented contracts) are listed per query below; audit FAILS
-  * (exit 1) on any UNDECLARED flag.
+  * documented contracts) are listed per query below; [[Smoke]] runs the
+  * audit on each query it executes and FAILS (exit 1) on any UNDECLARED
+  * flag.
   *
   * Coverage boundary, stated honestly: the audit sees the RETURNED
   * frame's executed plan. Queries that localCheckpoint an intermediate
   * (the tiny-frame reuse discipline) or build a persisted artifact run
   * those upstream jobs during construction, and their plans start at a
   * LogicalRDD/artifact scan here — the upstream shape is pinned by each
-  * operator's docstring + PlanSpec/Explain evidence, not by this sweep.
-  * Constructing the plans therefore also EXECUTES those eager stages:
-  * the audit doubles as a partial suite run.
-  *
-  * Usage: scripts/run.sh graft.tools.PlanAudit [sfDir]
+  * operator's docstring + PlanSpec/Explain evidence, not by this audit.
   */
 object PlanAudit {
 
@@ -323,37 +320,13 @@ object PlanAudit {
     "q_simsearch_topk_hnsw" -> Set("SinglePartition", "NestedLoop")
   ).withDefaultValue(Set.empty)
 
-  private val probes: Seq[(String, String => Boolean)] = Seq(
-    "Cartesian" -> (_.contains("CartesianProduct")),
-    "NestedLoop" -> (_.contains("BroadcastNestedLoopJoin")),
-    "SinglePartition" -> (_.contains("Exchange SinglePartition")))
+  /** flag -> the plan text that raises it. */
+  private val probes: Map[String, String] = Map(
+    "Cartesian" -> "CartesianProduct",
+    "NestedLoop" -> "BroadcastNestedLoopJoin",
+    "SinglePartition" -> "Exchange SinglePartition")
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = graft.Session.local("4")
-    spark.sparkContext.setLogLevel("ERROR")
-    var bad = 0
-    graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach {
-      case (name, fn) =>
-        val plan =
-          try fn(spark, sfDir).queryExecution.executedPlan.toString
-          catch { case e: Throwable =>
-            println(f"$name%-36s CONSTRUCT-FAIL " +
-              String.valueOf(e.getMessage).take(80))
-            bad += 1; ""
-          }
-        val flags = probes.collect {
-          case (tag, hit) if hit(plan) => tag
-        }.toSet
-        val undeclared = flags -- allowed(name)
-        if (undeclared.nonEmpty) {
-          bad += 1
-          println(f"$name%-36s UNDECLARED ${undeclared.mkString(",")}")
-        } else if (flags.nonEmpty)
-          println(f"$name%-36s ok (declared: ${flags.mkString(",")})")
-    }
-    println(if (bad == 0) "PLAN AUDIT PASS" else s"PLAN AUDIT FAIL: $bad")
-    spark.stop()
-    if (bad > 0) sys.exit(1)
-  }
+  /** The flags `plan` raises that `name` has not declared. */
+  def undeclared(name: String, plan: String): Set[String] =
+    probes.filter(p => plan.contains(p._2)).keySet -- allowed(name)
 }

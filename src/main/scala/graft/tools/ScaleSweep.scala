@@ -223,12 +223,6 @@ object ScaleSweep {
     java.nio.file.Files.writeString(marker, s"base=$base reps=$reps\n")
   }
 
-  private def time(spark: SparkSession, name: String, dir: String): Double = {
-    val t0 = System.nanoTime()
-    graft.SparkEntry.queries(name)(spark, dir).count()
-    (System.nanoTime() - t0) / 1e9
-  }
-
   /** Usage: `ScaleSweep [--decade 2] [base] [sf1] [sf10] [only]`.
     * Decade 1 (the default) times [[Shapes]] at `base` (sf0.1) and its
     * sf1 synth and writes SCALESWEEP.json; decade 2 also synthesizes
@@ -236,7 +230,9 @@ object ScaleSweep {
     * SCALESPOT.json, with per-decade exponents log10(t_next / t_prev).
     * The JSON lands in the working directory; with `only` set (a
     * comma-separated query list) the tool times just those shapes and
-    * SKIPS the write — the JSON files record full runs only. */
+    * SKIPS the write — the JSON files record full runs only. A shape
+    * that throws at any scale, or an `only` name that is not a shape of
+    * the decade, is named and the run exits 1 without writing. */
   def main(args: Array[String]): Unit = {
     val (decade, rest) = args.toList match {
       case "--decade" :: d :: tail => (d.toInt, tail)
@@ -247,21 +243,20 @@ object ScaleSweep {
     val synths = Seq("target/sf1", "target/sf10").take(decade).zipWithIndex
       .map { case (d, k) => rest.lift(k + 1).getOrElse(d) }
     val dirs = base +: synths
-    val only: Set[String] =
-      rest.lift(decade + 1).fold(Set.empty[String])(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.Session.local(cpus)
+    val only: Seq[String] =
+      rest.lift(decade + 1).fold(Seq.empty[String])(_.split(",").toSeq)
+    val spark = graft.Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000).selectExpr("sum(id)").collect() // JIT warm-up
     for (d <- 1 to decade) synthesize(spark, dirs(d - 1), dirs(d), d)
     val names = if (decade == 1) Shapes.map(_._1) else SpotShapes
-    val shapes = names.filter(q => only.isEmpty || only(q))
-    // min over two sweep-separated passes per scale
-    val t: Seq[Map[String, Double]] = dirs.map { dir =>
-      val p1 = shapes.map(q => q -> time(spark, q, dir)).toMap
-      val p2 = shapes.map(q => q -> time(spark, q, dir)).toMap
-      shapes.map(q => q -> math.min(p1(q), p2(q))).toMap
-    }
+    val selected = names.filter(q => only.isEmpty || only.contains(q))
+    val timed = dirs.map(graft.Sweep.timed(spark, _, selected, "SCALESWEEP"))
+    val broken = graft.Sweep.failed(timed.flatten)
+    val failed = only.filterNot(names.contains)
+      .map(q => s"$q (not a decade-$decade shape)") ++ broken
+    val t = timed.map(_.map(r => r.name -> r.secs).toMap)
+    val shapes = selected.filterNot(broken.contains)
     def f(x: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, x)
     def js(s: String) = graft.Verify.jsonString(s)
     val (tag, head, method, rows) =
@@ -298,9 +293,9 @@ object ScaleSweep {
     val out = s"""{$head,"method":${js(method)},""" +
       s""""shapes":[${rows.mkString(",")}]}"""
     println(s"${tag}_JSON: $out")
-    if (only.isEmpty)
+    if (only.isEmpty && failed.isEmpty)
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(s"$tag.json"), out + "\n")
-    spark.stop()
+    graft.Sweep.finish(spark, tag, failed)
   }
 }

@@ -1,0 +1,63 @@
+package graft
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** [[Sweep]]'s one failure policy, on a stub registry so no full query
+  * pass runs here, plus Explain's plan normaliser on a real query. */
+class SweepSpec extends SparkTestBase {
+
+  private def ok(n: Int): Sweep.Query = (s: SparkSession, _: String) => s.range(n).toDF()
+  private def boom(msg: String): Sweep.Query =
+    (_: SparkSession, _: String) => throw new IllegalStateException(msg)
+
+  test("a throw is recorded in Bench's format and later queries still run in order") {
+    val stub = Map("a" -> ok(1), "b" -> boom("first line\nsecond line"),
+      "c" -> ok(3), "d" -> boom("x" * 300))
+    var ran = Vector.empty[String]
+    val rs = Sweep.run(spark, sf0001, Seq("a", "b", "c", "d", "a"), "TEST", stub) {
+      (name, df: DataFrame) => ran :+= name; df.count()
+    }
+    assert(rs.map(_.name) == Seq("a", "b", "c", "d", "a"))
+    assert(ran == Vector("a", "c", "a"))
+    assert(rs.map(_.value) == Seq(Right(1L), Left("IllegalStateException: first line"),
+      Right(3L), Left("IllegalStateException: " + "x" * 200), Right(1L)))
+    assert(Sweep.failed(rs) == Seq("b", "d"))
+  }
+
+  test("a name that is not in the registry is a failure") {
+    val rs = Sweep.run(spark, sf0001, Seq("q_typo", "a"), "TEST",
+      Map("a" -> ok(2)))((_, df) => df.count())
+    assert(rs.head.value == Left("NoSuchElementException: key not found: q_typo"))
+    assert(rs(1).value == Right(2L))
+    assert(Sweep.failed(rs) == Seq("q_typo"))
+  }
+
+  test("Bench's two-pass timing fails a query that throws in only one pass") {
+    def flaky(throwOnCall: Int): Sweep.Query = {
+      var calls = 0
+      (s: SparkSession, d: String) => {
+        calls += 1
+        if (calls == throwOnCall) boom(s"call $calls")(s, d) else ok(4)(s, d)
+      }
+    }
+    val rs = Sweep.timed(spark, sf0001, Seq("first", "steady", "second"), "TEST",
+      Map("first" -> flaky(1), "steady" -> ok(5), "second" -> flaky(2)))
+    assert(rs.map(_.value) == Seq(Left("IllegalStateException: call 1"),
+      Right(5L), Left("IllegalStateException: call 2")))
+    assert(Sweep.failed(rs) == Seq("first", "second"))
+  }
+
+  test("Explain's normaliser maps two builds of one localCheckpoint query to one text") {
+    val plans = Sweep.run(spark, sf0001, Seq.fill(2)("q_dedup_minhash_lsh"), "TEST") {
+      (_, df) => df.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)
+    }.map(_.value.fold(e => fail(e), identity))
+    assert(plans.head.contains("at localCheckpoint at"))
+    // stripping expression and plan ids alone leaves RDD ids and lambda
+    // counters that change between the two builds
+    def idsOnly(p: String) =
+      p.replaceAll("#\\d+L?", "").replaceAll("plan_id=\\d+", "plan_id")
+    assert(idsOnly(plans.head) != idsOnly(plans(1)))
+    assert(tools.Explain.normalise(plans.head) == tools.Explain.normalise(plans(1)))
+  }
+}
