@@ -5,7 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** The one loop over the query registry. Every tool that runs declared
   * queries (Bench, Verify, Smoke, Explain, ScaleSweep) goes through
   * [[run]], so they share one failure policy: a throw — an unknown name
-  * included — is logged as `<TAG> FAIL <name> — <message>`, recorded, and
+  * included — is logged as `<TAG> FAIL <name>: <message>` (plain ASCII,
+  * so it greps the same under any locale), recorded, and
   * the sweep goes on; the caller then exits 1 naming every failure
   * ([[finish]]). */
 object Sweep {
@@ -33,7 +34,7 @@ object Sweep {
       val t0 = System.nanoTime()
       val value = try Right(action(name, queries(name)(spark, sfDir)))
         catch { case e: Throwable =>
-          System.err.println(s"$tag FAIL $name — ${message(e)}")
+          System.err.println(s"$tag FAIL $name: ${message(e)}")
           Left(message(e))
         }
       Result(name, (System.nanoTime() - t0) / 1e9, value)

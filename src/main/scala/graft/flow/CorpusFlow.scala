@@ -518,7 +518,7 @@ object CorpusFlow {
     * the batch's docs drop when they are the LARGER side of any ≤6-
     * Hamming dHash pair — the min-parent rule NearDupBatch's selfDrop
     * uses, applied on the image axis. Pairs come from the build-once
-    * image artifact (MultimodalOps.imagePhashPairs — rendered, encoded,
+    * image artifact (MultimodalOps.dupPairs — rendered, encoded,
     * ImageIO-decoded and hashed ONCE per corpus generation), so the
     * stage itself is one ids-only anti join: no codec work per batch,
     * and every batch agrees with first-seen-wins because the pair
@@ -542,8 +542,7 @@ object CorpusFlow {
         else
           // image-only: doc_b is the larger id of every scored pair
           // by construction (the min-parent rule)
-          MultimodalOps.imagePhashPairs(spark, cfg.sfDir)
-            .filter(col("hamming") <= 6)
+          MultimodalOps.dupPairs(MultimodalOps.Image, spark, cfg.sfDir)
             .select(col("doc_b").as("doc_id")).distinct()
       output.atomicWrite { tmp =>
         batch.join(dropIds, Seq("doc_id"), "left_anti")
@@ -765,6 +764,27 @@ object CorpusFlow {
     }
   }
 
+  /** The per-batch curation ladder under `cfg`, in order: each stage's
+    * output dir with the reason a doc present in the stage before is
+    * missing from it (raw has no stage before). The funnel counts every
+    * stage; the drop ledger diffs consecutive stages. */
+  private def stageLadder(cfg: CorpusConfig): Seq[(String, String)] =
+    Seq("raw" -> "") ++
+      (if (cfg.urlDedup) Seq("url_deduped" -> "url_dup") else Nil) ++
+      Seq("clean" -> "quality_fail", "deduped" -> "exact_dup",
+        "near_deduped" -> "near_dup") ++
+      (if (cfg.imageDedup) Seq("image_deduped" -> "image_dup") else Nil) ++
+      Seq("decontaminated" -> "decontaminated") ++
+      (if (cfg.dsirMinMicro.isDefined) Seq("selected" -> "dsir_offtarget")
+       else Nil) ++
+      Seq("mixed" -> "quota_cut", "packed" -> "")
+
+  /** One PackBatch per manifest line — packed implies that batch's whole
+    * ladder is complete: the dynamic dependency set of every all-batch
+    * readout. */
+  private def packBatches(cfg: CorpusConfig): Seq[Task] =
+    readManifest(PlanBatches(cfg).output.uri).indices.map(PackBatch(cfg, _))
+
   /** The curation retention funnel: per (batch, stage) row counts down
     * the whole ladder — the observability datasheet that tells an
     * operator WHERE a batch's documents went (quality gate vs exact
@@ -776,19 +796,11 @@ object CorpusFlow {
     * 1000s of batches. */
   final case class CurationFunnel(cfg: CorpusConfig) extends Task {
     override def requires: Seq[Task] = Seq(PlanBatches(cfg))
-    override def dynamicRequires(spark: SparkSession): Seq[Task] =
-      readManifest(requires.head.output.uri).indices
-        .map(PackBatch(cfg, _))
+    override def dynamicRequires(spark: SparkSession): Seq[Task] = packBatches(cfg)
     val output: DirTarget = DirTarget(s"${cfg.baseDir}/funnel")
     def run(spark: SparkSession): Unit = {
       val n = readManifest(requires.head.output.uri).length
-      val stages = Seq("raw") ++
-        (if (cfg.urlDedup) Seq("url_deduped") else Nil) ++
-        Seq("clean", "deduped", "near_deduped") ++
-        (if (cfg.imageDedup) Seq("image_deduped") else Nil) ++
-        Seq("decontaminated") ++
-        (if (cfg.dsirMinMicro.isDefined) Seq("selected") else Nil) ++
-        Seq("mixed", "packed")
+      val stages = stageLadder(cfg).map(_._1)
       def stageCounts(stage: String) =
         Committed.parquet(spark,
             (0 until n).map(i => s"${cfg.baseDir}/batch_$i/$stage"): _*)
@@ -825,23 +837,10 @@ object CorpusFlow {
       def ids(stage: String) =
         Committed.parquet(spark, s"${cfg.baseDir}/batch_$i/$stage")
           .select(col("doc_id"))
-      val ladder =
-        (if (cfg.urlDedup)
-          Seq(("raw", "url_deduped", "url_dup"),
-            ("url_deduped", "clean", "quality_fail"))
-        else Seq(("raw", "clean", "quality_fail"))) ++ Seq(
-        ("clean", "deduped", "exact_dup"),
-        ("deduped", "near_deduped", "near_dup")) ++
-        (if (cfg.imageDedup)
-          Seq(("near_deduped", "image_deduped", "image_dup"),
-            ("image_deduped", "decontaminated", "decontaminated"))
-        else Seq(("near_deduped", "decontaminated", "decontaminated"))) ++
-        (if (cfg.dsirMinMicro.isDefined)
-          Seq(("decontaminated", "selected", "dsir_offtarget"),
-            ("selected", "mixed", "quota_cut"))
-        else Seq(("decontaminated", "mixed", "quota_cut")))
+      // packed keeps every mixed row, so the ledger stops at mixed
+      val steps = stageLadder(cfg).init
       output.atomicWrite { tmp =>
-        ladder.map { case (a, b, reason) =>
+        steps.zip(steps.tail).map { case ((a, _), (b, reason)) =>
           ids(a).join(ids(b), Seq("doc_id"), "left_anti")
             .withColumn("reason", lit(reason))
         }.reduce(_.unionByName(_))
@@ -857,9 +856,7 @@ object CorpusFlow {
     * yield; Task.dynamicRequires). */
   final case class CorpusReport(cfg: CorpusConfig) extends Task {
     override def requires: Seq[Task] = Seq(PlanBatches(cfg))
-    override def dynamicRequires(spark: SparkSession): Seq[Task] =
-      readManifest(requires.head.output.uri).indices
-        .map(PackBatch(cfg, _))
+    override def dynamicRequires(spark: SparkSession): Seq[Task] = packBatches(cfg)
     val output: DirTarget = DirTarget(s"${cfg.baseDir}/report")
     def run(spark: SparkSession): Unit = {
       // the input paths ARE the dependency set's targets (single source

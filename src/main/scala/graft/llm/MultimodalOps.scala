@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column handling (north star; SURVEY.md §2.4): media as
@@ -23,6 +23,14 @@ import org.apache.spark.sql.functions._
   *    partition, not per row — the same shape a Pandas-UDF/mapInPandas or
   *    JNI decoder needs),
   *  - feature vectors as array<float> ready for the SimSearchOps path.
+  *
+  * The synthetic near-dup corpus behind the perceptual dedup queries has
+  * three modalities — image, audio and video — and each is declared ONCE
+  * as a [[Modality]] value ([[Image]], [[Audio]], [[Video]]): its name
+  * (artifact and file-tree path), render step, decoder, file layout,
+  * pair step, score column and dup rule. The dedup queries, their
+  * file-tree twins, the keep-lists, the consensus queries and
+  * flow.CorpusFlow's image stage all read those pieces from there.
   */
 object MultimodalOps extends graft.QueryModule {
 
@@ -161,29 +169,21 @@ object MultimodalOps extends graft.QueryModule {
     * binaryFile source turns a directory tree into (path, modTime,
     * length, content) rows with one split per file. The fixture payloads
     * are materialized ONCE per corpus as a content-keyed file tree
-    * (doc_<id>.bin, written executor-side via foreachPartition — no
-    * driver collect; atomic publish + stale-generation sweep like every
-    * other artifact), then ingested through format("binaryFile") with a
-    * pathGlobFilter. Doc identity is recovered from the file name and
-    * the projection matches [[mediaMeta]]'s byte accounting — the oracle
-    * is the same projection derived from the TABLE, so the row goes red
-    * if ingest drops, duplicates, or corrupts one payload byte. 1-in-20
-    * slice keeps the file count proportionate to what the operator
-    * demonstrates (ingest fidelity, not bulk throughput). */
+    * (doc_<id>.bin, written by [[ensureTree]]), then ingested through
+    * format("binaryFile") with a pathGlobFilter. Doc identity is
+    * recovered from the file name and the projection matches
+    * [[mediaMeta]]'s byte accounting — the oracle is the same projection
+    * derived from the TABLE, so the row goes red if ingest drops,
+    * duplicates, or corrupts one payload byte. 1-in-20 slice keeps the
+    * file count proportionate to what the operator demonstrates (ingest
+    * fidelity, not bulk throughput). */
   def mediaIngest(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val path = graft.Artifacts.ensure("graft_media_files/", sfDir, Docs, "v1") { tmp =>
+    val path = ensureTree(mediaDir("files"), sfDir,
       graft.Tables.documents(spark, sfDir)
         .filter($"doc_id" % 20 === 0 && $"text".isNotNull)
         .select($"doc_id", encode($"text", "UTF-8").as("payload"))
-        .as[(Long, Array[Byte])]
-        .foreachPartition { (it: Iterator[(Long, Array[Byte])]) =>
-          it.foreach { case (id, bytes) =>
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(s"$tmp/doc_$id.bin"), bytes)
-          }
-        }
-    }
+        .as[(Long, Array[Byte])]) { case (id, bytes) => Seq(s"doc_$id.bin" -> bytes) }
     spark.read.format("binaryFile")
       .option("pathGlobFilter", "*.bin").load(path)
       .select(
@@ -256,38 +256,14 @@ object MultimodalOps extends graft.QueryModule {
     }
   }
 
-  /** q_dedup_image_phash — perceptual near-duplicate detection for
-    * IMAGES: the dHash difference hash (Krawetz 2013; the standard
-    * cheap perceptual hash) + Hamming-band LSH candidate pairing —
-    * the image-pipeline twin of MinHash-LSH that a multimodal 100 TB
-    * corpus needs (crop-resistant "same picture, re-encoded" dedup,
-    * where exact byte dedup sees nothing). The pipeline is REAL end
-    * to end on the Spark side: each doc renders a deterministic
-    * grayscale PNG ([[renderGridPng]] — docs with doc_id ≡ 1 (mod
-    * 10) render their predecessor's image with one cell perturbed,
-    * the planted near-dups), the bytes are DECODED BACK through
-    * ImageIO (the actual codec path), and the 64-bit dHash is read
-    * off the decoded pixels as 4×16-bit bands. Candidates come from
-    * band-equality buckets (≤2 flipped bits can break at most 2 of 4
-    * bands — a planted pair always shares ≥2), full Hamming distance
-    * is Σ bit_count(xor) over the 4 bands, threshold ≤ 6. The DuckDB
-    * twin derives the SAME pixel grid from the closed-form luminance
-    * (no codec needed), so a green row proves the whole render →
-    * PNG-encode → ImageIO-decode → luminance → hash → band-join →
-    * Hamming chain lossless and correct — not just the SQL half.
-    *
-    * Scale: hashing is one narrow mapPartitions pass (codec init per
-    * partition, no shuffle); the hash frame is pinned once and feeds
-    * bands + both pair legs. Banding is the MinHash-LSH discipline —
-    * never all-pairs: candidates are equi-join buckets on (band,
-    * 16-bit value); expected bucket collision rate is n²·4/65536
-    * random pairs, and the [[BAND_CAP]] hot-bucket cap (exercised by
-    * the flat-thumbnail population, doc_id ≡ 24 mod 40 — see
-    * [[imagePhashPairs]]) bounds the quadratic term exactly like the
-    * shingle df-cutoff. The Hamming scoring join touches candidate
-    * pairs only. */
-  // (scaladoc above describes imagePhashDedup, declared as
-  // q_dedup_image_phash; the shared pieces follow)
+  /** The PNG decoder of the image and video modalities: REAL ImageIO
+    * decode of one payload, then its [[dhashBands]]; `what` names the
+    * payload in the undecodable-bytes error. */
+  private def pngBands(bytes: Array[Byte], what: => String): Array[Long] = {
+    val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
+    require(img != null, s"undecodable $what")
+    dhashBands(img)
+  }
 
   /** Hot-bucket cap for the Hamming-band join: band buckets larger
     * than this are dropped from candidate generation (both engines).
@@ -299,11 +275,15 @@ object MultimodalOps extends graft.QueryModule {
     * collisions with mass populations. */
   private val BAND_CAP = 8L
 
-  /** Content-keyed path of one modality's persisted hash+pair frames
+  /** The directory of the media artifact or file tree `name` under the
+    * artifact root. */
+  private def mediaDir(name: String): String = s"graft_media_$name/"
+
+  /** Content-keyed path of the media artifact or file tree `name`
     * (documents.parquet is the source every media fixture derives
-    * from, so its (length, mtime) keys all three). */
-  private[llm] def mediaArtifactPath(modality: String, sfDir: String): String =
-    graft.Artifacts.path(s"graft_media_$modality/", sfDir, Docs, "v1")
+    * from, so its (length, mtime) keys them all). */
+  private[llm] def mediaArtifactPath(name: String, sfDir: String): String =
+    graft.Artifacts.path(mediaDir(name), sfDir, Docs, "v1")
 
   /** The source every media artifact is keyed on. */
   private val Docs = "documents.parquet"
@@ -313,7 +293,7 @@ object MultimodalOps extends graft.QueryModule {
     * predecessor perturbed; flat docs (doc_id ≡ 24 mod 40 — always ≡ 4
     * mod 10, so never a dup nor a dup's base) are the hot-bucket
     * flood population. */
-  private def mediaRoles(spark: SparkSession, sfDir: String): DataFrame = {
+  private[llm] def mediaRoles(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     graft.Tables.documents(spark, sfDir)
       .select($"doc_id",
@@ -323,41 +303,31 @@ object MultimodalOps extends graft.QueryModule {
         ($"doc_id" % 40 === 24).as("isflat"))
   }
 
-  /** Render + decode + hash: one narrow mapPartitions pass per stage
-    * (codec init per partition), REAL PNG bytes both ways. The
-    * artifact build's codec leg; also the files-ingest twin's
-    * reference frame. */
-  private def imageHashedCompute(spark: SparkSession, sfDir: String): DataFrame =
-    renderAndHash(mediaRoles(spark, sfDir))
-
-  /** Render + hash an arbitrary roles slice — the full corpus for the
-    * main artifact, the arriving batch (and the batch ONLY) for the
-    * incremental add. */
-  private def renderAndHash(roles: DataFrame): DataFrame = {
+  /** One payload per role row, rendered by `render(base, isdup,
+    * isflat)` in one narrow mapPartitions pass (codec init per
+    * partition): the (doc_id, payload) rows of the image and audio
+    * modalities. */
+  private def renderPayloads(roles: DataFrame)(
+      render: (Long, Boolean, Boolean) => Array[Byte]): DataFrame = {
     import roles.sparkSession.implicits._
-    val png = roles
-      .as[(Long, Long, Boolean, Boolean)].mapPartitions { it =>
-        javax.imageio.ImageIO.setUseCache(false) // per-partition codec init
-        it.map { case (docId, base, isdup, isflat) =>
-          (docId, renderGridPng(base, isdup, isflat))
-        }
-      }.toDF("doc_id", "payload")
-    hashPngPayloads(png)
+    roles.as[(Long, Long, Boolean, Boolean)].mapPartitions { it =>
+      javax.imageio.ImageIO.setUseCache(false)
+      it.map { case (docId, base, isdup, isflat) =>
+        (docId, render(base, isdup, isflat))
+      }
+    }.toDF("doc_id", "payload")
   }
 
-  /** dHash the binary PNG column back through the REAL ImageIO path —
-    * shared by the render-sourced artifact build and the
-    * binaryFile-sourced ingest twin. */
-  private[llm] def hashPngPayloads(png: DataFrame): DataFrame = {
+  /** dHash the binary PNG column back through the REAL ImageIO path:
+    * the image modality's decoder, for rendered, file-tree and
+    * streamed payloads alike. */
+  private def hashPngPayloads(png: DataFrame): DataFrame = {
     import png.sparkSession.implicits._
     png.select(col("doc_id"), col("payload"))
       .as[(Long, Array[Byte])].mapPartitions { it =>
         javax.imageio.ImageIO.setUseCache(false)
         it.map { case (docId, bytes) =>
-          val img = javax.imageio.ImageIO.read(
-            new java.io.ByteArrayInputStream(bytes))
-          require(img != null, s"undecodable PNG for doc $docId")
-          val b = dhashBands(img)
+          val b = pngBands(bytes, s"PNG for doc $docId")
           (docId, b(0), b(1), b(2), b(3))
         }
       }.toDF("doc_id", "s0", "s1", "s2", "s3")
@@ -395,144 +365,6 @@ object MultimodalOps extends graft.QueryModule {
         BucketPairs.scored(hamming))
       .groupBy($"a".as("doc_a"), $"b".as("doc_b"))
       .agg(min($"score").as("hamming"))
-  }
-
-  /** The image artifact: hashed corpus + unthresholded scored pairs,
-    * persisted ONCE per fixture generation (the LPA build-once
-    * pattern — the r15 verdict's headline fix: the codec render +
-    * decode pass previously re-ran inside EVERY consumer, and the
-    * consensus query paid all three modalities' passes a second
-    * time). Seven consumers read parquet from here. */
-  private def imageArtifact(spark: SparkSession, sfDir: String): String =
-    graft.Artifacts.ensure("graft_media_image/", sfDir, Docs, "v1") { tmp =>
-      val hashed = imageHashedCompute(spark, sfDir).localCheckpoint()
-      hashed.write.parquet(s"$tmp/hashed")
-      phashPairsFromHashed(hashed).write.parquet(s"$tmp/pairs")
-    }
-
-  /** Render-sourced hashed frame, from the artifact (files-twin spec
-    * reads this as the reference). */
-  private[llm] def imageHashedFrame(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"${imageArtifact(spark, sfDir)}/hashed")
-
-  /** The shared scored-pair frame, from the artifact. */
-  private[graft] def imagePhashPairs(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"${imageArtifact(spark, sfDir)}/pairs")
-
-  def imagePhashDedup(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    imagePhashPairs(spark, sfDir)
-      .select($"doc_a", $"doc_b", $"hamming",
-        ($"doc_b" === $"doc_a" + 1 && $"doc_b" % 10 === 1).as("planted"))
-      .filter($"hamming" <= 6)
-      .orderBy($"doc_a", $"doc_b")
-  }
-
-  /** The image corpus as a FILE TREE (one PNG per doc): how a real
-    * 100 TB multimodal corpus actually arrives — one object per asset
-    * on shared storage, not a parquet column. Materialized once per
-    * fixture generation under the Target discipline (atomic publish +
-    * stale sweep), written executor-side via foreachPartition — no
-    * driver collect. */
-  private val ImageFiles = "graft_media_imagefiles/"
-  private[llm] def imageFilesPath(sfDir: String): String =
-    graft.Artifacts.path(ImageFiles, sfDir, Docs, "v1")
-
-  private def ensureImageFiles(spark: SparkSession, sfDir: String): String = {
-    import spark.implicits._
-    graft.Artifacts.ensure(ImageFiles, sfDir, Docs, "v1") { tmp =>
-      mediaRoles(spark, sfDir).as[(Long, Long, Boolean, Boolean)]
-        .foreachPartition { (it: Iterator[(Long, Long, Boolean, Boolean)]) =>
-          javax.imageio.ImageIO.setUseCache(false)
-          it.foreach { case (id, base, isdup, isflat) =>
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(s"$tmp/doc_$id.png"),
-              renderGridPng(base, isdup, isflat))
-          }
-        }
-    }
-  }
-
-  /** dHash frame sourced from the FILE TREE through Spark's built-in
-    * binaryFile reader (one split per file, doc identity recovered
-    * from the file name) — the production ingest shape feeding the
-    * SAME hash/band/pair pipeline as the render-sourced artifact.
-    * ImageFilesParitySpec pins the two frames identical. */
-  private[llm] def imageHashedFromFiles(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val path = ensureImageFiles(spark, sfDir)
-    val png = spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.png").load(path)
-      .select(
-        regexp_extract($"path", "doc_(\\d+)\\.png$", 1)
-          .cast("long").as("doc_id"),
-        $"content".as("payload"))
-    hashPngPayloads(png)
-  }
-
-  /** q_dedup_image_phash_files — the image near-dup pipeline driven
-    * END TO END from a real files table: the corpus is written once as
-    * one PNG object per doc (the object-store layout of a production
-    * multimodal corpus — the reference's whole premise is
-    * filesystem-target pipelines, 00_training_pipeline.py:26-27),
-    * ingested through format("binaryFile") with a pathGlobFilter, each
-    * payload decoded through the REAL ImageIO path, and the identical
-    * banded dHash dedup runs on the file-sourced hashes. Shares
-    * q_dedup_image_phash's closed-form oracle — a green row therefore
-    * proves the write → list → binaryFile-read → decode → hash chain
-    * byte-equivalent to the render-sourced artifact, i.e. files→dedup
-    * (the one production shape r15 had not driven) works end to end.
-    * Scale: binaryFile gives one split per file with ordinary executor
-    * parallelism (a 100 TB tree shards by directory prefix); hashing
-    * stays a narrow mapPartitions pass (codec init per partition),
-    * then the capped band join — nothing here is corpus-sized beyond
-    * the one file scan dedup must pay. */
-  def imagePhashDedupFiles(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    // the pair pipeline consumes the hash frame TWICE — its band rows
-    // feed both the census aggregate and the capped join probe — so
-    // without a pin the binaryFile scan + ImageIO decode execute as two
-    // independent subtrees (r17's "exactly once" comment was wrong; the
-    // r17 after-plan shows two Scan binaryFile branches). Pin the
-    // NARROW post-decode frame (doc_id + 4 shorts) so the media corpus
-    // is listed, read and decoded once — at corpus scale the doubled
-    // object-store pass dominates everything downstream. coalesce to
-    // one partition per core first: the binaryFile scan of N tiny
-    // objects yields ~N/32 near-empty splits (openCostInBytes charges
-    // 4 MB per ~2 KB file), and the collapse makes the single decode
-    // pass run in core-sized tasks and the checkpoint store core-count
-    // blocks (measured on the audio twin: sf0.1 2.9→2.2 s, sf1
-    // 25.1→12.7 s vs the unpinned double-scan shape).
-    val hashed = imageHashedFromFiles(spark, sfDir)
-      .coalesce(spark.sparkContext.defaultParallelism).localCheckpoint()
-    phashPairsFromHashed(hashed)
-      .select($"doc_a", $"doc_b", $"hamming",
-        ($"doc_b" === $"doc_a" + 1 && $"doc_b" % 10 === 1).as("planted"))
-      .filter($"hamming" <= 6)
-      .orderBy($"doc_a", $"doc_b")
-  }
-
-  /** q_dedup_image_threshold_curve — dup-rate-vs-threshold sweep for
-    * the image pipeline (the q_dedup_threshold_curve discipline on
-    * the Hamming axis): for each cutoff θ ∈ 0..8, how many candidate
-    * pairs collapse and how many documents they touch — the readout
-    * that picks the production Hamming threshold before a destructive
-    * dedup run. ONE scored-pair computation (checkpointed), a
-    * broadcast 9-row θ dim crossed against it — never 9 re-scans;
-    * zero-pair cutoffs stay as rows via the dim-side left join. */
-  def imagePhashThresholdCurve(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val pairs = imagePhashPairs(spark, sfDir) // artifact parquet — already materialized
-    val thetas = spark.range(0, 9).select($"id".as("theta"))
-    val nPairs = broadcast(thetas)
-      .join(pairs, $"hamming" <= $"theta", "left")
-      .groupBy($"theta").agg(count($"doc_a").as("n_pairs"))
-    val docsSide = pairs.select($"doc_a".as("d"), $"hamming")
-      .unionAll(pairs.select($"doc_b".as("d"), $"hamming"))
-    val nDocs = broadcast(thetas)
-      .join(docsSide, $"hamming" <= $"theta", "left")
-      .groupBy($"theta").agg(countDistinct($"d").as("n_docs_linked"))
-    nPairs.join(nDocs, Seq("theta")).orderBy($"theta")
   }
 
   /** Per-sample value of the synthetic audio corpus: the [[gridLum]]
@@ -597,17 +429,10 @@ object MultimodalOps extends graft.QueryModule {
     energies
   }
 
-  /** Decoded-audio energy compute: render (binary WAV payload), REAL
-    * AudioSystem decode, 8 exact band energies per doc — the artifact
-    * build's codec leg. */
-  private def audioEnergyCompute(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val wav = mediaRoles(spark, sfDir)
-      .as[(Long, Long, Boolean, Boolean)].mapPartitions { it =>
-        it.map { case (docId, base, isdup, isflat) =>
-          (docId, renderWav(base, isdup, isflat))
-        }
-      }.toDF("doc_id", "payload")
+  /** The audio modality's decoder: REAL AudioSystem decode of the
+    * (doc_id, payload) WAV rows, 8 exact band energies per doc. */
+  private def energyOf(wav: DataFrame): DataFrame = {
+    import wav.sparkSession.implicits._
     wav.as[(Long, Array[Byte])].mapPartitions { it =>
       it.map { case (docId, bytes) =>
         val e = audioBandEnergies(bytes)
@@ -616,36 +441,322 @@ object MultimodalOps extends graft.QueryModule {
     }.toDF("doc_id", "e0", "e1", "e2", "e3", "e4", "e5", "e6", "e7")
   }
 
-  /** Unthresholded audio candidate pairs: (band, exact energy) bucket
-    * join under the hot-bucket cap, scored by the NUMBER of equal
-    * bands — consumers apply their own ≥6 cutoff. */
-  private def audioPairsFromEnergy(frame: DataFrame): DataFrame = {
+  /** An energy frame as (doc_id, band, energy) rows. */
+  private def energyBands(frame: DataFrame): DataFrame = {
     import frame.sparkSession.implicits._
-    val bands = frame
-      .select($"doc_id", posexplode(
+    frame.select($"doc_id", posexplode(
         array($"e0", $"e1", $"e2", $"e3", $"e4", $"e5", $"e6", $"e7")))
       .toDF("doc_id", "band", "energy")
-    BucketPairs.underCap(bands, Seq("band", "energy"), $"doc_id", BAND_CAP)
+  }
+
+  /** Unthresholded audio candidate pairs: (band, exact energy) bucket
+    * join under the hot-bucket cap, scored by the NUMBER of equal
+    * bands. */
+  private def audioPairsFromEnergy(frame: DataFrame): DataFrame = {
+    import frame.sparkSession.implicits._
+    BucketPairs.underCap(energyBands(frame), Seq("band", "energy"), $"doc_id", BAND_CAP)
       .groupBy($"a".as("doc_a"), $"b".as("doc_b"))
       .agg(count(lit(1)).as("n_equal_bands"))
   }
 
-  /** The audio artifact: per-doc band energies + unthresholded scored
-    * pairs, built once per fixture generation. */
-  private def audioArtifact(spark: SparkSession, sfDir: String): String =
-    graft.Artifacts.ensure("graft_media_audio/", sfDir, Docs, "v1") { tmp =>
-      val energy = audioEnergyCompute(spark, sfDir).localCheckpoint()
-      energy.write.parquet(s"$tmp/energy")
-      audioPairsFromEnergy(energy).write.parquet(s"$tmp/pairs")
+  /** Frame f of a video doc: the grid of base·131+f, the dup replay
+    * perturbing frame 4 only. */
+  private def videoFrame(base: Long, f: Int, isdup: Boolean,
+                         isflat: Boolean): Array[Byte] =
+    renderGridPng(base * 131L + f, isdup && f == 4, isflat)
+
+  /** Video render: the frame-table column (one array<binary> of 8 REAL
+    * PNG frames per doc — the multimodal COLUMN shape), then the
+    * uniform stride-2 frame sampling to (doc_id, pos, payload) rows. */
+  private def renderFrames(roles: DataFrame): DataFrame = {
+    import roles.sparkSession.implicits._
+    roles.as[(Long, Long, Boolean, Boolean)].mapPartitions { it =>
+      javax.imageio.ImageIO.setUseCache(false)
+      it.map { case (docId, base, isdup, isflat) =>
+        (docId, Array.tabulate(8)(videoFrame(base, _, isdup, isflat)))
+      }
+    }.toDF("doc_id", "frames")
+      .select($"doc_id", posexplode($"frames")).toDF("doc_id", "pos", "payload")
+      .filter($"pos" % 2 === 0) // uniform stride-2 frame sampling
+  }
+
+  /** The video modality's decoder: per-frame ImageIO decode + dHash of
+    * the sampled (doc_id, pos, payload) rows. */
+  private def hashFrames(frames: DataFrame): DataFrame = {
+    import frames.sparkSession.implicits._
+    frames.as[(Long, Int, Array[Byte])].mapPartitions { it =>
+      javax.imageio.ImageIO.setUseCache(false)
+      it.map { case (docId, pos, bytes) =>
+        val b = pngBands(bytes, s"frame $pos of doc $docId")
+        (docId, pos, b(0), b(1), b(2), b(3))
+      }
+    }.toDF("doc_id", "pos", "s0", "s1", "s2", "s3")
+  }
+
+  /** (position, full hash) bucket join under the hot-bucket cap over
+    * a per-frame hash frame, scored by the number of exactly-equal
+    * sampled frames. */
+  private def videoPairsFromHashed(hashed: DataFrame): DataFrame = {
+    import hashed.sparkSession.implicits._
+    BucketPairs.underCap(
+        hashed, Seq("pos", "s0", "s1", "s2", "s3"), $"doc_id", BAND_CAP)
+      .groupBy($"a".as("doc_a"), $"b".as("doc_b"))
+      .agg(count(lit(1)).as("n_frames_equal"))
+  }
+
+  /** The 20% corpus slice the video-files twin materializes (both
+    * sides of planted pairs (x00, x01) and (x10, x11) stay in-slice).
+    * The flat flood population — ≡24 mod 40 — is only PARTIALLY
+    * excluded: of its mod-200 residues {24, 64, 104, 144, 184} exactly
+    * one (104 → doc_id % 100 = 4) lands under 20, so a fifth of the
+    * flood is in-slice and the hot-bucket cap census still engages in
+    * the files twin — consistently on both sides, because
+    * videoFramehashOracleOn mirrors the same slice predicate before
+    * its own cap CTE. */
+  private val VIDEO_FILES_SLICE = "doc_id % 100 < 20"
+
+  /** One media modality, declared once: every image, audio and video
+    * query, file tree, artifact, keep-list and consensus below reads
+    * its codec, layout and dup rule from here.
+    *  - `name` keys the build-once artifact ([[artifact]],
+    *    `graft_media_<name>/`) and the file tree (`files`);
+    *  - `ext` and `framed` are the tree's layout — one
+    *    `doc_<id>.<ext>` object per doc, or `doc_<id>_f<pos>.<ext>` per
+    *    sampled frame — and `slice` the docs it holds; `objects` renders
+    *    one doc's (name suffix, bytes) objects from its (base, isdup,
+    *    isflat) role;
+    *  - `render` turns role rows into (doc_id[, pos], payload) rows and
+    *    `decode` is the codec pass over them, rendered or read from the
+    *    tree alike;
+    *  - `decodedDir` is the artifact subdir that keeps the decoded frame
+    *    (video keeps only its pairs);
+    *  - `pairsOf` bands a decoded frame into unthresholded candidate
+    *    pairs (doc_a, doc_b, `score`), and `dup` is the dup call on
+    *    them. */
+  private[graft] final case class Modality(
+      name: String, ext: String, framed: Boolean, slice: Option[Column],
+      objects: (Long, Boolean, Boolean) => Seq[(String, Array[Byte])],
+      render: DataFrame => DataFrame, decode: DataFrame => DataFrame,
+      decodedDir: Option[String], pairsOf: DataFrame => DataFrame,
+      score: String, dup: Column) {
+    def files: String = mediaDir(name + "files")
+    def decodeRendered(roles: DataFrame): DataFrame = decode(render(roles))
+  }
+
+  /** dHash ≤ 6 of 64 bits. */
+  private[graft] val Image = Modality("image", "png", framed = false, None,
+    (base, isdup, isflat) => Seq("" -> renderGridPng(base, isdup, isflat)),
+    renderPayloads(_)(renderGridPng(_, _, _)), hashPngPayloads, Some("hashed"),
+    phashPairsFromHashed, "hamming", col("hamming") <= 6)
+
+  /** ≥ 6 of 8 band energies equal (the planted one-window perturbation
+    * leaves exactly 7). */
+  private[graft] val Audio = Modality("audio", "wav", framed = false, None,
+    (base, isdup, isflat) => Seq("" -> renderWav(base, isdup, isflat)),
+    renderPayloads(_)(renderWav), energyOf, Some("energy"),
+    audioPairsFromEnergy, "n_equal_bands", col("n_equal_bands") >= 6)
+
+  /** ≥ 3 of 4 sampled frame hashes exactly equal (the planted
+    * perturbation breaks only frame 4); the tree holds the ffmpeg
+    * frame-dump layout — frames extracted upstream AT the sampling
+    * rate — over [[VIDEO_FILES_SLICE]]. */
+  private[graft] val Video = Modality("video", "png", framed = true,
+    Some(expr(VIDEO_FILES_SLICE)),
+    (base, isdup, isflat) =>
+      Seq(0, 2, 4, 6).map(f => s"_f$f" -> videoFrame(base, f, isdup, isflat)),
+    renderFrames, hashFrames, None,
+    videoPairsFromHashed, "n_frames_equal", col("n_frames_equal") >= 3)
+
+  private val Media = Seq(Image, Audio, Video)
+
+  /** `m`'s artifact: its decoded corpus (when `decodedDir` keeps it) and
+    * unthresholded scored pairs, persisted ONCE per fixture generation
+    * (the LPA build-once pattern: without it the codec render + decode
+    * pass re-runs inside EVERY consumer, and the consensus query pays
+    * all three modalities' passes a second time). */
+  private def artifact(m: Modality, spark: SparkSession, sfDir: String): String =
+    graft.Artifacts.ensure(mediaDir(m.name), sfDir, Docs, "v1") { tmp =>
+      val decoded = m.decodeRendered(mediaRoles(spark, sfDir))
+      m.pairsOf(m.decodedDir match {
+        case Some(dir) =>
+          val kept = decoded.localCheckpoint()
+          kept.write.parquet(s"$tmp/$dir")
+          kept
+        case None => pinDecoded(decoded)
+      }).write.parquet(s"$tmp/pairs")
     }
 
-  /** The decoded-audio energy frame, from the artifact. */
-  private def audioEnergyFrame(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"${audioArtifact(spark, sfDir)}/energy")
+  /** `m`'s kept decoded frame, from the artifact. */
+  private[llm] def decodedFrame(m: Modality, spark: SparkSession, sfDir: String): DataFrame =
+    spark.read.parquet(s"${artifact(m, spark, sfDir)}/${m.decodedDir.get}")
 
-  /** The audio scored-pair frame, from the artifact. */
-  private[graft] def audioPairs(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"${audioArtifact(spark, sfDir)}/pairs")
+  /** `m`'s unthresholded scored pairs, from the artifact. */
+  private def pairs(m: Modality, spark: SparkSession, sfDir: String): DataFrame =
+    spark.read.parquet(s"${artifact(m, spark, sfDir)}/pairs")
+
+  /** `m`'s dup pairs: the scored pairs its dup rule calls. */
+  private[graft] def dupPairs(m: Modality, spark: SparkSession, sfDir: String): DataFrame =
+    pairs(m, spark, sfDir).filter(m.dup)
+
+  /** The dedup report over `scored` pairs: the dup call, then
+    * (doc_a, doc_b, score, planted) in pair order. */
+  private def dupReport(m: Modality, scored: DataFrame): DataFrame =
+    scored.filter(m.dup)
+      .select(col("doc_a"), col("doc_b"), col(m.score),
+        (col("doc_b") === col("doc_a") + 1 && col("doc_b") % 10 === 1).as("planted"))
+      .orderBy(col("doc_a"), col("doc_b"))
+
+  private def dedup(m: Modality, spark: SparkSession, sfDir: String): DataFrame =
+    dupReport(m, pairs(m, spark, sfDir))
+
+  /** Pin a decoded frame the pair step reads twice (bucket census +
+    * capped join probe): without it the codec pass runs as two
+    * independent subtrees (two Scan binaryFile branches in the plan),
+    * and at corpus scale the doubled object-store
+    * pass dominates everything downstream. coalesce to one partition per
+    * core first: the binaryFile scan of N tiny objects yields ~N/32
+    * near-empty splits (openCostInBytes charges 4 MB per ~2 KB file),
+    * and the collapse makes the single decode pass run in core-sized
+    * tasks and the checkpoint store core-count blocks (measured on the
+    * audio twin: sf0.1 2.9→2.2 s, sf1 25.1→12.7 s vs the unpinned
+    * double-scan shape). */
+  private def pinDecoded(decoded: DataFrame): DataFrame =
+    decoded.coalesce(decoded.sparkSession.sparkContext.defaultParallelism)
+      .localCheckpoint()
+
+  /** A FILE TREE (one object per asset on shared storage — how a real
+    * 100 TB multimodal corpus arrives, not as a parquet column),
+    * materialized once per fixture generation under the Target
+    * discipline (atomic publish + stale sweep): each of `rows` writes
+    * its (file name, bytes) `objects` executor-side via
+    * foreachPartition — no driver collect. */
+  private def ensureTree[T](tree: String, sfDir: String, rows: => Dataset[T])(
+      objects: T => Seq[(String, Array[Byte])]): String =
+    graft.Artifacts.ensure(tree, sfDir, Docs, "v1") { tmp =>
+      rows.foreachPartition { (it: Iterator[T]) =>
+        javax.imageio.ImageIO.setUseCache(false) // per-partition codec init
+        it.foreach(objects(_).foreach { case (name, bytes) =>
+          java.nio.file.Files.write(java.nio.file.Paths.get(s"$tmp/$name"), bytes)
+        })
+      }
+    }
+
+  /** `tree` in `m`'s layout, holding the docs of `slice`. */
+  private def ensureFiles(m: Modality, spark: SparkSession, sfDir: String,
+                          tree: String, slice: Option[Column]): String = {
+    import spark.implicits._
+    val (objects, ext) = (m.objects, m.ext)
+    ensureTree(tree, sfDir, slice.foldLeft(mediaRoles(spark, sfDir))(_.filter(_))
+        .as[(Long, Long, Boolean, Boolean)]) { case (id, base, isdup, isflat) =>
+      objects(base, isdup, isflat).map { case (sfx, bytes) => s"doc_$id$sfx.$ext" -> bytes }
+    }
+  }
+
+  private[llm] def filesPath(m: Modality, sfDir: String): String =
+    graft.Artifacts.path(m.files, sfDir, Docs, "v1")
+
+  /** (doc_id[, pos], payload) rows of a binaryFile scan over a tree in
+    * `m`'s layout: doc identity — and a frame's position — recovered
+    * from the file name. */
+  private def fileRows(m: Modality, files: DataFrame): DataFrame = {
+    val frame = if (m.framed) "_f\\d+" else ""
+    files.select(Seq(regexp_extract(col("path"), s"doc_(\\d+)$frame\\.${m.ext}$$", 1)
+        .cast("long").as("doc_id")) ++
+      (if (m.framed) Seq(regexp_extract(col("path"), s"_f(\\d+)\\.${m.ext}$$", 1)
+        .cast("int").as("pos")) else Nil) :+
+      col("content").as("payload"): _*)
+  }
+
+  /** `m`'s decoded frame sourced from its FILE TREE through Spark's
+    * built-in binaryFile reader (one split per file) — the production
+    * ingest shape feeding the SAME decoder as the rendered artifact.
+    * ImageFilesParitySpec pins the two frames identical. */
+  private[llm] def decodedFromFiles(m: Modality, spark: SparkSession,
+                                    sfDir: String): DataFrame =
+    m.decode(fileRows(m, spark.read.format("binaryFile")
+      .option("pathGlobFilter", s"*.${m.ext}")
+      .load(ensureFiles(m, spark, sfDir, m.files, m.slice))))
+
+  /** `m`'s dedup driven END TO END from its file tree: the decoded
+    * frame is pinned ([[pinDecoded]]) so the tree is listed, read and
+    * decoded once, then banded and called exactly like the artifact. */
+  private def dedupFiles(m: Modality, spark: SparkSession, sfDir: String): DataFrame =
+    dupReport(m, m.pairsOf(pinDecoded(decodedFromFiles(m, spark, sfDir))))
+
+  /** q_dedup_image_phash — perceptual near-duplicate detection for
+    * IMAGES: the dHash difference hash (Krawetz 2013; the standard
+    * cheap perceptual hash) + Hamming-band LSH candidate pairing —
+    * the image-pipeline twin of MinHash-LSH that a multimodal 100 TB
+    * corpus needs (crop-resistant "same picture, re-encoded" dedup,
+    * where exact byte dedup sees nothing). The pipeline is REAL end
+    * to end on the Spark side: each doc renders a deterministic
+    * grayscale PNG ([[renderGridPng]] — docs with doc_id ≡ 1 (mod
+    * 10) render their predecessor's image with one cell perturbed,
+    * the planted near-dups), the bytes are DECODED BACK through
+    * ImageIO (the actual codec path), and the 64-bit dHash is read
+    * off the decoded pixels as 4×16-bit bands. Candidates come from
+    * band-equality buckets (≤2 flipped bits can break at most 2 of 4
+    * bands — a planted pair always shares ≥2), full Hamming distance
+    * is Σ bit_count(xor) over the 4 bands, threshold ≤ 6. The DuckDB
+    * twin derives the SAME pixel grid from the closed-form luminance
+    * (no codec needed), so a green row proves the whole render →
+    * PNG-encode → ImageIO-decode → luminance → hash → band-join →
+    * Hamming chain lossless and correct — not just the SQL half.
+    *
+    * Scale: hashing is one narrow mapPartitions pass (codec init per
+    * partition, no shuffle); the hash frame is pinned once and feeds
+    * bands + both pair legs. Banding is the MinHash-LSH discipline —
+    * never all-pairs: candidates are equi-join buckets on (band,
+    * 16-bit value); expected bucket collision rate is n²·4/65536
+    * random pairs, and the [[BAND_CAP]] hot-bucket cap (exercised by
+    * the flat-thumbnail population, doc_id ≡ 24 mod 40) bounds the
+    * quadratic term exactly like the shingle df-cutoff. The Hamming
+    * scoring join touches candidate pairs only. */
+  def imagePhashDedup(spark: SparkSession, sfDir: String): DataFrame =
+    dedup(Image, spark, sfDir)
+
+  /** q_dedup_image_phash_files — the image near-dup pipeline driven
+    * END TO END from a real files table: the corpus is written once as
+    * one PNG object per doc (the object-store layout of a production
+    * multimodal corpus — the reference's whole premise is
+    * filesystem-target pipelines, 00_training_pipeline.py:26-27),
+    * ingested through format("binaryFile") with a pathGlobFilter, each
+    * payload decoded through the REAL ImageIO path, and the identical
+    * banded dHash dedup runs on the file-sourced hashes. Shares
+    * q_dedup_image_phash's closed-form oracle — a green row therefore
+    * proves the write → list → binaryFile-read → decode → hash chain
+    * byte-equivalent to the render-sourced artifact, i.e. files→dedup
+    * works end to end.
+    * Scale: binaryFile gives one split per file with ordinary executor
+    * parallelism (a 100 TB tree shards by directory prefix); hashing
+    * stays a narrow mapPartitions pass (codec init per partition),
+    * then the capped band join — nothing here is corpus-sized beyond
+    * the one file scan dedup must pay. */
+  def imagePhashDedupFiles(spark: SparkSession, sfDir: String): DataFrame =
+    dedupFiles(Image, spark, sfDir)
+
+  /** q_dedup_image_threshold_curve — dup-rate-vs-threshold sweep for
+    * the image pipeline (the q_dedup_threshold_curve discipline on
+    * the Hamming axis): for each cutoff θ ∈ 0..8, how many candidate
+    * pairs collapse and how many documents they touch — the readout
+    * that picks the production Hamming threshold before a destructive
+    * dedup run. ONE scored-pair computation (checkpointed), a
+    * broadcast 9-row θ dim crossed against it — never 9 re-scans;
+    * zero-pair cutoffs stay as rows via the dim-side left join. */
+  def imagePhashThresholdCurve(spark: SparkSession, sfDir: String): DataFrame = {
+    import spark.implicits._
+    val scored = pairs(Image, spark, sfDir) // artifact parquet — already materialized
+    val thetas = spark.range(0, 9).select($"id".as("theta"))
+    val nPairs = broadcast(thetas)
+      .join(scored, $"hamming" <= $"theta", "left")
+      .groupBy($"theta").agg(count($"doc_a").as("n_pairs"))
+    val docsSide = scored.select($"doc_a".as("d"), $"hamming")
+      .unionAll(scored.select($"doc_b".as("d"), $"hamming"))
+    val nDocs = broadcast(thetas)
+      .join(docsSide, $"hamming" <= $"theta", "left")
+      .groupBy($"theta").agg(countDistinct($"d").as("n_docs_linked"))
+    nPairs.join(nDocs, Seq("theta")).orderBy($"theta")
+  }
 
   /** q_multimodal_audio_energy — banded energy profile of a REAL
     * audio decode: each doc renders a deterministic 1024-sample
@@ -660,11 +771,7 @@ object MultimodalOps extends graft.QueryModule {
     * sort. */
   def audioEnergy(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    audioEnergyFrame(spark, sfDir)
-      .select($"doc_id", posexplode(
-        array($"e0", $"e1", $"e2", $"e3", $"e4", $"e5", $"e6", $"e7")))
-      .toDF("doc_id", "band", "energy")
-      .orderBy($"doc_id", $"band")
+    energyBands(decodedFrame(Audio, spark, sfDir)).orderBy($"doc_id", $"band")
   }
 
   /** q_dedup_audio_fingerprint — near-duplicate AUDIO detection via
@@ -673,40 +780,13 @@ object MultimodalOps extends graft.QueryModule {
     * hot-bucket cap (≤[[BAND_CAP]], exercised by the silence
     * population — every silent clip has the all-zero profile) drops
     * flooded buckets BEFORE pair generation, candidates score by the
-    * NUMBER of equal bands, and ≥6 of 8 equal bands is the dup call
-    * (the planted one-window perturbation leaves exactly 7 equal).
+    * NUMBER of equal bands, and ≥6 of 8 equal bands is the dup call.
     * All-integer end to end — the oracle mirrors the whole chain from
     * the closed-form samples. Scale: same argument as the image
     * banding — bucket join never all-pairs, cap bounds the
     * degenerate-population quadratic. */
-  def audioFingerprintDedup(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    audioPairs(spark, sfDir)
-      .filter($"n_equal_bands" >= 6)
-      .select($"doc_a", $"doc_b", $"n_equal_bands",
-        ($"doc_b" === $"doc_a" + 1 && $"doc_b" % 10 === 1).as("planted"))
-      .orderBy($"doc_a", $"doc_b")
-  }
-
-  /** The audio corpus as a FILE TREE (one WAV object per doc) — the
-    * audio twin of [[imageFilesPath]]. */
-  private val AudioFiles = "graft_media_audiofiles/"
-  private[llm] def audioFilesPath(sfDir: String): String =
-    graft.Artifacts.path(AudioFiles, sfDir, Docs, "v1")
-
-  private def ensureAudioFiles(spark: SparkSession, sfDir: String): String = {
-    import spark.implicits._
-    graft.Artifacts.ensure(AudioFiles, sfDir, Docs, "v1") { tmp =>
-      mediaRoles(spark, sfDir).as[(Long, Long, Boolean, Boolean)]
-        .foreachPartition { (it: Iterator[(Long, Long, Boolean, Boolean)]) =>
-          it.foreach { case (id, base, isdup, isflat) =>
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(s"$tmp/doc_$id.wav"),
-              renderWav(base, isdup, isflat))
-          }
-        }
-    }
-  }
+  def audioFingerprintDedup(spark: SparkSession, sfDir: String): DataFrame =
+    dedup(Audio, spark, sfDir)
 
   /** q_dedup_audio_fingerprint_files — the audio near-dup pipeline
     * driven from a real files table (the q_dedup_image_phash_files
@@ -717,38 +797,9 @@ object MultimodalOps extends graft.QueryModule {
     * banded-energy dedup. Shares q_dedup_audio_fingerprint's
     * closed-form oracle — green proves the write → list →
     * binaryFile-read → RIFF-decode → energy chain byte-equivalent to
-    * the render-sourced artifact. Scale: as the image twin — one split
-    * per file, narrow decode pass, capped bucket join. */
-  def audioFingerprintDedupFiles(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val path = ensureAudioFiles(spark, sfDir)
-    val wav = spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.wav").load(path)
-      .select(
-        regexp_extract($"path", "doc_(\\d+)\\.wav$", 1)
-          .cast("long").as("doc_id"),
-        $"content".as("payload"))
-    val energy = wav.as[(Long, Array[Byte])].mapPartitions { it =>
-      it.map { case (docId, bytes) =>
-        val e = audioBandEnergies(bytes)
-        (docId, e(0), e(1), e(2), e(3), e(4), e(5), e(6), e(7))
-      }
-    }.toDF("doc_id", "e0", "e1", "e2", "e3", "e4", "e5", "e6", "e7")
-    // the pair pipeline reads the energy frame twice (census + capped
-    // join probe) — pin the narrow post-decode frame so the WAV corpus
-    // is scanned and decoded once (see imagePhashDedupFiles). coalesce
-    // first: the binaryFile scan of N tiny objects yields ~N/32 splits
-    // (openCostInBytes charges 4 MB per ~2 KB file), so the checkpoint
-    // would otherwise store hundreds of near-empty blocks and the
-    // downstream exchange launch as many near-empty tasks; one narrow
-    // partition per core is right at any scale.
-    audioPairsFromEnergy(energy
-      .coalesce(spark.sparkContext.defaultParallelism).localCheckpoint())
-      .filter($"n_equal_bands" >= 6)
-      .select($"doc_a", $"doc_b", $"n_equal_bands",
-        ($"doc_b" === $"doc_a" + 1 && $"doc_b" % 10 === 1).as("planted"))
-      .orderBy($"doc_a", $"doc_b")
-  }
+    * the render-sourced artifact. */
+  def audioFingerprintDedupFiles(spark: SparkSession, sfDir: String): DataFrame =
+    dedupFiles(Audio, spark, sfDir)
 
   /** q_dedup_video_framehash — near-duplicate VIDEO detection over
     * pre-extracted frames, completing the modality triad (image
@@ -764,85 +815,36 @@ object MultimodalOps extends graft.QueryModule {
     * (positions 0,2,4,6 of 8 — the decodeStub contract made
     * load-bearing), each sampled frame decodes back through ImageIO
     * and hashes via [[dhashBands]], and two videos are near-dups when
-    * ≥3 of 4 sampled frame hashes are EXACTLY equal (the planted
-    * perturbation breaks only frame 4). Candidates come from bucket
-    * equality on (position, full hash) under the [[BAND_CAP]]
-    * hot-bucket cap — never all-pairs; the flat population floods one
-    * bucket per position and is dropped before pair generation.
-    * The DuckDB twin derives every frame grid closed-form, so green
-    * proves the render → encode → sample → decode → hash → bucket →
-    * overlap chain. Scale: frames explode corpus×8 rows map-side,
-    * sampling cuts half before any shuffle; the rest is the image
-    * banding argument. */
-  def videoFramehashDedup(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    videoPairs(spark, sfDir)
-      .filter($"n_frames_equal" >= 3)
-      .select($"doc_a", $"doc_b", $"n_frames_equal",
-        ($"doc_b" === $"doc_a" + 1 && $"doc_b" % 10 === 1).as("planted"))
-      .orderBy($"doc_a", $"doc_b")
-  }
+    * ≥3 of 4 sampled frame hashes are EXACTLY equal. Candidates come
+    * from bucket equality on (position, full hash) under the
+    * [[BAND_CAP]] hot-bucket cap — never all-pairs; the flat
+    * population floods one bucket per position and is dropped before
+    * pair generation. The DuckDB twin derives every frame grid
+    * closed-form, so green proves the render → encode → sample →
+    * decode → hash → bucket → overlap chain. Scale: frames explode
+    * corpus×8 rows map-side, sampling cuts half before any shuffle;
+    * the 8-PNG-per-doc decode — the triad's most expensive codec pass
+    * — runs once per fixture generation, in the artifact build. */
+  def videoFramehashDedup(spark: SparkSession, sfDir: String): DataFrame =
+    dedup(Video, spark, sfDir)
 
-  /** Video scored-pair compute: frame-table render (one array<binary>
-    * of REAL PNG frames per doc — the multimodal COLUMN shape),
-    * stride-2 sampling, per-frame ImageIO decode + dHash, (position,
-    * full hash) bucket join under the hot-bucket cap, scored by the
-    * NUMBER of exactly-equal sampled frames. */
-  private def videoPairsCompute(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val vids = mediaRoles(spark, sfDir)
-      .as[(Long, Long, Boolean, Boolean)].mapPartitions { it =>
-        javax.imageio.ImageIO.setUseCache(false)
-        it.map { case (docId, base, isdup, isflat) =>
-          val frames = Array.tabulate(8)(f =>
-            renderGridPng(base * 131L + f, isdup && f == 4, isflat))
-          (docId, frames)
-        }
-      }.toDF("doc_id", "frames")
-    val sampled = vids
-      .select($"doc_id", posexplode($"frames")).toDF("doc_id", "pos", "payload")
-      .filter($"pos" % 2 === 0) // uniform stride-2 frame sampling
-    val hashed = sampled.as[(Long, Int, Array[Byte])].mapPartitions { it =>
-      javax.imageio.ImageIO.setUseCache(false)
-      it.map { case (docId, pos, bytes) =>
-        val img = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(bytes))
-        require(img != null, s"undecodable frame $pos of doc $docId")
-        val b = dhashBands(img)
-        (docId, pos, b(0), b(1), b(2), b(3))
-      }
-    }.toDF("doc_id", "pos", "s0", "s1", "s2", "s3")
-    // pair pipeline reads the hash frame twice (census + capped join
-    // probe): pin it so the 8-PNG-per-doc render + decode — the triad's
-    // most expensive codec pass — runs once, not twice
-    videoPairsFromHashed(hashed
-      .coalesce(spark.sparkContext.defaultParallelism).localCheckpoint())
-  }
-
-  /** (position, full hash) bucket join under the hot-bucket cap over
-    * a per-frame hash frame, scored by the number of exactly-equal
-    * sampled frames — shared by the frame-column compute and the
-    * frame-files ingest twin. */
-  private def videoPairsFromHashed(hashed: DataFrame): DataFrame = {
-    import hashed.sparkSession.implicits._
-    BucketPairs.underCap(
-        hashed, Seq("pos", "s0", "s1", "s2", "s3"), $"doc_id", BAND_CAP)
-      .groupBy($"a".as("doc_a"), $"b".as("doc_b"))
-      .agg(count(lit(1)).as("n_frames_equal"))
-  }
-
-  /** The video artifact: unthresholded frame-overlap pairs, built once
-    * per fixture generation (8 PNG decodes per doc is the triad's most
-    * expensive codec pass — exactly the cost the artifact retires from
-    * every re-read). */
-  private def videoArtifact(spark: SparkSession, sfDir: String): String =
-    graft.Artifacts.ensure("graft_media_video/", sfDir, Docs, "v1") { tmp =>
-      videoPairsCompute(spark, sfDir).write.parquet(s"$tmp/pairs")
-    }
-
-  /** The video scored-pair frame, from the artifact. */
-  private[graft] def videoPairs(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"${videoArtifact(spark, sfDir)}/pairs")
+  /** q_dedup_video_framehash_files — the video near-dup pipeline
+    * driven from a real FRAME-FILES table, completing the files→dedup
+    * triad (image/audio/this): production video dedup never decodes
+    * video in Spark — frames land as one PNG object per (video,
+    * sampled position) (the ffmpeg dump layout), and the engine
+    * ingests the directory through binaryFile, recovers (doc, pos)
+    * from the file name, ImageIO-decodes each frame, and runs the
+    * identical (position, hash) capped bucket join. Runs on a 20%
+    * corpus slice (both planted-pair roles survive; the bucket census
+    * — and so the cap — is over the on-disk population, and the
+    * oracle mirrors the same slice). Green at both scales proves the
+    * frame-dump → list → read → decode → hash → bucket → overlap
+    * chain end to end. Scale: one split per frame file; the slice is
+    * a demo bound, not a scale crutch — the full-corpus cost is the
+    * column-shaped twin ×(files-scan constant). */
+  def videoFramehashDedupFiles(spark: SparkSession, sfDir: String): DataFrame =
+    dedupFiles(Video, spark, sfDir)
 
   /** The held-out "today's batch" of the incremental image-dedup
     * drill: doc_id % 100 picked so the fold-in exercises all three
@@ -851,7 +853,9 @@ object MultimodalOps extends graft.QueryModule {
     * 80+81 (a replay pair arriving WHOLLY inside the batch). */
   private[llm] val INCR_BATCH: Seq[Long] = Seq(41L, 60L, 80L, 81L)
 
-  private val ImageIncrBase = "graft_media_image_incr/"
+  private def isBatch: Column = pmod(col("doc_id"), lit(100L)).isin(INCR_BATCH: _*)
+
+  private val ImageIncrBase = mediaDir("image_incr")
   private[llm] def imageIncrBasePath(sfDir: String): String =
     graft.Artifacts.path(ImageIncrBase, sfDir, Docs, "v1")
 
@@ -880,10 +884,8 @@ object MultimodalOps extends graft.QueryModule {
     * IncrementalPhashSpec pins base-files-read-not-rebuilt and parity
     * with the full pipeline. */
   def imagePhashDedupIncremental(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val isBatch = pmod($"doc_id", lit(100L)).isin(INCR_BATCH: _*)
     // the add: today's batch is the ONLY codec work of this run
-    val batchHashed = renderAndHash(mediaRoles(spark, sfDir).filter(isBatch))
+    val batchHashed = Image.decodeRendered(mediaRoles(spark, sfDir).filter(isBatch))
       .localCheckpoint()
     incrementalPhashPairs(spark, sfDir, batchHashed)
   }
@@ -895,9 +897,8 @@ object MultimodalOps extends graft.QueryModule {
   private def incrementalPhashPairs(spark: SparkSession, sfDir: String,
                                     batchHashed: DataFrame): DataFrame = {
     import spark.implicits._
-    val isBatch = pmod($"doc_id", lit(100L)).isin(INCR_BATCH: _*)
     val basePath = graft.Artifacts.ensure(ImageIncrBase, sfDir, Docs, "v1") { tmp =>
-      renderAndHash(mediaRoles(spark, sfDir).filter(!isBatch))
+      Image.decodeRendered(mediaRoles(spark, sfDir).filter(!isBatch))
         .write.parquet(s"$tmp/hashed")
     }
     val baseHashed = spark.read.parquet(s"$basePath/hashed")
@@ -924,7 +925,7 @@ object MultimodalOps extends graft.QueryModule {
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
     val cand = crossGen.unionAll(inBatch).distinct()
     val allHashed = baseHashed.unionByName(batchHashed)
-    cand
+    dupReport(Image, cand
       .join(allHashed.select($"doc_id".as("doc_a"), $"s0".as("a0"),
         $"s1".as("a1"), $"s2".as("a2"), $"s3".as("a3")), Seq("doc_a"))
       .join(allHashed.select($"doc_id".as("doc_b"), $"s0".as("b0"),
@@ -932,118 +933,14 @@ object MultimodalOps extends graft.QueryModule {
       .select($"doc_a", $"doc_b",
         expr("cast(bit_count(a0 ^ b0) + bit_count(a1 ^ b1) + " +
           "bit_count(a2 ^ b2) + bit_count(a3 ^ b3) as bigint)")
-          .as("hamming"),
-        ($"doc_b" === $"doc_a" + 1 && $"doc_b" % 10 === 1).as("planted"))
-      .filter($"hamming" <= 6)
-      .orderBy($"doc_a", $"doc_b")
-  }
-
-  /** The 20% corpus slice the video-files twin materializes (both
-    * sides of planted pairs (x00, x01) and (x10, x11) stay in-slice).
-    * The flat flood population — ≡24 mod 40 — is only PARTIALLY
-    * excluded: of its mod-200 residues {24, 64, 104, 144, 184} exactly
-    * one (104 → doc_id % 100 = 4) lands under 20, so a fifth of the
-    * flood is in-slice and the hot-bucket cap census still engages in
-    * the files twin — consistently on both sides, because
-    * videoFramehashOracleOn mirrors the same slice predicate before
-    * its own cap CTE. */
-  private val VIDEO_FILES_SLICE = "doc_id % 100 < 20"
-
-  private val VideoFiles = "graft_media_videofiles/"
-  private[llm] def videoFilesPath(sfDir: String): String =
-    graft.Artifacts.path(VideoFiles, sfDir, Docs, "v1")
-
-  /** One PNG per (doc, sampled frame) — the ffmpeg frame-dump layout
-    * a production video pipeline actually lands (frames extracted
-    * upstream AT the sampling rate, positions 0/2/4/6). */
-  private def ensureVideoFiles(spark: SparkSession, sfDir: String): String = {
-    import spark.implicits._
-    graft.Artifacts.ensure(VideoFiles, sfDir, Docs, "v1") { tmp =>
-      mediaRoles(spark, sfDir).filter(expr(VIDEO_FILES_SLICE))
-        .as[(Long, Long, Boolean, Boolean)]
-        .foreachPartition { (it: Iterator[(Long, Long, Boolean, Boolean)]) =>
-          javax.imageio.ImageIO.setUseCache(false)
-          it.foreach { case (id, base, isdup, isflat) =>
-            Seq(0, 2, 4, 6).foreach { f =>
-              java.nio.file.Files.write(
-                java.nio.file.Paths.get(s"$tmp/doc_${id}_f$f.png"),
-                renderGridPng(base * 131L + f, isdup && f == 4, isflat))
-            }
-          }
-        }
-    }
-  }
-
-  /** q_dedup_video_framehash_files — the video near-dup pipeline
-    * driven from a real FRAME-FILES table, completing the files→dedup
-    * triad (image/audio/this): production video dedup never decodes
-    * video in Spark — frames land as one PNG object per (video,
-    * sampled position) (the ffmpeg dump layout), and the engine
-    * ingests the directory through binaryFile, recovers (doc, pos)
-    * from the file name, ImageIO-decodes each frame, and runs the
-    * identical (position, hash) capped bucket join. Runs on a 20%
-    * corpus slice (both planted-pair roles survive; the bucket census
-    * — and so the cap — is over the on-disk population, and the
-    * oracle mirrors the same slice). Green at both scales proves the
-    * frame-dump → list → read → decode → hash → bucket → overlap
-    * chain end to end. Scale: one split per frame file; the slice is
-    * a demo bound, not a scale crutch — the full-corpus cost is the
-    * column-shaped twin ×(files-scan constant). */
-  def videoFramehashDedupFiles(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val path = ensureVideoFiles(spark, sfDir)
-    val frames = spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.png").load(path)
-      .select(
-        regexp_extract($"path", "doc_(\\d+)_f\\d+\\.png$", 1)
-          .cast("long").as("doc_id"),
-        regexp_extract($"path", "_f(\\d+)\\.png$", 1)
-          .cast("int").as("pos"),
-        $"content".as("payload"))
-    val hashed = frames.as[(Long, Int, Array[Byte])].mapPartitions { it =>
-      javax.imageio.ImageIO.setUseCache(false)
-      it.map { case (docId, pos, bytes) =>
-        val img = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(bytes))
-        require(img != null, s"undecodable frame $pos of doc $docId")
-        val b = dhashBands(img)
-        (docId, pos, b(0), b(1), b(2), b(3))
-      }
-    }.toDF("doc_id", "pos", "s0", "s1", "s2", "s3")
-    // the pair pipeline reads the hash frame twice (census + capped
-    // join probe) — pin the narrow post-decode frame, coalesced to one
-    // partition per core, so the frame tree is scanned and decoded
-    // once in core-sized tasks (see imagePhashDedupFiles)
-    videoPairsFromHashed(hashed
-      .coalesce(spark.sparkContext.defaultParallelism).localCheckpoint())
-      .filter($"n_frames_equal" >= 3)
-      .select($"doc_a", $"doc_b", $"n_frames_equal",
-        ($"doc_b" === $"doc_a" + 1 && $"doc_b" % 10 === 1).as("planted"))
-      .orderBy($"doc_a", $"doc_b")
+          .as("hamming")))
   }
 
   /** The arriving batch as a FILE TREE (one PNG per batch doc) — what
     * the streaming ingest watches. */
-  private val StreamBatchFiles = "graft_media_streambatch/"
+  private val StreamBatchFiles = mediaDir("streambatch")
   private[llm] def streamBatchFilesPath(sfDir: String): String =
     graft.Artifacts.path(StreamBatchFiles, sfDir, Docs, "v1")
-
-  private def ensureStreamBatchFiles(spark: SparkSession, sfDir: String): String = {
-    import spark.implicits._
-    graft.Artifacts.ensure(StreamBatchFiles, sfDir, Docs, "v1") { tmp =>
-      mediaRoles(spark, sfDir)
-        .filter(pmod($"doc_id", lit(100L)).isin(INCR_BATCH: _*))
-        .as[(Long, Long, Boolean, Boolean)]
-        .foreachPartition { (it: Iterator[(Long, Long, Boolean, Boolean)]) =>
-          javax.imageio.ImageIO.setUseCache(false)
-          it.foreach { case (id, base, isdup, isflat) =>
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(s"$tmp/doc_$id.png"),
-              renderGridPng(base, isdup, isflat))
-          }
-        }
-    }
-  }
 
   /** q_stream_media_dedup — STREAMING multimodal ingest closing the
     * production loop: media objects land on storage continuously, a
@@ -1062,8 +959,7 @@ object MultimodalOps extends graft.QueryModule {
     * files; state is the sink's commit log; the index read is the
     * warm-artifact economics of the batch twin. */
   def streamMediaIncremental(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val src = ensureStreamBatchFiles(spark, sfDir)
+    val src = ensureFiles(Image, spark, sfDir, StreamBatchFiles, Some(isBatch))
     // run-local sink + checkpoint: the ingest DEMO re-streams per run
     // (a few hundred files); the exactly-once contract under restart
     // is pinned separately by the tx/restart streaming specs
@@ -1081,24 +977,15 @@ object MultimodalOps extends graft.QueryModule {
         org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("content",
         org.apache.spark.sql.types.BinaryType)))
-    val pngStream = spark.readStream.format("binaryFile").schema(binSchema)
-      .option("pathGlobFilter", "*.png").load(src)
-      .select(
-        regexp_extract($"path", "doc_(\\d+)\\.png$", 1)
-          .cast("long").as("doc_id"),
-        $"content".as("payload"))
-    // the in-flight codec pass: same mapPartitions shape as the batch
-    // path, running inside the streaming plan
-    val hashedStream = hashPngPayloads(pngStream)
-    graft.streaming.StreamOps.withStreamPartitions(spark) {
-      val q = hashedStream.writeStream
-        .format("parquet")
-        .option("path", s"$runDir/hashes")
-        .option("checkpointLocation", s"$runDir/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    // the in-flight codec pass: the image decoder, running inside the
+    // streaming plan
+    val hashedStream = Image.decode(fileRows(Image,
+      spark.readStream.format("binaryFile").schema(binSchema)
+        .option("pathGlobFilter", s"*.${Image.ext}").load(src)))
+    graft.streaming.StreamOps.drain(spark, hashedStream.writeStream
+      .format("parquet")
+      .option("path", s"$runDir/hashes")
+      .option("checkpointLocation", s"$runDir/ckpt"))
     // materialize the committed hashes EAGERLY (a batch-sized frame —
     // a few hundred 5-long rows) so the run-local sink + checkpoint can
     // be deleted NOW instead of leaking one temp tree per invocation
@@ -1116,58 +1003,59 @@ object MultimodalOps extends graft.QueryModule {
         java.nio.file.Paths.get(runDir))
   }
 
+  /** Keep-list tail: connected components over the `links` (a_id,
+    * b_id) graph via [[DedupOps.propagateMinLabel]] (fixpoint-checked
+    * with the star-contraction fallback); keep = each component's min
+    * doc plus every unlinked doc of `docs`. */
+  private def keepMins(links: DataFrame, docs: => DataFrame): DataFrame = {
+    val comps = DedupOps.propagateMinLabel(links)
+      .toDF("doc_id", "component_id")
+    docs
+      .join(comps, Seq("doc_id"), "left")
+      .withColumn("component_id", coalesce(col("component_id"), col("doc_id")))
+      .filter(col("doc_id") === col("component_id"))
+      .select(col("doc_id"), col("component_id"))
+      .orderBy(col("doc_id"))
+  }
+
   /** q_dedup_image_keep_list — the destructive half of the image
     * dedup: connected components over the ≤6-Hamming pair graph (the
-    * same min-label propagation the text keep-list runs —
-    * [[DedupOps.propagateMinLabel]], fixpoint-checked with the
-    * star-contraction fallback), keep = each component's min doc plus
-    * every unlinked doc. Completes pairs → clusters → keep on the
-    * image axis; the oracle closes the same graph with WITH RECURSIVE
-    * over the closed-form pair CTEs. Scale: the pair graph is the
-    * capped candidate output (tiny relative to the corpus); the
-    * keep-list join is doc-keyed. */
+    * same min-label propagation the text keep-list runs), keep = each
+    * component's min doc plus every unlinked doc. Completes pairs →
+    * clusters → keep on the image axis; the oracle closes the same
+    * graph with WITH RECURSIVE over the closed-form pair CTEs. Scale:
+    * the pair graph is the capped candidate output (tiny relative to
+    * the corpus); the keep-list join is doc-keyed. */
   def imageKeepList(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val pairs = imagePhashPairs(spark, sfDir).filter($"hamming" <= 6)
-      .select($"doc_a".as("a_id"), $"doc_b".as("b_id"))
-    val comps = DedupOps.propagateMinLabel(pairs)
-      .toDF("doc_id", "component_id")
-    graft.Tables.documents(spark, sfDir).select($"doc_id")
-      .join(comps, Seq("doc_id"), "left")
-      .withColumn("component_id", coalesce($"component_id", $"doc_id"))
-      .filter($"doc_id" === $"component_id")
-      .select($"doc_id", $"component_id")
-      .orderBy($"doc_id")
+    keepMins(dupPairs(Image, spark, sfDir)
+        .select($"doc_a".as("a_id"), $"doc_b".as("b_id")),
+      graft.Tables.documents(spark, sfDir).select($"doc_id"))
   }
 
   /** q_multimodal_keep_list — the DESTRUCTIVE half of the cross-modal
     * consensus: the ≥2-modality drop policy the contingency table
     * ([[dedupConsensus]]) calibrates, APPLIED. A pair of documents is a
     * CONFIRMED duplicate link only when at least two of the three
-    * perceptual detectors (image dHash ≤6 Hamming, audio ≥6 equal
-    * energy bands, video ≥3 equal sampled frames) flag the SAME pair —
-    * the standard precision lever for destructive multimodal dedup:
-    * a single-modality collision (e.g. a random 16-bit image band
-    * coincidence) stays in the corpus, a replayed asset (which its
-    * image, audio AND video tracks all recognize) is collapsed to its
-    * min-id representative. Connected components over the confirmed
-    * pair graph via the same min-label propagation every keep-list
-    * runs; keep = each component's min doc + every unconfirmed doc.
-    * The oracle rebuilds all three modality pair sets closed-form and
-    * closes the confirmed graph WITH RECURSIVE. Scale: three
-    * already-capped artifact pair frames, one pair-keyed count, and a
-    * component pass over the confirmed subgraph (≤ the planted-dup
-    * population) — nothing corpus-sized shuffles. */
+    * perceptual detectors (each modality's `dup` call) flag the SAME
+    * pair — the standard precision lever for destructive multimodal
+    * dedup: a single-modality collision (e.g. a random 16-bit image
+    * band coincidence) stays in the corpus, a replayed asset (which
+    * its image, audio AND video tracks all recognize) is collapsed to
+    * its min-id representative. Connected components over the
+    * confirmed pair graph via the same min-label propagation every
+    * keep-list runs; keep = each component's min doc + every
+    * unconfirmed doc. The oracle rebuilds all three modality pair sets
+    * closed-form and closes the confirmed graph WITH RECURSIVE. Scale:
+    * three already-capped artifact pair frames, one pair-keyed count,
+    * and a component pass over the confirmed subgraph (≤ the
+    * planted-dup population) — nothing corpus-sized shuffles. */
   def multimodalKeepList(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    consensusKeepFromPairs(
-      graft.Tables.documents(spark, sfDir).select($"doc_id"),
-      imagePhashPairs(spark, sfDir).filter($"hamming" <= 6)
-        .select($"doc_a", $"doc_b"),
-      audioPairs(spark, sfDir).filter($"n_equal_bands" >= 6)
-        .select($"doc_a", $"doc_b"),
-      videoPairs(spark, sfDir).filter($"n_frames_equal" >= 3)
-        .select($"doc_a", $"doc_b"))
+    val docs = graft.Tables.documents(spark, sfDir).select($"doc_id")
+    val Seq(img, aud, vid) =
+      Media.map(dupPairs(_, spark, sfDir).select($"doc_a", $"doc_b"))
+    consensusKeepFromPairs(docs, img, aud, vid)
   }
 
   /** The ≥2-of-3 consensus keep rule over explicit pair frames (each
@@ -1185,14 +1073,7 @@ object MultimodalOps extends graft.QueryModule {
       .agg(count(lit(1)).as("n_modalities"))
       .filter($"n_modalities" >= 2)
       .select($"doc_a".as("a_id"), $"doc_b".as("b_id"))
-    val comps = DedupOps.propagateMinLabel(confirmed)
-      .toDF("doc_id", "component_id")
-    docs
-      .join(comps, Seq("doc_id"), "left")
-      .withColumn("component_id", coalesce($"component_id", $"doc_id"))
-      .filter($"doc_id" === $"component_id")
-      .select($"doc_id", $"component_id")
-      .orderBy($"doc_id")
+    keepMins(confirmed, docs)
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -1230,24 +1111,21 @@ object MultimodalOps extends graft.QueryModule {
     * semi-joins, one 8-row aggregate. */
   def dedupConsensus(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    def linked(pairs: DataFrame, flag: String): DataFrame =
+    // a modality's dup-linked docs, flagged l<initial>
+    def linked(m: Modality): DataFrame = {
+      val pairs = dedup(m, spark, sfDir)
       pairs.select($"doc_a".as("doc_id"))
         .unionAll(pairs.select($"doc_b".as("doc_id")))
-        .distinct().withColumn(flag, lit(true))
-    val docs = graft.Tables.documents(spark, sfDir).select($"doc_id")
-    docs
-      .join(linked(imagePhashDedup(spark, sfDir), "li"), Seq("doc_id"), "left")
-      .join(linked(audioFingerprintDedup(spark, sfDir), "la"),
-        Seq("doc_id"), "left")
-      .join(linked(videoFramehashDedup(spark, sfDir), "lv"),
-        Seq("doc_id"), "left")
-      .select($"doc_id",
-        coalesce($"li", lit(false)).as("linked_image"),
-        coalesce($"la", lit(false)).as("linked_audio"),
-        coalesce($"lv", lit(false)).as("linked_video"))
-      .groupBy($"linked_image", $"linked_audio", $"linked_video")
+        .distinct().withColumn(s"l${m.name.head}", lit(true))
+    }
+    val flags = Media.map(m => col(s"linked_${m.name}"))
+    Media.foldLeft(graft.Tables.documents(spark, sfDir).select($"doc_id"))(
+        (docs, m) => docs.join(linked(m), Seq("doc_id"), "left"))
+      .select($"doc_id" +: Media.map(m => coalesce(col(s"l${m.name.head}"),
+        lit(false)).as(s"linked_${m.name}")): _*)
+      .groupBy(flags: _*)
       .agg(count(lit(1)).as("n_docs"))
-      .orderBy($"linked_image", $"linked_audio", $"linked_video")
+      .orderBy(flags: _*)
   }
 
   /** Shared CTE block of the two audio twins: ids (dup + silence

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 /** Streaming operators, declared as their deterministic BATCH TWINS
   * (SURVEY.md §2.4/§7.3-8: micro-batch boundaries make true streaming
@@ -63,6 +64,16 @@ object StreamOps extends graft.QueryModule {
       step(-1)
     }
   }
+
+  /** Drain a configured stream writer: start it with
+    * Trigger.AvailableNow under the stream partition budget
+    * ([[withStreamPartitions]]) and block until every available input
+    * is processed. The caller's writer keeps its own sink, output mode
+    * and query name. */
+  private[graft] def drain(spark: SparkSession, writer: DataStreamWriter[_]): Unit =
+    withStreamPartitions(spark) {
+      writer.trigger(Trigger.AvailableNow()).start().awaitTermination()
+    }
 
   /** Tumbling 15-minute windows: count + exact sum per (window, type). */
   def tumbling(spark: SparkSession, sfDir: String): DataFrame = {
@@ -149,13 +160,8 @@ object StreamOps extends graft.QueryModule {
       .groupBy(window($"ts", "15 minutes").as("w"), $"event_type")
       .agg(count(lit(1)).as("n"), graft.ops.AggOps.dsum($"value").as("sum_value"))
     val name = "live_tumbling_" + java.lang.Integer.toHexString(sfDir.hashCode)
-    withStreamPartitions(spark) {
-      val q = agg.writeStream.format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    drain(spark, agg.writeStream.format("memory").queryName(name)
+      .outputMode("complete"))
     spark.table(name)
       .select(unix_millis($"w.start").as("win_start_ms"), $"event_type",
         $"n", $"sum_value")
@@ -176,13 +182,8 @@ object StreamOps extends graft.QueryModule {
       .agg(count(lit(1)).as("n"),
         graft.ops.AggOps.dsum($"value").as("sum_value"))
     val name = "live_session_" + java.lang.Integer.toHexString(sfDir.hashCode)
-    withStreamPartitions(spark) {
-      val q = agg.writeStream.format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    drain(spark, agg.writeStream.format("memory").queryName(name)
+      .outputMode("complete"))
     spark.table(name)
       .select($"user_id", unix_millis($"sw.start").as("session_start_ms"),
         $"n", $"sum_value")
@@ -208,18 +209,13 @@ object StreamOps extends graft.QueryModule {
     val target = s"${graft.Artifacts.root}/graft_stream_upsert/" +
       java.lang.Integer.toHexString(sfDir.hashCode)
     org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(target))
-    withStreamPartitions(spark) {
-      val q = agg.writeStream
-        .outputMode("update")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          upsertInto(target, batch, Seq("win_start_ms", "event_type"),
-            "win_date",
-            date_format(timestamp_millis(col("win_start_ms")), "yyyy-MM-dd"))
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    drain(spark, agg.writeStream
+      .outputMode("update")
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        upsertInto(target, batch, Seq("win_start_ms", "event_type"),
+          "win_date",
+          date_format(timestamp_millis(col("win_start_ms")), "yyyy-MM-dd"))
+      })
     spark.read.parquet(target)
       .select($"win_start_ms", $"event_type", $"n", $"sum_value")
       .orderBy($"win_start_ms", $"event_type")
@@ -248,17 +244,12 @@ object StreamOps extends graft.QueryModule {
         $"n", $"sum_value")
     val target = s"${graft.Artifacts.root}/graft_stream_txpub/" +
       java.lang.Integer.toHexString(sfDir.hashCode)
-    withStreamPartitions(spark) {
-      val q = agg.writeStream
-        .outputMode("complete")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.format("graft.sources.TxManifestSource")
-            .option("path", target).mode("overwrite").save()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    drain(spark, agg.writeStream
+      .outputMode("complete")
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        batch.write.format("graft.sources.TxManifestSource")
+          .option("path", target).mode("overwrite").save()
+      })
     spark.read.format("graft.sources.TxManifestSource")
       .option("path", target).load()
       .orderBy($"win_start_ms", $"event_type")
@@ -467,13 +458,8 @@ object StreamOps extends graft.QueryModule {
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(
         cusumUpdate)
     val name = "live_cusum_" + java.lang.Integer.toHexString(sfDir.hashCode)
-    withStreamPartitions(spark) {
-      val q = out.toDF().writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    drain(spark, out.toDF().writeStream.format("memory").queryName(name)
+      .outputMode("append"))
     spark.table(name).orderBy($"event_type", $"win_start_ms")
   }
 
@@ -533,13 +519,8 @@ object StreamOps extends graft.QueryModule {
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(
         topkUpdate)
     val name = "live_topk_" + java.lang.Integer.toHexString(sfDir.hashCode)
-    withStreamPartitions(spark) {
-      val q = out.toDF().writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    drain(spark, out.toDF().writeStream.format("memory").queryName(name)
+      .outputMode("append"))
     spark.table(name).orderBy($"win_start_ms", $"rank")
   }
 
@@ -617,13 +598,8 @@ object StreamOps extends graft.QueryModule {
       .groupBy($"c_mktsegment", $"event_type")
       .agg(count(lit(1)).as("n"), graft.ops.AggOps.dsum($"value").as("sum_value"))
     val name = "stream_static_" + java.lang.Integer.toHexString(sfDir.hashCode)
-    withStreamPartitions(spark) {
-      val q = agg.writeStream.format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    drain(spark, agg.writeStream.format("memory").queryName(name)
+      .outputMode("complete"))
     spark.table(name).orderBy($"c_mktsegment", $"event_type")
   }
 

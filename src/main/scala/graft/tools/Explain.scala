@@ -13,8 +13,9 @@ object Explain {
 
   /** `plan` without what changes between two builds of one query:
     * expression ids, exchange plan ids, RDD ids, lambda-variable and
-    * `_common_expr_` counters, source line numbers and the artifact root
-    * path. */
+    * `_common_expr_` counters, source line numbers, the artifact root
+    * path and the class and identity of the JVM lambda a typed operator
+    * (mapPartitions) prints. */
   private[graft] def normalise(plan: String): String = Seq(
     "#\\d+L?" -> "",
     "plan_id=\\d+" -> "plan_id",
@@ -22,6 +23,7 @@ object Explain {
     "(lambda \\w+?)_\\d+" -> "$1",
     "_common_expr_\\d+" -> "_common_expr",
     "\\.scala:\\d+" -> ".scala",
+    "\\$Lambda\\$\\d+/0x\\p{XDigit}+@\\p{XDigit}+" -> "\\$Lambda",
     java.util.regex.Pattern.quote(graft.Artifacts.root) -> "<artifacts>"
   ).foldLeft(plan) { case (s, (re, to)) => s.replaceAll(re, to) }
 

@@ -24,6 +24,19 @@ class SweepSpec extends SparkTestBase {
     assert(Sweep.failed(rs) == Seq("b", "d"))
   }
 
+  test("the failure line is plain ASCII and names the query and the message") {
+    val err = new java.io.ByteArrayOutputStream()
+    val prev = System.err
+    System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
+    try Sweep.run(spark, sf0001, Seq("b"), "TEST", Map("b" -> boom("went wrong")))(
+      (_, df) => df.count())
+    finally System.setErr(prev)
+    val line = new String(err.toByteArray, "UTF-8").linesIterator
+      .find(_.startsWith("TEST FAIL b")).getOrElse(fail("no failure line logged"))
+    assert(line.forall(_ < 128), s"non-ASCII failure line: $line")
+    assert(line == "TEST FAIL b: IllegalStateException: went wrong")
+  }
+
   test("a name that is not in the registry is a failure") {
     val rs = Sweep.run(spark, sf0001, Seq("q_typo", "a"), "TEST",
       Map("a" -> ok(2)))((_, df) => df.count())
@@ -59,5 +72,10 @@ class SweepSpec extends SparkTestBase {
       p.replaceAll("#\\d+L?", "").replaceAll("plan_id=\\d+", "plan_id")
     assert(idsOnly(plans.head) != idsOnly(plans(1)))
     assert(tools.Explain.normalise(plans.head) == tools.Explain.normalise(plans(1)))
+    // a typed operator prints its JVM lambda, whose class number and
+    // identity hash differ between two JVMs
+    assert(tools.Explain.normalise("Arguments: graft.llm.MultimodalOps$$$Lambda" +
+      "$3275/0x00007f8114ed7bf8@6bbd4048, obj: scala.Tuple5") ==
+      "Arguments: graft.llm.MultimodalOps$$$Lambda, obj: scala.Tuple5")
   }
 }

@@ -11,10 +11,12 @@ import graft.SparkTestBase
 class ImageFilesParitySpec extends SparkTestBase {
   import spark.implicits._
 
+  import MultimodalOps.{Audio, Image, Video}
+
   test("file-sourced and render-sourced dHash frames are identical") {
-    val fromFiles = MultimodalOps.imageHashedFromFiles(spark, sf0001)
+    val fromFiles = MultimodalOps.decodedFromFiles(Image, spark, sf0001)
       .collect().map(_.toString).sorted
-    val fromRender = MultimodalOps.imageHashedFrame(spark, sf0001)
+    val fromRender = MultimodalOps.decodedFrame(Image, spark, sf0001)
       .collect().map(_.toString).sorted
     assert(fromFiles.nonEmpty)
     assert(fromFiles.sameElements(fromRender),
@@ -22,18 +24,58 @@ class ImageFilesParitySpec extends SparkTestBase {
   }
 
   test("the files tree holds one PNG per doc and re-runs read, not rewrite") {
-    val dir = new java.io.File(MultimodalOps.imageFilesPath(sf0001))
+    val dir = new java.io.File(MultimodalOps.filesPath(Image, sf0001))
     assert(dir.isDirectory)
     val nDocs = graft.Tables.documents(spark, sf0001).count()
     val pngs = Option(dir.listFiles()).getOrElse(Array.empty)
       .filter(_.getName.endsWith(".png"))
     assert(pngs.length.toLong === nDocs)
     val stamps = pngs.map(f => f.getName -> f.lastModified()).toMap
-    MultimodalOps.imageHashedFromFiles(spark, sf0001).collect()
+    MultimodalOps.decodedFromFiles(Image, spark, sf0001).collect()
     val after = Option(dir.listFiles()).getOrElse(Array.empty)
       .filter(_.getName.endsWith(".png"))
       .map(f => f.getName -> f.lastModified()).toMap
     assert(after === stamps, "file tree was rewritten, not read")
+    // the other media trees: (dir, object extension, a consumer of it)
+    val trees = Seq[(String, String, () => Unit)](
+      (MultimodalOps.filesPath(Audio, sf0001), ".wav",
+        () => MultimodalOps.decodedFromFiles(Audio, spark, sf0001).collect()),
+      (MultimodalOps.filesPath(Video, sf0001), ".png",
+        () => MultimodalOps.decodedFromFiles(Video, spark, sf0001).collect()),
+      (MultimodalOps.streamBatchFilesPath(sf0001), ".png",
+        () => MultimodalOps.streamMediaIncremental(spark, sf0001).collect()))
+    for ((path, ext, read) <- trees) {
+      def objects = Option(new java.io.File(path).listFiles()).getOrElse(Array.empty)
+        .filter(_.getName.endsWith(ext))
+        .map(f => f.getName -> f.lastModified()).toMap
+      read()
+      val built = objects
+      assert(built.nonEmpty, s"$path holds no $ext objects")
+      read()
+      assert(objects === built, s"file tree $path was rewritten, not read")
+    }
+  }
+
+  test("audio twin: file-sourced energy frame equals the render-sourced one") {
+    val fromFiles = MultimodalOps.decodedFromFiles(Audio, spark, sf0001)
+      .collect().map(_.toString).sorted
+    val fromRender = MultimodalOps.decodedFrame(Audio, spark, sf0001)
+      .collect().map(_.toString).sorted
+    assert(fromFiles.nonEmpty)
+    assert(fromFiles.sameElements(fromRender),
+      "binaryFile ingest changed at least one doc's band energies")
+  }
+
+  test("video twin: file-sourced frame hashes equal the render-sourced ones on the slice") {
+    import org.apache.spark.sql.functions.col
+    val fromFiles = MultimodalOps.decodedFromFiles(Video, spark, sf0001)
+      .collect().map(_.toString).sorted
+    val fromRender = Video.decodeRendered(MultimodalOps.mediaRoles(spark, sf0001)
+        .filter(col("doc_id") % 100 < 20))
+      .collect().map(_.toString).sorted
+    assert(fromFiles.nonEmpty)
+    assert(fromFiles.sameElements(fromRender),
+      "frame-file ingest changed at least one sampled frame's dHash")
   }
 
   test("declared files query equals the render-sourced dedup output") {
@@ -49,7 +91,7 @@ class ImageFilesParitySpec extends SparkTestBase {
     val render = MultimodalOps.audioFingerprintDedup(spark, sf0001).collect()
     assert(files.nonEmpty)
     assert(files.map(_.toString).sameElements(render.map(_.toString)))
-    val dir = new java.io.File(MultimodalOps.audioFilesPath(sf0001))
+    val dir = new java.io.File(MultimodalOps.filesPath(Audio, sf0001))
     val nDocs = graft.Tables.documents(spark, sf0001).count()
     val wavs = Option(dir.listFiles()).getOrElse(Array.empty)
       .count(_.getName.endsWith(".wav"))
@@ -77,7 +119,7 @@ class ImageFilesParitySpec extends SparkTestBase {
     assert(plantedInSlice.forall(found.contains),
       "a planted replay inside the slice was missed")
     // one PNG per (doc-in-slice, sampled position)
-    val dir = new java.io.File(MultimodalOps.videoFilesPath(sf0001))
+    val dir = new java.io.File(MultimodalOps.filesPath(Video, sf0001))
     val nSlice = docs.count(slice)
     val pngs = Option(dir.listFiles()).getOrElse(Array.empty)
       .count(_.getName.endsWith(".png"))
