@@ -2,6 +2,7 @@ package graft.flow
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.llm.DedupOps
 
 /** The LLM-corpus curation pipeline on the graft orchestrator — the
   * north-star job (SURVEY.md §2.4) expressed as a Luigi-style DAG, the
@@ -190,8 +191,8 @@ object CorpusFlow {
     val output: DirTarget = DirTarget(s"${cfg.baseDir}/batch_$i/url_deduped")
     def run(spark: SparkSession): Unit = {
       val batch = Committed.parquet(spark, requires.head.output.uri)
-        .withColumn("curl", graft.llm.DedupOps.canonicalUrl(
-          graft.llm.DedupOps.syntheticCrawlUrl(
+        .withColumn("curl", DedupOps.canonicalUrl(
+          DedupOps.syntheticCrawlUrl(
             col("doc_id"), col("source"), col("lang"))))
       val kept = firstSeen(spark, requires, "curl", batch)
       output.atomicWrite { tmp => kept.write.parquet(tmp) }
@@ -266,7 +267,7 @@ object CorpusFlow {
     val output: DirTarget = DirTarget(s"${cfg.baseDir}/batch_$i/deduped")
     def run(spark: SparkSession): Unit = {
       val batch = Committed.parquet(spark, requires.head.output.uri)
-        .withColumn("fp", graft.llm.DedupOps.contentFp(col("text")))
+        .withColumn("fp", DedupOps.contentFp(col("text")))
       val kept = firstSeen(spark, requires, "fp", batch)
       output.atomicWrite { tmp => kept.write.parquet(tmp) }
     }
@@ -316,27 +317,16 @@ object CorpusFlow {
       Committed.parquet(spark, prior.output.uri).union(keys).distinct())
   }
 
-  /** THE shared shingle-fingerprint recipe: doc columns + `sh` (the
-    * distinct 3-gram shingle set) + `shfp` (sha2 of the NUL-joined
-    * sorted set — the content key of the near-dup index). NearDupBatch
-    * and BandIndex both go through HERE by construction: the cumulative
-    * band index is only correct while both sides compute byte-identical
-    * shfp, and a one-site edit (separator, sort, extra key column)
-    * would otherwise make batch i+1 silently stop matching index i.
-    * Docs with no shingles (< 3 tokens) are absent from the result. */
-  private[flow] def withShingleFp(df: DataFrame): DataFrame =
-    df.withColumn("sh", graft.llm.DedupOps.shingleCol(col("text")))
-      .filter(size(col("sh")) > 0)
-      .withColumn("shfp",
-        sha2(concat_ws("\u0000", array_sort(col("sh"))), 256))
+  /** Doc columns + `sh` (the shingle set) + `shfp` (its fingerprint,
+    * [[graft.llm.DedupOps.fingerprinted]]; named apart from the batch's
+    * content `fp`). Docs with no shingles (< 3 tokens) are absent. */
+  private def withShingleFp(df: DataFrame): DataFrame = DedupOps.fingerprinted(
+    df.withColumn("sh", DedupOps.shingleCol(col("text"))), "shfp")
 
-  /** The 21-band LSH rows of a reps frame — shared by both index
-    * writers for the same drift-lockstep reason as [[withShingleFp]]. */
-  private[flow] def bandsOf(reps: DataFrame): DataFrame =
-    reps.select(col("shfp"),
-        posexplode(graft.llm.DedupOps.bandCol(col("sh"))))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "bandhash")
+  /** The (band, bandhash, shfp) rows of a reps frame, as both band index
+    * writers persist them. */
+  private def indexBands(reps: DataFrame): DataFrame =
+    DedupOps.bandsOf(reps, col("shfp"))
       .select(col("band"), col("bandhash"), col("shfp"))
 
   /** Incremental NEAR-dup over one exact-deduped batch: drops (a) any
@@ -357,28 +347,19 @@ object CorpusFlow {
       else Seq(DedupBatch(cfg, i), BandIndex(cfg, i - 1))
     val output: DirTarget = DirTarget(s"${cfg.baseDir}/batch_$i/near_deduped")
     def run(spark: SparkSession): Unit = {
-      import graft.llm.DedupOps
       // raw carries NO shingle UDF: the shingle-free union leg at the
       // end reads it via an anti join on doc_id instead of re-running
       // the expensive shingle pass just to find the sub-3-token docs
       val raw = Committed.parquet(spark, requires.head.output.uri)
       val shingled = withShingleFp(raw)
         .localCheckpoint() // feeds reps AND the final member filter
-      val reps = shingled.groupBy(col("shfp"))
-        .agg(min_by(col("sh"), col("doc_id")).as("sh"),
-          min(col("doc_id")).as("rep_id"))
+      val reps = DedupOps.repsOf(shingled, "shfp", min(col("doc_id")).as("rep_id"))
         .localCheckpoint() // feeds bands + two verify legs + survivors
-      val bands = reps.select(col("shfp"), col("rep_id"),
-          posexplode(DedupOps.bandCol(col("sh"))))
-        .withColumnRenamed("pos", "band").withColumnRenamed("col", "bandhash")
-      def verify(cand: DataFrame, otherSh: DataFrame) =
-        cand.join(reps.select(col("shfp"), col("sh").as("a_sh")), Seq("shfp"))
-          .join(otherSh, Seq("o_shfp"))
-          .filter(size(array_intersect(col("a_sh"), col("o_sh")))
-            .cast("double") >=
-            lit(0.5) * size(array_union(col("a_sh"), col("o_sh")))
-              .cast("double"))
-          .select(col("shfp")).distinct()
+      val bands = DedupOps.bandsOf(reps, col("shfp"), col("rep_id"))
+      def verify(cand: DataFrame, otherSh: DataFrame) = DedupOps.verified(
+          cand.join(reps.select(col("shfp"), col("sh").as("a_sh")), Seq("shfp"))
+            .join(otherSh, Seq("o_shfp")), "a_sh", "o_sh")
+        .select(col("shfp")).distinct()
       // (a) cross-batch: collide batch bands with the cumulative index
       val crossDrop =
         if (i == 0) None
@@ -443,15 +424,13 @@ object CorpusFlow {
       else Seq(NearDupBatch(cfg, i), BandIndex(cfg, i - 1))
     val output: DirTarget = DirTarget(s"${cfg.baseDir}/batch_$i/band_index")
     def run(spark: SparkSession): Unit = {
-      val batchReps = withShingleFp(
-          Committed.parquet(spark, requires.head.output.uri))
-        .groupBy(col("shfp"))
-        .agg(min_by(col("sh"), col("doc_id")).as("sh"))
+      val batchReps = DedupOps.repsOf(withShingleFp(
+        Committed.parquet(spark, requires.head.output.uri)), "shfp")
       output.atomicWrite { tmp =>
         if (i == 0) {
           val matReps = batchReps.localCheckpoint() // feeds both writes
           matReps.write.parquet(s"$tmp/reps")
-          bandsOf(matReps).write.parquet(s"$tmp/bands")
+          indexBands(matReps).write.parquet(s"$tmp/bands")
         } else {
           val prev = requires(1).output.uri
           val prevReps = Committed.parquet(spark, s"$prev/reps")
@@ -461,7 +440,7 @@ object CorpusFlow {
               Seq("shfp"), "left_anti")
             .localCheckpoint() // feeds reps-union AND the new bands
           prevReps.unionByName(fresh).write.parquet(s"$tmp/reps")
-          Committed.parquet(spark, s"$prev/bands").unionByName(bandsOf(fresh))
+          Committed.parquet(spark, s"$prev/bands").unionByName(indexBands(fresh))
             .write.parquet(s"$tmp/bands")
         }
       }
@@ -478,7 +457,6 @@ object CorpusFlow {
   final case class BenchmarkShingles(cfg: CorpusConfig) extends Task {
     val output: DirTarget = DirTarget(s"${cfg.baseDir}/benchmark_shingles")
     def run(spark: SparkSession): Unit = {
-      import graft.llm.DedupOps
       output.atomicWrite { tmp =>
         graft.Tables.documents(spark, cfg.sfDir)
           .filter(col("doc_id") % cfg.evalEvery === 0)
@@ -569,7 +547,6 @@ object CorpusFlow {
         BenchmarkShingles(cfg))
     val output: DirTarget = DirTarget(s"${cfg.baseDir}/batch_$i/decontaminated")
     def run(spark: SparkSession): Unit = {
-      import graft.llm.DedupOps
       val batch = Committed.parquet(spark, requires.head.output.uri)
         .filter(col("doc_id") % cfg.evalEvery =!= 0)
       val bench = Committed.parquet(spark, requires(1).output.uri)

@@ -24,34 +24,14 @@ import org.apache.spark.sql.functions._
   */
 object Decontaminate extends graft.QueryModule {
 
-  /** whitespace 3-gram shingles, distinct — same contract as
-    * DedupOps.shinglesUdf (single linear pass; < 3 tokens → empty). */
-  private val shinglesUdf = udf((text: String) => {
-    if (text == null) Array.empty[String]
-    else {
-      val toks = text.split(" ", -1)
-      if (toks.length < 3) Array.empty[String]
-      else {
-        val seen = new java.util.LinkedHashSet[String]
-        var i = 0
-        while (i <= toks.length - 3) {
-          seen.add(toks(i) + " " + toks(i + 1) + " " + toks(i + 2))
-          i += 1
-        }
-        val out = new Array[String](seen.size)
-        seen.toArray(out)
-        out
-      }
-    }
-  })
-
   /** Corpus docs that overlap the benchmark slice: doc_id + how many
-    * distinct shingles leak. Shingles are distinct per doc (UDF contract),
-    * so count(*) after the join IS the distinct-overlap count. */
+    * distinct shingles leak. Shingles are distinct per doc
+    * ([[DedupOps.shingleCol]]), so count(*) after the join IS the
+    * distinct-overlap count. */
   def decontaminate(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val docs = graft.Tables.documents(spark, sfDir)
-      .select($"doc_id", shinglesUdf($"text").as("sh"))
+      .select($"doc_id", DedupOps.shingleCol($"text").as("sh"))
       .filter(size($"sh") > 0)
     val benchShingles = docs.filter($"doc_id" % 50 === 0)
       .select(explode($"sh").as("shingle")).distinct()
@@ -87,10 +67,9 @@ object Decontaminate extends graft.QueryModule {
   def evalSplit(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     // shingles come from the dedup family's PERSISTED shingle artifact
-    // (DedupOps.shinglesUdf has the same contract as this module's —
-    // distinct whitespace 3-grams, < 3 tokens → absent row), so the
-    // query re-shingles NOTHING after the artifact's one-time build;
-    // the three shingle-consuming legs read parquet
+    // (< 3 tokens → absent row), so the query re-shingles NOTHING after
+    // the artifact's one-time build; the three shingle-consuming legs
+    // read parquet
     val shingled = spark.read
       .parquet(DedupOps.buildShingleIndex(spark, sfDir))
       .select($"doc_id", $"sh",

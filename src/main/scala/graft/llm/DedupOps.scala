@@ -23,44 +23,85 @@ object DedupOps extends graft.QueryModule {
     * the LSH variant needs FEWER bands — see [[embeddingCosineLsh]]). */
   private[llm] val FixtureCosineThreshold = 0.4
 
-  /** whitespace-token 3-gram shingles, distinct, one tight pass.
-    * A UDF on purpose, not a transform()/element_at() column tree: HOFs are
-    * CodegenFallback AND predicate pushdown inlines the aliased split()
-    * into every element_at inside the lambda (visible in the pushed
-    * Generate filter), re-tokenizing the doc once per shingle reference —
-    * O(n^2) interpreted work per row that cost ~250 s cold at sf0.1.
-    * Pushdown may still duplicate the UDF into a filter, but each
-    * evaluation is a single linear pass. Docs under 3 tokens yield an
-    * empty set (same rows as the oracle's `len(...) >= 3` guard).
-    * split(" ", -1) matches Spark/DuckDB split semantics (trailing
-    * empties kept); set order is irrelevant downstream (intersection
-    * sizes and per-k minima are order-free). */
-  private val shinglesUdf = udf((text: String) => {
-    if (text == null) Array.empty[String]
-    else {
-      val toks = text.split(" ", -1)
-      if (toks.length < 3) Array.empty[String]
-      else {
-        val seen = new java.util.LinkedHashSet[String]
-        var i = 0
-        while (i <= toks.length - 3) {
-          seen.add(toks(i) + " " + toks(i + 1) + " " + toks(i + 2))
-          i += 1
-        }
-        val out = new Array[String](seen.size)
-        seen.toArray(out)
-        out
-      }
-    }
-  })
+  /** The near-dup shingle set: distinct word 3-grams (the tokenization
+    * contract is [[graft.text.Ngrams]]'s). Docs under 3 tokens get an
+    * empty set (same rows as the oracles' `len(...) >= 3` guard); set
+    * order is irrelevant downstream (intersection sizes and per-k minima
+    * are order-free). */
+  private[graft] def shingleCol(text: Column): Column =
+    graft.text.Ngrams.distinct3(text)
 
-  /** Shared shingle/band column builders for flow.CorpusFlow's near-dup
-    * batch stage — the SAME 3-gram shingles and 21x3 banding as every
-    * dedup query here, so the flow's incremental band index is
-    * value-compatible with q_dedup_minhash_lsh / q_dedup_incremental_minhash. */
-  private[graft] def shingleCol(text: Column): Column = shinglesUdf(text)
-  private[graft] def bandCol(sh: Column): Column =
-    minhashBandsUdf(transform(sh, s => xxhash64(s)))
+  /** The near-dup recipe, one definition per step. Every MinHash query
+    * here, the persisted minhash index and flow.CorpusFlow's near-dup
+    * tasks go through these, so an index the flow writes matches the
+    * query index by construction.
+    *
+    * Step 1: `docs` (carrying its shingle set `sh`) without the docs that
+    * have none, plus `fp`, the content key of the set: sha2-256 of the
+    * NUL-joined sorted shingles. 256 bits because same-fp docs merge
+    * into one representative and their pairs are emitted at jaccard 1.0
+    * UNVERIFIED — collision probability stays negligible at any corpus
+    * size, unlike a 64-bit hash whose birthday bound bites at billions
+    * of docs. */
+  private[graft] def fingerprinted(docs: DataFrame, fp: String = "fp"): DataFrame =
+    docs.filter(size(col("sh")) > 0)
+      .withColumn(fp, sha2(concat_ws("\u0000", array_sort(col("sh"))), 256))
+
+  /** Step 2: one representative per fingerprint `fp` — the shingle set
+    * `sh` of its min-doc_id member (all members share it) — then `more`. */
+  private[graft] def repsOf(docs: DataFrame, fp: String, more: Column*): DataFrame =
+    docs.groupBy(col(fp)).agg(min_by(col("sh"), col("doc_id")).as("sh"), more: _*)
+
+  /** Step 3: `reps`' `keep` columns, then one row per MinHash LSH band of
+    * its `sh`: `band` (0..20) and `bandhash` (see [[minhashBandsUdf]]). */
+  private[graft] def bandsOf(reps: DataFrame, keep: Column*): DataFrame =
+    reps.select(keep :+ posexplode(
+        minhashBandsUdf(transform(col("sh"), s => xxhash64(s)))): _*)
+      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bandhash")
+
+  /** Step 4, the exact verify: the rows of `pairs` whose shingle sets `a`
+    * and `b` have Jaccard >= `threshold` (default: the MinHash near-dup
+    * threshold 0.5), with that Jaccard as `jaccard`. */
+  private[graft] def verified(pairs: DataFrame, a: String, b: String,
+                              threshold: Double = 0.5): DataFrame =
+    pairs.withColumn("jaccard",
+        size(array_intersect(col(a), col(b))).cast("double") /
+          size(array_union(col(a), col(b))).cast("double"))
+      .filter(col("jaccard") >= threshold)
+
+  /** `pairs` (`a_<id>`, `b_<id>`) with both sides' shingle sets `a_sh`
+    * and `b_sh` from `sets` (`key`, `sh`). The pair side is the
+    * shuffle-hash build side: without the hint Spark broadcasts the whole
+    * shingled corpus (full arrays) per verify leg — a ~2 s build at sf0.1
+    * and an OOM at corpus scale. */
+  private def withSets(pairs: DataFrame, sets: DataFrame, key: String,
+                       id: String): DataFrame =
+    pairs.hint("shuffle_hash")
+      .join(sets.select(col(key).as(s"a_$id"), col("sh").as("a_sh")), Seq(s"a_$id"))
+      .hint("shuffle_hash")
+      .join(sets.select(col(key).as(s"b_$id"), col("sh").as("b_sh")), Seq(s"b_$id"))
+
+  /** Representative pairs (`a_fp`, `b_fp`, `jaccard`) expanded to member
+    * pairs (`a_id` < `b_id`, `jaccard` to 6 dp, sorted) through `members`
+    * (`fp`, `doc_id`): a cross-group pair inherits its reps' jaccard
+    * (members have identical sets), and two members of one group pair at
+    * jaccard exactly 1.0 through a members self-join on the fingerprint —
+    * streamed, so the inherent m² OUTPUT of m identical docs is produced
+    * incrementally, never buffered per task. */
+  private def memberPairs(repPairs: DataFrame, members: DataFrame): DataFrame = {
+    val crossGroup = repPairs
+      .join(members.select(col("fp").as("a_fp"), col("doc_id").as("x")), Seq("a_fp"))
+      .join(members.select(col("fp").as("b_fp"), col("doc_id").as("y")), Seq("b_fp"))
+      .select(least(col("x"), col("y")).as("a_id"),
+        greatest(col("x"), col("y")).as("b_id"), col("jaccard"))
+    val intraGroup = members.select(col("fp"), col("doc_id").as("x"))
+      .join(members.select(col("fp"), col("doc_id").as("y")), Seq("fp"))
+      .filter(col("x") < col("y"))
+      .select(col("x").as("a_id"), col("y").as("b_id"), lit(1.0).as("jaccard"))
+    crossGroup.union(intraGroup)
+      .select(col("a_id"), col("b_id"), round(col("jaccard"), 6).as("jaccard"))
+      .orderBy(col("a_id"), col("b_id"))
+  }
 
   /** Exact dedup: sha2-256 over whitespace-normalized lowercase text,
     * deterministic survivor = min doc_id per fingerprint. */
@@ -102,11 +143,11 @@ object DedupOps extends graft.QueryModule {
     // fp covers (lang, lb) as well as the shingle set: two docs with
     // identical text but different lang/length-bucket sit in different
     // blocks and must NOT merge (their intra-group pair would escape the
-    // declared blocking). 256-bit sha2 for the same reason as minhash's
-    // fp: same-fp pairs are emitted UNVERIFIED at jaccard 1.0.
+    // declared blocking). 256-bit sha2 for the same reason as
+    // [[fingerprinted]]'s: same-fp pairs are emitted UNVERIFIED.
     val base = graft.Tables.documents(spark, sfDir)
       .select($"doc_id", $"lang", floor($"n_chars" / 100).as("lb"),
-        shinglesUdf($"text").as("sh"))
+        shingleCol($"text").as("sh"))
       .filter(size($"sh") > 0)
       .withColumn("sz", size($"sh"))
       .withColumn("fp", sha2(concat_ws("\u0000",
@@ -154,18 +195,7 @@ object DedupOps extends graft.QueryModule {
         ($"a_sz" + $"b_sz" - $"inter").cast("double"))
       .filter($"jaccard" >= 0.2)
       .select($"a_fp", $"b_fp", $"jaccard")
-    val crossGroup = repPairs
-      .join(members.select($"fp".as("a_fp"), $"doc_id".as("x")), Seq("a_fp"))
-      .join(members.select($"fp".as("b_fp"), $"doc_id".as("y")), Seq("b_fp"))
-      .select(least($"x", $"y").as("a_id"), greatest($"x", $"y").as("b_id"),
-        $"jaccard")
-    val intraGroup = members.select($"fp", $"doc_id".as("x"))
-      .join(members.select($"fp", $"doc_id".as("y")), Seq("fp"))
-      .filter($"x" < $"y")
-      .select($"x".as("a_id"), $"y".as("b_id"), lit(1.0).as("jaccard"))
-    crossGroup.union(intraGroup)
-      .select($"a_id", $"b_id", round($"jaccard", 6).as("jaccard"))
-      .orderBy($"a_id", $"b_id")
+    memberPairs(repPairs, members)
   }
 
   /** q_dedup_threshold_curve — the dedup-rate-vs-threshold curve: for
@@ -209,7 +239,7 @@ object DedupOps extends graft.QueryModule {
     graft.Artifacts.ensure("graft_shingle_index/", sfDir, Docs, ArtifactVersion) { tmp =>
       graft.Tables.documents(spark, sfDir)
         .select($"doc_id", $"lang", floor($"n_chars" / 100).as("lb"),
-          shinglesUdf($"text").as("sh"))
+          shingleCol($"text").as("sh"))
         .filter(size($"sh") > 0)
         .write.mode("overwrite").parquet(tmp)
     }
@@ -251,17 +281,8 @@ object DedupOps extends graft.QueryModule {
     val cand = BucketPairs.underCap(
         postings, Seq("lang", "lb", "shingle"), $"doc_id", maxDf)
       .select($"a".as("a_id"), $"b".as("b_id")).distinct()
-    // exact verify: the PAIR side is the build side (shuffle-hash) —
-    // without the hint Spark broadcasts the whole shingled corpus (full
-    // arrays) twice, a ~2 s build at sf0.1 and an OOM at corpus scale
-    cand.hint("shuffle_hash")
-      .join(docs.select($"doc_id".as("a_id"), $"sh".as("a_sh")), Seq("a_id"))
-      .hint("shuffle_hash")
-      .join(docs.select($"doc_id".as("b_id"), $"sh".as("b_sh")), Seq("b_id"))
-      .withColumn("jaccard",
-        size(array_intersect($"a_sh", $"b_sh")).cast("double") /
-          size(array_union($"a_sh", $"b_sh")).cast("double"))
-      .filter($"jaccard" >= 0.2)
+    // exact verify on the full shingle arrays
+    verified(withSets(cand, docs, "doc_id", "id"), "a_sh", "b_sh", 0.2)
       .select($"a_id", $"b_id", round($"jaccard", 6).as("jaccard"))
       .orderBy($"a_id", $"b_id")
   }
@@ -342,25 +363,13 @@ object DedupOps extends graft.QueryModule {
     * exposed for the degenerate-corpus spec (DedupSpec). */
   private[llm] def minhashPairs(docsIn: DataFrame): DataFrame = {
     import docsIn.sparkSession.implicits._
-    // fp identity must need NO verification (same-fp docs merge into one
-    // rep and their pairs are emitted at jaccard 1.0 unverified), so it
-    // is 256-bit sha2 over the NUL-joined sorted shingles — collision
-    // probability stays negligible at any corpus size, unlike a 64-bit
-    // hash whose birthday bound bites at billions of docs. docs is
-    // materialized once: it feeds seven plan legs (reps, banding, both
-    // verify sides, members x3), which Catalyst would otherwise clone.
-    val docs = docsIn
-      .select($"doc_id", shinglesUdf($"text").as("sh"))
-      .filter(size($"sh") > 0)
-      .withColumn("fp", sha2(concat_ws("\u0000", array_sort($"sh")), 256))
+    // docs is materialized once: it feeds seven plan legs (reps, banding,
+    // both verify sides, members x3), which Catalyst would otherwise clone.
+    val docs = fingerprinted(docsIn.select($"doc_id", shingleCol($"text").as("sh")))
       .localCheckpoint()
     val members = docs.select($"fp", $"doc_id")
-    val reps = docs.groupBy($"fp")
-      .agg(min_by($"sh", $"doc_id").as("sh"))
-    val banded = reps
-      .select($"fp", posexplode(minhashBandsUdf(transform($"sh", s => xxhash64(s)))))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bandhash")
-      .select($"band", $"bandhash", $"fp")
+    val reps = repsOf(docs, "fp")
+    val banded = bandsOf(reps, $"fp").select($"band", $"bandhash", $"fp")
     // candidate pairs via the codegen'd BAND SELF-JOIN, not the
     // bucket-collect pair UDF (r18, settling the r17 regression): the
     // collect variant added two exchanges (the groupBy(band,bandhash)
@@ -377,29 +386,8 @@ object DedupOps extends graft.QueryModule {
         Seq("band", "bandhash"))
       .filter($"a_fp" < $"b_fp")
       .select($"a_fp", $"b_fp").distinct()
-    // pair side is the shuffle-hash build side: without the hint Spark
-    // broadcasts the full rep shingle arrays per verify leg
-    val verified = candidates.hint("shuffle_hash")
-      .join(reps.select($"fp".as("a_fp"), $"sh".as("a_sh")), Seq("a_fp"))
-      .hint("shuffle_hash")
-      .join(reps.select($"fp".as("b_fp"), $"sh".as("b_sh")), Seq("b_fp"))
-      .withColumn("jaccard",
-        size(array_intersect($"a_sh", $"b_sh")).cast("double") /
-          size(array_union($"a_sh", $"b_sh")).cast("double"))
-      .filter($"jaccard" >= 0.5)
-      .select($"a_fp", $"b_fp", $"jaccard")
-    val crossGroup = verified
-      .join(members.select($"fp".as("a_fp"), $"doc_id".as("x")), Seq("a_fp"))
-      .join(members.select($"fp".as("b_fp"), $"doc_id".as("y")), Seq("b_fp"))
-      .select(least($"x", $"y").as("a_id"), greatest($"x", $"y").as("b_id"),
-        $"jaccard")
-    val intraGroup = members.select($"fp", $"doc_id".as("x"))
-      .join(members.select($"fp", $"doc_id".as("y")), Seq("fp"))
-      .filter($"x" < $"y")
-      .select($"x".as("a_id"), $"y".as("b_id"), lit(1.0).as("jaccard"))
-    crossGroup.union(intraGroup)
-      .select($"a_id", $"b_id", round($"jaccard", 6).as("jaccard"))
-      .orderBy($"a_id", $"b_id")
+    memberPairs(verified(withSets(candidates, reps, "fp", "fp"), "a_sh", "b_sh")
+      .select($"a_fp", $"b_fp", $"jaccard"), members)
   }
 
   /** 64-bit SimHash near-dup (Charikar, STOC'02; Manku et al., WWW'07):
@@ -546,25 +534,18 @@ object DedupOps extends graft.QueryModule {
   private[llm] def buildMinhashIndex(spark: SparkSession, sfDir: String): String = {
     import spark.implicits._
     graft.Artifacts.ensure("graft_minhash_index/", sfDir, Docs, ArtifactVersion) { tmp =>
-      val corpus = graft.Tables.documents(spark, sfDir)
-        .filter($"doc_id" % 3 =!= 0) // EXISTING slice (complement of batch)
-        .select($"doc_id", shinglesUdf($"text").as("sh"))
-        .filter(size($"sh") > 0)
-        .withColumn("fp", sha2(concat_ws("\u0000", array_sort($"sh")), 256))
+      val corpus = fingerprinted(graft.Tables.documents(spark, sfDir)
+          .filter($"doc_id" % 3 =!= 0) // EXISTING slice (complement of batch)
+          .select($"doc_id", shingleCol($"text").as("sh")))
         .localCheckpoint() // feeds all three writes once
       corpus.select($"fp", $"doc_id")
         .repartition(8, $"fp").sortWithinPartitions($"fp")
         .write.mode("overwrite").parquet(s"$tmp/members")
-      val reps = corpus.groupBy($"fp")
-        .agg(min_by($"sh", $"doc_id").as("sh"))
+      val reps = repsOf(corpus, "fp")
         .localCheckpoint() // feeds reps AND bands writes
       reps.repartition(8, $"fp").sortWithinPartitions($"fp")
         .write.mode("overwrite").parquet(s"$tmp/reps")
-      reps
-        .select($"fp",
-          posexplode(minhashBandsUdf(transform($"sh", s => xxhash64(s)))))
-        .withColumnRenamed("pos", "band").withColumnRenamed("col", "bandhash")
-        .select($"band", $"bandhash", $"fp")
+      bandsOf(reps, $"fp").select($"band", $"bandhash", $"fp")
         .repartition(8, $"bandhash")
         .write.mode("overwrite").parquet(s"$tmp/bands")
     }
@@ -591,30 +572,21 @@ object DedupOps extends graft.QueryModule {
     val corpusReps = spark.read.parquet(s"$idx/reps")
     val corpusBands = spark.read.parquet(s"$idx/bands")
     val corpusMembers = spark.read.parquet(s"$idx/members")
-    val batch = graft.Tables.documents(spark, sfDir)
-      .filter($"doc_id" % 3 === 0) // NEW batch slice
-      .select($"doc_id", shinglesUdf($"text").as("sh"))
-      .filter(size($"sh") > 0)
-      .withColumn("fp", sha2(concat_ws("\u0000", array_sort($"sh")), 256))
+    val batch = fingerprinted(graft.Tables.documents(spark, sfDir)
+        .filter($"doc_id" % 3 === 0) // NEW batch slice
+        .select($"doc_id", shingleCol($"text").as("sh")))
       .localCheckpoint() // feeds reps, bands, and the member expansion
-    val batchReps = batch.groupBy($"fp").agg(min_by($"sh", $"doc_id").as("sh"))
-    val batchBands = batchReps
-      .select($"fp",
-        posexplode(minhashBandsUdf(transform($"sh", s => xxhash64(s)))))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bandhash")
+    val batchReps = repsOf(batch, "fp")
+    val batchBands = bandsOf(batchReps, $"fp")
     val candidates = batchBands.select($"band", $"bandhash", $"fp".as("n_fp"))
       .join(corpusBands.select($"band", $"bandhash", $"fp".as("c_fp")),
         Seq("band", "bandhash"))
       .select($"n_fp", $"c_fp").distinct()
-    val verified = candidates
-      .join(batchReps.select($"fp".as("n_fp"), $"sh".as("n_sh")), Seq("n_fp"))
-      .join(corpusReps.select($"fp".as("c_fp"), $"sh".as("c_sh")), Seq("c_fp"))
-      .withColumn("jaccard",
-        size(array_intersect($"n_sh", $"c_sh")).cast("double") /
-          size(array_union($"n_sh", $"c_sh")).cast("double"))
-      .filter($"jaccard" >= 0.5)
+    verified(candidates
+        .join(batchReps.select($"fp".as("n_fp"), $"sh".as("n_sh")), Seq("n_fp"))
+        .join(corpusReps.select($"fp".as("c_fp"), $"sh".as("c_sh")), Seq("c_fp")),
+        "n_sh", "c_sh")
       .select($"n_fp", $"c_fp", $"jaccard")
-    verified
       .join(batch.select($"fp".as("n_fp"), $"doc_id".as("batch_id")), Seq("n_fp"))
       .join(corpusMembers.select($"fp".as("c_fp"), $"doc_id".as("corpus_id")),
         Seq("c_fp"))
@@ -947,12 +919,8 @@ object DedupOps extends graft.QueryModule {
       .filter($"shared_rare" >= 3)
       .select($"a_id", $"b_id")
     // exact verify: recompute the TRUE inter from the full shingle
-    // arrays (so the output values are cutoff-independent), pair side
-    // as shuffle-hash build — never broadcast the shingled corpus
-    cand.hint("shuffle_hash")
-      .join(docs.select($"doc_id".as("a_id"), $"sh".as("a_sh")), Seq("a_id"))
-      .hint("shuffle_hash")
-      .join(docs.select($"doc_id".as("b_id"), $"sh".as("b_sh")), Seq("b_id"))
+    // arrays (so the output values are cutoff-independent)
+    withSets(cand, docs, "doc_id", "id")
       .withColumn("inter",
         size(array_intersect($"a_sh", $"b_sh")).cast("long"))
       .withColumn("mn",
@@ -1077,32 +1045,6 @@ object DedupOps extends graft.QueryModule {
       .orderBy($"vec_id")
   }
 
-  /** distinct word 5-grams — wider than the family's 3-gram recipe on
-    * purpose: prefix filtering wants a feature space where near-dup
-    * pairs are separable from topical overlap (3-grams over this
-    * corpus's ~50-word vocabulary collide broadly; 5-grams isolate the
-    * planted near-duplicates at jaccard ≥ 0.5 while the background
-    * stays far below). */
-  private val fiveGramsUdf = udf((text: String) => {
-    if (text == null) Array.empty[String]
-    else {
-      val toks = text.split(" ", -1)
-      if (toks.length < 5) Array.empty[String]
-      else {
-        val seen = new java.util.LinkedHashSet[String]
-        var i = 0
-        while (i <= toks.length - 5) {
-          seen.add(toks(i) + " " + toks(i + 1) + " " + toks(i + 2) + " " +
-            toks(i + 3) + " " + toks(i + 4))
-          i += 1
-        }
-        val out = new Array[String](seen.size)
-        seen.toArray(out)
-        out
-      }
-    }
-  })
-
   /** q_dedup_prefix_filter — prefix-filtered set-similarity self-join
     * (All-Pairs / PPJoin family: Bayardo, Ma, Srikant WWW'07;
     * Chaudhuri, Ganti, Kaushik ICDE'06): all document pairs with
@@ -1122,10 +1064,22 @@ object DedupOps extends graft.QueryModule {
     * over all, and the prefix shrinks as t rises. One df shuffle, one
     * per-doc rank window, one prefix self-join, one candidate-bounded
     * verify join — no corpus×corpus anything. */
-  def prefixFilterJaccard(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val sh = graft.Tables.documents(spark, sfDir)
-      .select($"doc_id", explode(fiveGramsUdf($"text")).as("s"))
+  def prefixFilterJaccard(spark: SparkSession, sfDir: String): DataFrame =
+    prefixFilterPairs(graft.Tables.documents(spark, sfDir))
+
+  /** Core of [[prefixFilterJaccard]] over any (doc_id, text, ...) frame —
+    * exposed so DedupSpec can plant shingles hotter than
+    * BucketPairs.MaxMembers (the self-join branch). */
+  private[llm] def prefixFilterPairs(docsIn: DataFrame): DataFrame = {
+    import docsIn.sparkSession.implicits._
+    // distinct word 5-grams — wider than the family's 3-gram shingles on
+    // purpose: prefix filtering wants a feature space where near-dup
+    // pairs are separable from topical overlap (3-grams over this
+    // corpus's ~50-word vocabulary collide broadly; 5-grams isolate the
+    // planted near-duplicates at jaccard >= 0.5 while the background
+    // stays far below)
+    val sh = docsIn
+      .select($"doc_id", explode(graft.text.Ngrams.distinct5($"text")).as("s"))
       .localCheckpoint() // feeds df, sizes, prefix AND both verify legs
     val df = sh.groupBy($"s").agg(count(lit(1)).as("df"))
     val sz = sh.groupBy($"doc_id").agg(count(lit(1)).as("n"))
@@ -1359,12 +1313,7 @@ object DedupOps extends graft.QueryModule {
       .agg(count(lit(1)).as("nh"))
       .filter($"nh" >= 2)
       .select($"a_id", $"b_id")
-    // pair side is the shuffle-hash build side: without the hint Spark
-    // broadcasts the whole shingled corpus (full arrays) per verify leg
-    val edges = cand.hint("shuffle_hash")
-      .join(docs.select($"doc_id".as("a_id"), $"sh".as("a_sh")), Seq("a_id"))
-      .hint("shuffle_hash")
-      .join(docs.select($"doc_id".as("b_id"), $"sh".as("b_sh")), Seq("b_id"))
+    val edges = withSets(cand, docs, "doc_id", "id")
       .filter(size(array_intersect($"a_sh", $"b_sh")) >= 2)
       .select($"a_id", $"b_id")
       // three triangle legs share the edge list (executor-loss caveat:

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.AggOps.micro
 
@@ -522,14 +522,11 @@ object QualityOps extends graft.QueryModule {
       .select($"n_docs", $"n_lang", $"n_source", $"chi2_adj", $"cramers_v")
   }
 
-  /** q_quality_welch_ttest — Welch's unequal-variance t-test between
-    * two sources' doc-length distributions, the parametric companion
-    * of [[ksTest]]: t = (m₀−m₁)/√(v₀/n₀ + v₁/n₁) with the
-    * Welch–Satterthwaite degrees of freedom. Moments are exact int64
-    * sums off ONE partial-agg'd pass (n, Σx, Σx² per source — n_chars
-    * ≤ doc cap keeps Σx² far inside int64); the double formulas run
-    * in one mirrored operation order, outputs floored at micro. */
-  def welchTtest(spark: SparkSession, sfDir: String): DataFrame = {
+  /** The src0/src1 doc-length moments as ONE row: n, Σx, Σx² per
+    * source (`n0`, `sx0`, `sxx0`, `n1`, `sx1`, `sxx1`) — exact int64 off
+    * one partial-agg'd pass (n_chars ≤ doc cap keeps Σx² far inside
+    * int64), two 1-row frames crossed. */
+  private def twoSourceMoments(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val g = graft.Tables.documents(spark, sfDir)
       .filter($"source".isin("src0", "src1"))
@@ -540,18 +537,43 @@ object QualityOps extends graft.QueryModule {
       .select($"n".as("n0"), $"sx".as("sx0"), $"sxx".as("sxx0"))
     val b = g.filter($"source" === "src1")
       .select($"n".as("n1"), $"sx".as("sx1"), $"sxx".as("sxx1"))
-    val m0 = $"sx0".cast("double") / $"n0"
-    val m1 = $"sx1".cast("double") / $"n1"
-    val v0 = ($"sxx0".cast("double") -
-      $"sx0".cast("double") * $"sx0".cast("double") / $"n0") / ($"n0" - 1)
-    val v1 = ($"sxx1".cast("double") -
-      $"sx1".cast("double") * $"sx1".cast("double") / $"n1") / ($"n1" - 1)
+    a.crossJoin(b) // two 1-row frames
+  }
+
+  /** Mean of source `i`'s doc length over [[twoSourceMoments]]. */
+  private def mean(i: Int): Column = col(s"sx$i").cast("double") / col(s"n$i")
+
+  /** Sample variance of source `i`'s doc length over [[twoSourceMoments]]. */
+  private def sampleVar(i: Int): Column = (col(s"sxx$i").cast("double") -
+    col(s"sx$i").cast("double") * col(s"sx$i").cast("double") / col(s"n$i")) /
+    (col(s"n$i") - 1)
+
+  /** The src0/src1 doc-length histogram over the bounded length domain:
+    * one row per value `v` with each source's count (`c0`, `c1`). */
+  private def sourceHistogram(spark: SparkSession, sfDir: String): DataFrame = {
+    import spark.implicits._
+    graft.Tables.documents(spark, sfDir)
+      .filter($"source".isin("src0", "src1"))
+      .groupBy($"n_chars".as("v"))
+      .agg(sum(when($"source" === "src0", 1L).otherwise(0L)).as("c0"),
+        sum(when($"source" === "src1", 1L).otherwise(0L)).as("c1"))
+  }
+
+  /** q_quality_welch_ttest — Welch's unequal-variance t-test between
+    * two sources' doc-length distributions, the parametric companion
+    * of [[ksTest]]: t = (m₀−m₁)/√(v₀/n₀ + v₁/n₁) with the
+    * Welch–Satterthwaite degrees of freedom, off
+    * [[twoSourceMoments]]; the double formulas run in one mirrored
+    * operation order, outputs floored at micro. */
+  def welchTtest(spark: SparkSession, sfDir: String): DataFrame = {
+    import spark.implicits._
+    val (m0, m1, v0, v1) = (mean(0), mean(1), sampleVar(0), sampleVar(1))
     val se2 = v0 / $"n0" + v1 / $"n1"
     val t = (m0 - m1) / sqrt(se2)
     val df = se2 * se2 /
       ((v0 / $"n0") * (v0 / $"n0") / ($"n0" - 1) +
         (v1 / $"n1") * (v1 / $"n1") / ($"n1" - 1))
-    a.crossJoin(b) // two 1-row frames
+    twoSourceMoments(spark, sfDir)
       .select($"n0", $"n1", micro(m0).as("mean0"), micro(m1).as("mean1"),
         micro(t).as("t_stat"), micro(df).as("df"))
   }
@@ -571,30 +593,16 @@ object QualityOps extends graft.QueryModule {
     * frames. */
   def tostEquivalence(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val g = graft.Tables.documents(spark, sfDir)
-      .filter($"source".isin("src0", "src1"))
-      .groupBy($"source")
-      .agg(count(lit(1)).as("n"), sum($"n_chars").as("sx"),
-        sum($"n_chars" * $"n_chars").as("sxx"))
-    val a = g.filter($"source" === "src0")
-      .select($"n".as("n0"), $"sx".as("sx0"), $"sxx".as("sxx0"))
-    val b = g.filter($"source" === "src1")
-      .select($"n".as("n1"), $"sx".as("sx1"), $"sxx".as("sxx1"))
-    val m0 = $"sx0".cast("double") / $"n0"
-    val m1 = $"sx1".cast("double") / $"n1"
-    val v0 = ($"sxx0".cast("double") -
-      $"sx0".cast("double") * $"sx0".cast("double") / $"n0") / ($"n0" - 1)
-    val v1 = ($"sxx1".cast("double") -
-      $"sx1".cast("double") * $"sx1".cast("double") / $"n1") / ($"n1" - 1)
+    val (v0, v1) = (sampleVar(0), sampleVar(1))
     val se = sqrt(v0 / $"n0" + v1 / $"n1")
-    val diff = m0 - m1
+    val diff = mean(0) - mean(1)
     val tLow = (diff + lit(15.0)) / se
     val tHigh = (diff - lit(15.0)) / se
     // degenerate guards: n ≤ 1 zeroes a variance denominator, two
     // constant samples zero se itself — either way the t's are
     // undefined → NULL, mirrored CASEs in the twin
     val ok = $"n0" > 1L && $"n1" > 1L && se > 0.0
-    a.crossJoin(b) // two 1-row frames
+    twoSourceMoments(spark, sfDir)
       .select($"n0", $"n1", micro(diff).as("mean_diff"),
         when(ok, micro(se)).as("se"),
         when(ok, micro(tLow)).as("t_lower"),
@@ -616,21 +624,7 @@ object QualityOps extends graft.QueryModule {
     * frames. */
   def hedgesG(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val g = graft.Tables.documents(spark, sfDir)
-      .filter($"source".isin("src0", "src1"))
-      .groupBy($"source")
-      .agg(count(lit(1)).as("n"), sum($"n_chars").as("sx"),
-        sum($"n_chars" * $"n_chars").as("sxx"))
-    val a = g.filter($"source" === "src0")
-      .select($"n".as("n0"), $"sx".as("sx0"), $"sxx".as("sxx0"))
-    val b = g.filter($"source" === "src1")
-      .select($"n".as("n1"), $"sx".as("sx1"), $"sxx".as("sxx1"))
-    val diff = $"sx0".cast("double") / $"n0" -
-      $"sx1".cast("double") / $"n1"
-    val v0 = ($"sxx0".cast("double") -
-      $"sx0".cast("double") * $"sx0".cast("double") / $"n0") / ($"n0" - 1)
-    val v1 = ($"sxx1".cast("double") -
-      $"sx1".cast("double") * $"sx1".cast("double") / $"n1") / ($"n1" - 1)
+    val (diff, v0, v1) = (mean(0) - mean(1), sampleVar(0), sampleVar(1))
     val sp = sqrt((($"n0" - 1) * v0 + ($"n1" - 1) * v1) /
       ($"n0" + $"n1" - 2).cast("double"))
     val d = diff / sp
@@ -639,7 +633,7 @@ object QualityOps extends graft.QueryModule {
     // degenerate guards: the welch/tost class — n ≤ 1 or two constant
     // samples make the pooled SD 0 and d undefined → NULL
     val ok = $"n0" > 1L && $"n1" > 1L && sp > 0.0
-    a.crossJoin(b) // two 1-row frames
+    twoSourceMoments(spark, sfDir)
       .select($"n0", $"n1", micro(diff).as("mean_diff"),
         when(ok, micro(sp)).as("pooled_sd"),
         when(ok, micro(d)).as("cohens_d"),
@@ -741,20 +735,10 @@ object QualityOps extends graft.QueryModule {
     * kernel sum never materializes, which is the whole point. */
   def mmdPoly(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val g = graft.Tables.documents(spark, sfDir)
-      .filter($"source".isin("src0", "src1"))
-      .groupBy($"source")
-      .agg(count(lit(1)).as("n"), sum($"n_chars").as("sx"),
-        sum($"n_chars" * $"n_chars").as("sxx"))
-    val a = g.filter($"source" === "src0")
-      .select($"n".as("n0"), $"sx".as("sx0"), $"sxx".as("sxx0"))
-    val b = g.filter($"source" === "src1")
-      .select($"n".as("n1"), $"sx".as("sx1"), $"sxx".as("sxx1"))
-    val muGap = $"sx0".cast("double") / $"n0" -
-      $"sx1".cast("double") / $"n1"
+    val muGap = mean(0) - mean(1)
     val m2Gap = $"sxx0".cast("double") / $"n0" -
       $"sxx1".cast("double") / $"n1"
-    a.crossJoin(b) // two 1-row frames
+    twoSourceMoments(spark, sfDir)
       .select($"n0", $"n1", micro(muGap).as("mean_gap"),
         micro(m2Gap).as("m2_gap"),
         micro(lit(2.0) * muGap * muGap / 1e6 +
@@ -830,11 +814,7 @@ object QualityOps extends graft.QueryModule {
   def cliffDelta(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val w = org.apache.spark.sql.expressions.Window.orderBy($"v")
-    val h = graft.Tables.documents(spark, sfDir)
-      .filter($"source".isin("src0", "src1"))
-      .groupBy($"n_chars".as("v"))
-      .agg(sum(when($"source" === "src0", 1L).otherwise(0L)).as("c0"),
-        sum(when($"source" === "src1", 1L).otherwise(0L)).as("c1"))
+    val h = sourceHistogram(spark, sfDir)
       .localCheckpoint() // bounded value domain; feeds cum + totals
     val tot = h.agg(sum($"c0").as("n0"), sum($"c1").as("n1"))
     val cum = h.withColumn("cin", sum($"c1").over(
@@ -881,11 +861,7 @@ object QualityOps extends graft.QueryModule {
   def mannWhitney(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val w = org.apache.spark.sql.expressions.Window.orderBy($"v")
-    val h = graft.Tables.documents(spark, sfDir)
-      .filter($"source".isin("src0", "src1"))
-      .groupBy($"n_chars".as("v"))
-      .agg(sum(when($"source" === "src0", 1L).otherwise(0L)).as("c0"),
-        sum(when($"source" === "src1", 1L).otherwise(0L)).as("c1"))
+    val h = sourceHistogram(spark, sfDir)
     val cum = h.withColumn("c1b",
       sum($"c1").over(w) - $"c1") // bounded length domain
     cum.agg(sum($"c0").as("n0"), sum($"c1").as("n1"),
@@ -918,11 +894,7 @@ object QualityOps extends graft.QueryModule {
     * micro-floored. Same bounded-histogram shape as mannWhitney. */
   def jsDivergence(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val h = graft.Tables.documents(spark, sfDir)
-      .filter($"source".isin("src0", "src1"))
-      .groupBy($"n_chars".as("v"))
-      .agg(sum(when($"source" === "src0", 1L).otherwise(0L)).as("c0"),
-        sum(when($"source" === "src1", 1L).otherwise(0L)).as("c1"))
+    val h = sourceHistogram(spark, sfDir)
       .localCheckpoint() // bounded length-domain histogram, feeds 2 legs
     val tot = h.agg(sum($"c0").as("n0"), sum($"c1").as("n1")) // 1 row
     h.crossJoin(broadcast(tot))

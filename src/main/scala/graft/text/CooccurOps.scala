@@ -61,24 +61,24 @@ object CooccurOps extends graft.QueryModule {
       .select($"doc_id", ($"p0" + 1).as("pos"), $"tok")
   }
 
-  /** all (tok_i, tok_{i+o}) window-pair instances of one doc's token
-    * sequence, o = 1..[[Window]], emitted MAP-side — the offset-shifted
+  /** all (tok_i, tok_{i+o}) pair instances of one doc's token sequence,
+    * o = 1..width, in (i, o) order, emitted MAP-side — the offset-shifted
     * union + (doc_id, pos) shuffle join this replaces paid two corpus
     * exchanges to pair tokens that sit adjacent in the SAME array.
     * Null-guarded: split(null) hands the UDF a null Seq, and the old
     * posexplode shape silently emitted no rows for null docs — this
     * must match. */
-  private val windowPairsUdf =
+  private def pairsUdf(width: Int) =
     udf((toks: Seq[String]) => {
       if (toks == null) Array.empty[(String, String)]
       else {
         val n = toks.length
         val out = Array.newBuilder[(String, String)]
-        out.sizeHint(n * Window)
+        out.sizeHint(n * width)
         var i = 0
         while (i < n) {
           var o = 1
-          while (o <= Window && i + o < n) {
+          while (o <= width && i + o < n) {
             out += ((toks(i), toks(i + o)))
             o += 1
           }
@@ -88,20 +88,10 @@ object CooccurOps extends graft.QueryModule {
       }
     })
 
-  /** ordered adjacent (tok_i, tok_{i+1}) instances of one doc — the
-    * bigram twin of [[windowPairsUdf]], same null guard. */
-  private val bigramsUdf =
-    udf((toks: Seq[String]) => {
-      if (toks == null) Array.empty[(String, String)]
-      else {
-        val n = toks.length
-        val out = Array.newBuilder[(String, String)]
-        if (n > 1) out.sizeHint(n - 1)
-        var i = 0
-        while (i + 1 < n) { out += ((toks(i), toks(i + 1))); i += 1 }
-        out.result()
-      }
-    })
+  /** skip-gram window pairs, o = 1..[[Window]] */
+  private val windowPairsUdf = pairsUdf(Window)
+  /** ordered adjacent (tok_i, tok_{i+1}) bigram instances */
+  private val bigramsUdf = pairsUdf(1)
 
   private def pairInstances(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._

@@ -9,29 +9,17 @@ import graft.ops.AggOps.micro
   * sparse (singleton trigrams exist at every sf; the 31-token unigram
   * and 961-bigram domains are saturated), so smoothing and richness
   * estimators are exercised non-vacuously. The trigram multiset comes
-  * from one tight UDF pass per document (the TextOps
-  * bigramsUdf/shinglesUdf rationale: a transform/[] column tree
-  * re-inlines split(text) per element); every downstream frame is
-  * bounded by the trigram TYPE count, and the corpus is scanned once
-  * per query. All three operators are exact-integer until the one
+  * from one tight UDF pass per document ([[Ngrams.trigrams]]); every
+  * downstream frame is bounded by the trigram TYPE count, and the
+  * corpus is scanned once per query. All three operators are exact-integer until the one
   * micro-floored division per readout column.
   */
 object LmOps extends graft.QueryModule {
 
-  private val trigramsUdf = udf((text: String) => {
-    if (text == null) Array.empty[String]
-    else {
-      val t = text.split(" ", -1)
-      if (t.length < 3) Array.empty[String]
-      else Array.tabulate(t.length - 2)(i =>
-        t(i) + " " + t(i + 1) + " " + t(i + 2))
-    }
-  })
-
   private def trigramCounts(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     graft.Tables.documents(spark, sfDir)
-      .select(explode(trigramsUdf($"text")).as("g"))
+      .select(explode(Ngrams.trigrams($"text")).as("g"))
       .groupBy($"g").agg(count(lit(1)).as("n"))
   }
 
@@ -77,7 +65,7 @@ object LmOps extends graft.QueryModule {
   def chao1(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     graft.Tables.documents(spark, sfDir)
-      .select($"lang", explode(trigramsUdf($"text")).as("g"))
+      .select($"lang", explode(Ngrams.trigrams($"text")).as("g"))
       .groupBy($"lang", $"g").agg(count(lit(1)).as("n"))
       .groupBy($"lang")
       .agg(sum($"n").as("n_tokens"), count(lit(1)).as("n_types"),

@@ -225,12 +225,9 @@ object TextOps extends graft.QueryModule {
     val toks = split($"text", " ")
     val nTok = size(toks).cast("double")
     // duplicated-shingle fraction: 1 - distinct/total 3-grams (0 when
-    // < 3 tokens). One tight UDF pass, duplicates kept — the
-    // transform/[] column-tree alternative re-inlines split(text) into
-    // every lambda element (the O(n^2) pushdown trap this file already
-    // documents at bigramsUdf/shinglesUdf).
+    // < 3 tokens), over the 3-gram multiset (Ngrams).
     val base = docs
-      .withColumn("sh3", trigramsUdf($"text"))
+      .withColumn("sh3", Ngrams.trigrams($"text"))
       .select($"doc_id", $"n_chars", $"text",
       size(toks).as("n_tokens"),
       when(size(toks) < 3, lit(0.0))
@@ -584,30 +581,6 @@ object TextOps extends graft.QueryModule {
       .orderBy($"doc_id", $"sent_idx")
   }
 
-  /** consecutive-token 3-grams, duplicates KEPT (repetition metrics
-    * need the multiset; DedupOps.shinglesUdf dedupes and can't be
-    * shared) — same one-tight-pass rationale as bigramsUdf. */
-  private val trigramsUdf = udf((text: String) => {
-    if (text == null) Array.empty[String]
-    else {
-      val t = text.split(" ", -1)
-      if (t.length < 3) Array.empty[String]
-      else Array.tabulate(t.length - 2)(i => t(i) + " " + t(i + 1) + " " + t(i + 2))
-    }
-  })
-
-  /** one tight pass; duplicates kept (counts need them). Same rationale
-    * as shinglesUdf: a transform/element_at column tree re-inlines the
-    * aliased split into every element under pushdown. */
-  private val bigramsUdf = udf((text: String) => {
-    if (text == null) Array.empty[String]
-    else {
-      val t = text.split(" ", -1)
-      if (t.length < 2) Array.empty[String]
-      else Array.tabulate(t.length - 1)(i => t(i) + " " + t(i + 1))
-    }
-  })
-
   /** q_text_bigram_pmi — collocation mining: pointwise mutual
     * information ln(p(ab) / (p(a)p(b))) over corpus bigrams (Church &
     * Hanks 1990), the classic signal for multi-word expressions worth
@@ -621,7 +594,7 @@ object TextOps extends graft.QueryModule {
     val docs = graft.Tables.documents(spark, sfDir)
     val uni = docs.select(explode(split($"text", " ")).as("tok"))
       .groupBy($"tok").agg(count(lit(1)).as("c"))
-    val bc = docs.select(explode(bigramsUdf($"text")).as("bg"))
+    val bc = docs.select(explode(Ngrams.bigrams($"text")).as("bg"))
       .groupBy($"bg").agg(count(lit(1)).as("c_ab"))
     val nUni = broadcast(uni.agg(sum($"c").cast("double").as("n_uni")))
     val nBig = broadcast(bc.agg(sum($"c_ab").cast("double").as("n_big")))
@@ -917,7 +890,7 @@ object TextOps extends graft.QueryModule {
   def bigramLlr(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val bc = graft.Tables.documents(spark, sfDir)
-      .select(explode(bigramsUdf($"text")).as("bg"))
+      .select(explode(Ngrams.bigrams($"text")).as("bg"))
       .groupBy($"bg").agg(count(lit(1)).as("k11"))
       .withColumn("a", split($"bg", " ").getItem(0))
       .withColumn("b", split($"bg", " ").getItem(1))

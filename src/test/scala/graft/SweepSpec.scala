@@ -72,10 +72,22 @@ class SweepSpec extends SparkTestBase {
       p.replaceAll("#\\d+L?", "").replaceAll("plan_id=\\d+", "plan_id")
     assert(idsOnly(plans.head) != idsOnly(plans(1)))
     assert(tools.Explain.normalise(plans.head) == tools.Explain.normalise(plans(1)))
+    // the plans a build executes (here its localCheckpoint) print the same
+    val executed = new tools.Explain.Executed(spark)
+    executed.take() // events of the builds above still in flight
+    val builds = try Sweep.run(spark, sf0001, Seq.fill(2)("q_dedup_minhash_lsh"),
+        "TEST")((_, _) => executed.take()).map(_.value.fold(e => fail(e), identity))
+      finally executed.close()
+    assert(builds.head.nonEmpty && builds.head == builds(1), builds)
     // a typed operator prints its JVM lambda, whose class number and
     // identity hash differ between two JVMs
     assert(tools.Explain.normalise("Arguments: graft.llm.MultimodalOps$$$Lambda" +
       "$3275/0x00007f8114ed7bf8@6bbd4048, obj: scala.Tuple5") ==
       "Arguments: graft.llm.MultimodalOps$$$Lambda, obj: scala.Tuple5")
+    // a stream watermark's node id and a stream writer's identity hash
+    // differ between two runs of one build
+    assert(tools.Explain.normalise("Arguments: 5f47fc4f-2289-432f-be60-" +
+      "8f2a0ef5e07a, ts: timestamp, writer: a.b.MemoryStreamingWrite@5a199a7e]") ==
+      "Arguments: <uuid>, ts: timestamp, writer: a.b.MemoryStreamingWrite]")
   }
 }

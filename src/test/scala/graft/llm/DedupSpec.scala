@@ -231,6 +231,38 @@ class DedupSpec extends SparkTestBase {
     assert(pairs.filter($"jaccard" =!= 1.0).isEmpty)
   }
 
+  test("prefix filter: shingles hotter than MaxMembers take the self-join, pairs exact") {
+    // 140 identical docs put every 5-gram of `hot` at df > MaxMembers, so
+    // their prefix buckets take the streamed self-join; a one-token
+    // variant of `hot` pairs with all 140 across that branch, and a
+    // planted near-dup pair plus unrelated docs run the small-bucket
+    // branch in the same call
+    val hot = (0 until 20).map(i => s"h$i").mkString(" ")
+    val near = (0 until 20).map(i => s"a$i").mkString(" ")
+    val texts = Seq.fill(140)(hot) ++ Seq(hot.replace("h19", "zz"),
+      near, near.replace("a19", "b"), (0 until 20).map(i => s"u$i").mkString(" "),
+      "v0 v1 v2 v3 v4 v5", "x y")
+    val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+    def fiveGrams(t: String): Set[String] = {
+      val toks = t.split(" ", -1)
+      if (toks.length < 5) Set.empty else toks.sliding(5).map(_.mkString(" ")).toSet
+    }
+    val sets = docs.map { case (id, t) => id -> fiveGrams(t) }
+    val df = sets.flatMap(_._2).groupBy(identity).map(_._2.size)
+    assert(df.max > BucketPairs.MaxMembers, s"no shingle hotter than the cap: ${df.max}")
+    assert(df.exists(d => d > 1 && d <= BucketPairs.MaxMembers))
+    val expected = (for {
+      (a, sa) <- sets; (b, sb) <- sets if a < b && sa.nonEmpty && sb.nonEmpty
+      inter = (sa & sb).size if 3 * inter >= sa.size + sb.size
+    } yield (a, b, inter.toLong, sa.size.toLong, sb.size.toLong)).toSet
+    val got = DedupOps.prefixFilterPairs(docs.toDF("doc_id", "text"))
+      .select($"a_id", $"b_id", $"inter", $"n_a", $"n_b")
+      .as[(Long, Long, Long, Long, Long)].collect().toSet
+    assert(expected.size == 140 * 139 / 2 + 140 + 1)
+    assert((expected -- got).isEmpty, s"missed: ${(expected -- got).take(5)}")
+    assert((got -- expected).isEmpty, s"extra: ${(got -- expected).take(5)}")
+  }
+
   test("exact ngram path survives a degenerate corpus of 5k identical docs") {
     // same worst case as the minhash test, on the EXACT jaccard path: all
     // 5k docs share every shingle, so without the fp pre-collapse the

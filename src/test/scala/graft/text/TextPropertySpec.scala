@@ -56,4 +56,29 @@ class TextPropertySpec extends AnyFunSuite {
       assert(!out.split(" ").contains(sw), s"stopword '$sw' survived: $out")
     }
   }
+
+  test("word n-grams match a naive sliding window on edge inputs") {
+    def naive(text: String, n: Int, distinct: Boolean): Seq[String] = {
+      val toks = if (text == null) Array.empty[String] else text.split(" ", -1)
+      val grams =
+        if (toks.length < n) Nil else toks.sliding(n).map(_.mkString(" ")).toSeq
+      if (distinct) grams.distinct else grams
+    }
+    val inputs = Seq(null, "", "one", "a b", "a b c", "a b c d e",
+      " lead", "trail ", "a  b", "  a b  ", "a b a b a b", "x y x y x y x y x")
+    for (text <- inputs; n <- Seq(2, 3, 5); distinct <- Seq(true, false))
+      assert(Ngrams.of(text, n, distinct).toSeq == naive(text, n, distinct),
+        s"n=$n distinct=$distinct text=[$text]")
+    // pinned cases of the contract: empty tokens are kept, distinct keeps
+    // the first occurrence, multiset keeps all
+    assert(Ngrams.of("a  b", 2, distinct = false).toSeq == Seq("a ", " b"))
+    assert(Ngrams.of(" a b", 3, distinct = true).toSeq == Seq(" a b"))
+    assert(Ngrams.of("a b a b a", 2, distinct = true).toSeq == Seq("a b", "b a"))
+    assert(Ngrams.of("a b a b a", 2, distinct = false).toSeq ==
+      Seq("a b", "b a", "a b", "b a"))
+    assert(Ngrams.of("a b c d", 5, distinct = true).isEmpty)
+    assert(Ngrams.of("a b c d e", 5, distinct = true).toSeq == Seq("a b c d e"))
+    assert(Ngrams.of(null, 2, distinct = false).isEmpty)
+    assert(Ngrams.of("", 2, distinct = false).isEmpty)
+  }
 }
